@@ -17,7 +17,7 @@ object SparkEntry {
     * semantics (rows > 0) on sf0.001.
     */
   def entry(spark: SparkSession): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("graft-entry").toString
+    val base = FsUtil.scratchDir("graft-entry")
     val cfg = graft.feedgen.FeedGen.Config(seed = 42L, n = 5000L,
       nDomains = 50, pathsPerDomain = 8, evolveAt = 3000L, segments = 2)
     graft.feedgen.FeedGen.writeSegments(spark, cfg, s"$base/feed")

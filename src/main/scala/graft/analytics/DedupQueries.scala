@@ -16,6 +16,12 @@ object DedupQueries {
 
   private val ShingleLen = 5 // 5-word shingles
 
+  /** True when `text` yields at least one shingle — i.e. a MinHash
+    * signature; false for null or shorter-than-[[ShingleLen]] text.
+    */
+  private[graft] def hasShingles(text: Column): Column =
+    text.isNotNull && size(split(text, " ")) >= ShingleLen
+
   /** Word-5-gram shingle OCCURRENCES per doc: (doc_id, shingle), not
     * deduplicated — each consumer dedups (or not) in its cheapest form:
     * Jaccard dedups AFTER hashing (8-byte exchange rows instead of

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.CdcSchema
-import graft.table.{EpochStat, FileEntry, LakeTable, Snapshot}
+import graft.table.{EpochStat, LakeTable, Snapshot}
 
 /** Idempotent MERGE INTO of one change-event batch into the lake table.
   *
@@ -17,23 +17,29 @@ import graft.table.{EpochStat, FileEntry, LakeTable, Snapshot}
   * redelivered epoch (foreachBatch retry after crash) is detected and
   * skipped BEFORE any work, so the sink is idempotent end-to-end.
   *
-  * Scale/latency shape — the epoch costs exactly four Spark jobs:
-  *   1. winners: one shuffle-by-url hash aggregate over the batch
-  *      (`max_by` partial aggregation pre-combines hot keys map-side —
-  *      the skew bound) carrying the per-url event count so the raw
-  *      batch is scanned exactly once;
-  *   2. one small collect of per-bucket batch stats (touched buckets,
-  *      counts, lineage) off the cached winners;
-  *   3. the merged write (union of pruned target buckets + winners,
-  *      second url aggregate, bucket-partitioned files);
-  *   4. one per-bucket stats aggregate off the cached merge result.
+  * Plan shape — three steps, one payload exchange (two on the salted
+  * fallback):
+  *   1. phase A, a NARROW per-url key aggregate over the batch (the
+  *      primitive-buffer lww_seq HashAggregate; map-side partial
+  *      aggregation pre-combines hot keys — the skew bound), cached, plus
+  *      one small collect of per-bucket batch stats (touched buckets,
+  *      counts, lineage, hottest url) that picks CoW vs MoR and the salt;
+  *   2. phase B, a key join that keeps only the batch rows carrying a
+  *      winner (url, seq) — broadcast and map-side, or salted above
+  *      [[BroadcastKeyLimit]];
+  *   3. [[LakeTable.writeBuckets]] over those candidate rows (MoR) or
+  *      over the touched target files ∪ the candidates (CoW): its one
+  *      repartition-by-bucket exchange carries the payload, and its
+  *      row_number window is the LWW collapse.
+  * An 8 k-event copy-on-write tail epoch (perfbench `ingest_bulk
+  * --trace 1`, local[4]) runs 9 Spark jobs and 17 stages: AQE splits
+  * step 1 into 4 jobs, the key broadcast is 1, the write 3 (payload
+  * shuffle, cache build, file write) and the stats aggregate 1 — it reads
+  * the bucket-partitioned cache with no exchange.
   * Old live/tombstone accounting comes from manifest file stats — no
   * rescan of the target. Only the url-hash buckets the batch touches are
-  * read and rewritten: a batch touching 3 of P buckets costs
-  * O(3/P · tableSize) I/O regardless of table size. The target∪source
-  * resolution reuses the associative LWW collapse (a union-collapse IS a
-  * full-outer merge with LWW resolution, without the join: both sides
-  * hash once by url, no second shuffle).
+  * read and rewritten, each touched file scanned once: a batch touching
+  * 3 of P buckets costs O(3/P · tableSize) I/O regardless of table size.
   */
 object MergeInto {
 
@@ -41,7 +47,7 @@ object MergeInto {
     * merge-on-read, north_star).
     *
     *  - [[CopyOnWrite]]: read the touched buckets, union-collapse with
-    *    the batch winners, rewrite those buckets. Read-optimal; write
+    *    the batch's winner rows, rewrite those buckets. Read-optimal; write
     *    cost O(touchedBucketBytes) per epoch.
     *  - [[MergeOnRead]]: append the batch winners as per-bucket DELTA
     *    files (equality-delete/upsert overlay) without reading the
@@ -88,8 +94,6 @@ object MergeInto {
     batch.select(cols.toIndexedSeq: _*)
   }
 
-  private def ordKey = struct(col("warc_ts"), col("seq"))
-
   /** Above this many distinct urls per epoch the winner-key set is no
     * longer broadcastable and the merge falls back to the salted
     * shuffled-hash join. ~4M keys × ~50B ≈ 200MB broadcast ceiling.
@@ -134,7 +138,7 @@ object MergeInto {
     // Spark 4.1 AQE coalesces post-shuffle partitions toward the 64MB
     // advisory size with parallelism-first DISABLED by default — on this
     // merge (CPU-heavy per byte, modest shuffle volumes) that collapses
-    // the winner/union aggregations to a handful of tasks and serializes
+    // the key aggregation to a handful of tasks and serializes
     // the epoch (measured 4× wall-clock at 16 cores). Pin
     // parallelism-first for the duration of the merge, restore after.
     val pfKey = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
@@ -144,21 +148,15 @@ object MergeInto {
       case Some(v) => spark.conf.set(pfKey, v)
       case None    => spark.conf.unset(pfKey)
     }
-    val debugTiming = sys.env.contains("GRAFT_DEBUG_TIMING")
-    var tLast = t0
-    def phase(name: String): Unit = if (debugTiming) {
-      val now = System.nanoTime()
-      System.err.println(f"[merge-timing] epoch=$epochId $name ${(now - tLast) / 1e9}%.2f s")
-      tLast = now
-    }
 
     // 1. two-phase LWW winner selection. Phase A shuffles only the
     //    NARROW key columns (url, warc_ts, seq, op) — never the html/text
     //    payload: at web scale the payload is ~95% of the row, so the
     //    winner-key aggregate costs ~1/20 of a payload shuffle. Phase B
     //    broadcasts the winning (url, seq) keys back over the batch and
-    //    keeps winner rows map-side — zero payload shuffle. (Fallback
-    //    below if the key set is too big to broadcast.)
+    //    keeps winner rows map-side, so the only payload exchange is the
+    //    bucket write's. (Fallback below if the key set is too big to
+    //    broadcast.)
     //
     //    The winner argmax is graft.plans.LwwSeq — a declarative
     //    aggregate with a primitive (warc_ts, seq) buffer, so phase A is
@@ -197,7 +195,6 @@ object MergeInto {
         count(lit(1)).as("keys"),
         max(col("_max_seq")).as("maxSeq"),
         max(col("_n_events")).as("maxUrl")).collect()
-      phase("keyAgg+bstats")
       if (bstats.isEmpty) {
         val s2 = snap.withEpoch(epochId, EpochStat(epochId, 0, 0, 0, 0, 0.0))
           .copy(snapshotId = snap.snapshotId + 1, parentId = snap.snapshotId)
@@ -227,16 +224,13 @@ object MergeInto {
           nKeys.toDouble < MorWinnerFraction * targetRows.toDouble
       }
 
-      // Phase B: materialize winner rows. Broadcast path when the key
-      // set fits (≤ BroadcastKeyLimit urls): winner keys hash-joined
-      // map-side against the batch, then a final per-url collapse over
-      // ONLY the surviving rows (exact redelivered duplicates of the
-      // winner may pass the key join twice — the max_by here runs over
-      // winner-sized data, where its SortAggregate plan is harmless).
-      // Shuffle = winner rows, not the batch. Fallback: classic
-      // full-payload max_by shuffle.
-      val payload = struct(rows.columns.map(col).toIndexedSeq: _*)
-      val winners =
+      // Phase B: candidate rows — the batch rows carrying a winner's
+      // (url, seq). Broadcast path when the key set fits
+      // (≤ BroadcastKeyLimit urls): winner keys hash-joined map-side
+      // against the batch, so losers never reach an exchange. No collapse
+      // here: exact redelivered copies of a winner both pass, and
+      // writeBuckets' LWW collapse keeps one.
+      val candidates =
         if (nKeys <= broadcastKeyLimit) {
           // key side renamed (as in the fallback path) — joining on a
           // column derived from `rows` itself degrades to a trivially
@@ -245,17 +239,13 @@ object MergeInto {
           rows.join(broadcast(keys),
               rows("url") === keys("_k_url") && rows("seq") === col("_w_seq"))
             .drop("_w_seq", "_k_url")
-            .groupBy(col("url"))
-            .agg(max_by(payload, ordKey).as("w"))
-            .select(col("w.*"))
         } else {
           // Fallback above the broadcast ceiling (e.g. a 10^10-event
           // backfill epoch): shuffle the payload ONCE and hash-join the
-          // winner keys per partition — no payload sort-aggregate over
-          // the raw batch. The shuffle key is SALTED: (url, pmod(seq,S))
-          // on the event side, (url, pmod(_w_seq,S)) on the key side.
-          // A crawl-hot url (Zipf head) spreads its payload uniformly
-          // over S partitions instead of skewing one (north_rule's
+          // winner keys per partition. The shuffle key is SALTED:
+          // (url, pmod(seq,S)) on the event side, (url, pmod(_w_seq,S)) on
+          // the key side. A crawl-hot url (Zipf head) spreads its payload
+          // uniformly over S partitions instead of skewing one (north_rule's
           // explicit hot-key salting; AQE skew handling is unavailable
           // inside a streaming foreachBatch). Correct because the only
           // row that can match carries seq == _w_seq, and equal seqs
@@ -270,123 +260,48 @@ object MergeInto {
                 salted("_salt") === keys("_k_salt") &&
                 (salted("seq") - keys("_w_seq") === 0L))
             .drop("_k_url", "_w_seq", "_k_salt", "_salt")
-            .groupBy(col("url"))
-            .agg(max_by(payload, ordKey).as("w"))
-            .select(col("w.*"))
         }
 
       val lineage = snap.lineage ++ batchLineage.map { case (b, s) =>
         b -> math.max(s, snap.lineage.getOrElse(b, Long.MinValue))
       }
 
-      if (useMor) {
-        // 3-MoR. Append winners as per-bucket delta files — the target is
-        //    never read, so a tail epoch updating 10^4 urls on a 100 TB
-        //    table costs O(winners) write + one manifest commit. liveRows/
-        //    tombstones become upper bounds (a delta upsert may shadow a
-        //    base row) until the next CoW fold-in or compaction restores
-        //    exact counts; per-FILE stats stay exact throughout.
-        winners.persist()
-        try {
-          val newId = snap.snapshotId + 1
-          val newFiles = LakeTable.writeBuckets(spark, tableDir, newId,
-            winners, touched, suffix = "-delta", kind = "delta")
-          phase("winners+deltaWrite+stats")
-          val durMs = elapsedMs
-          val s2 = snap.withEpoch(epochId, EpochStat(epochId, events, upsW,
-              delW, durMs, if (durMs > 0) events * 1000.0 / durMs else 0.0))
-            .copy(
-              snapshotId = newId, parentId = snap.snapshotId,
-              files = snap.files ++ newFiles,
-              lineage = lineage,
-              liveRows = snap.liveRows + newFiles.map(_.live).sum,
-              tombstones = snap.tombstones + newFiles.map(_.tombs).sum)
-          LakeTable.commit(tableDir, s2, expectParent = snap.snapshotId)
-          phase("commit")
-          return MergeResult(s2, applied = true, events, upsW, delW, durMs)
-        } finally winners.unpersist()
-      }
-
-      // 3. union-collapse resolution over pruned target buckets: per url
-      //    keep max(warc_ts, seq) of {table row} ∪ {batch winner}.
-      //    Tombstones stay as rows so an update older than a delete
-      //    cannot resurrect the url. Delta overlays on the touched
-      //    buckets enter the same collapse and their files are dropped
-      //    from the manifest below — a CoW epoch IS the overlay fold-in.
-      //
-      //    Same sort-free shape as phase B: the per-url winner is found
-      //    on NARROW columns with the primitive lww_seq HashAggregate
-      //    (winners is persisted, so its payload is scanned once; the
-      //    target's narrow pass is a column-pruned parquet scan), then
-      //    the payload joins back on (url, enc). (url, seq) alone is NOT
-      //    unique across target∪winners: an at-least-once redelivered
-      //    event can be this batch's winner while its first delivery
-      //    already sits in the table, and both byte-identical copies
-      //    would survive a (url, seq) join-back. The enc key folds a
-      //    write-generation tag into seq's low bits (LakeTable.readTagged
-      //    — target writes in snapshot order, this batch's winners as the
-      //    newest generation), restoring uniqueness and deterministically
-      //    keeping the newest copy.
-      winners.persist()
-      val (targetTagged, nGensT) = LakeTable.readTagged(spark, tableDir, touchedFiles)
-      val encBits = LakeTable.genBits(nGensT + 1)
-      val maxSeqAll = math.max(
-        touchedFiles.map(_.maxSeq).foldLeft(0L)(math.max),
-        batchLineage.values.max)
-      require(maxSeqAll < (1L << (62 - encBits)),
-        s"seq too large for ${nGensT + 1}-generation encoding")
-      val enc = shiftleft(col("seq"), encBits) + col("_gen")
-      val target = targetTagged
-        .withColumn("bucket", pmod(col("url_hash"), lit(snap.numBuckets)).cast("int"))
-      val winnersGen = winners.withColumn("_gen", lit(nGensT))
-      val narrowCols = Seq(col("url"), col("warc_ts"), enc.as("_e"))
-      val uKeys = targetTagged.select(narrowCols: _*)
-        .unionByName(winnersGen.select(narrowCols: _*))
-        .groupBy(col("url"))
-        .agg(graft.plans.LwwFunctions.lww_seq(spark, col("warc_ts"), col("_e"))
-          .as("_m_e"))
-        .select(col("url").as("_m_url"), col("_m_e"))
-      val unionAll = target.withColumn("_e", enc)
-        .unionByName(winnersGen.withColumn("_e", enc))
-      val merged =
-        (if (targetRows + nKeys <= broadcastKeyLimit)
-          unionAll.join(broadcast(uKeys),
-              unionAll("url") === col("_m_url") && unionAll("_e") === col("_m_e"))
-            .drop("_m_url", "_m_e")
+      // 3. write. MoR appends the candidates' winners as per-bucket delta
+      //    files — the target is never read, so a tail epoch updating
+      //    10^4 urls on a 100 TB table costs O(winners) write + one
+      //    manifest commit; liveRows/tombstones become upper bounds (a
+      //    delta upsert may shadow a base row) until the next CoW fold-in
+      //    or compaction restores exact counts; per-FILE stats stay exact
+      //    throughout. CoW rewrites the touched buckets from their current
+      //    files ∪ the candidates, the batch tagged as the newest write
+      //    generation (LakeTable.readTagged), so a redelivered event that
+      //    already sits in the table keeps exactly one copy. Delta overlays
+      //    on the touched buckets enter the same collapse and their files
+      //    leave the manifest — a CoW epoch IS the overlay fold-in.
+      val newId = snap.snapshotId + 1
+      val (replaced, newFiles) =
+        if (useMor)
+          (Nil, LakeTable.writeBuckets(spark, tableDir, newId, candidates,
+            touched, suffix = "-delta", kind = "delta"))
         else {
-          val mSalted = unionAll.withColumn("_salt",
-            pmod(col("_e"), lit(saltF)))
-          val kSalted = uKeys.withColumn("_k_salt",
-            pmod(col("_m_e"), lit(saltF)))
-          mSalted.join(kSalted.hint("SHUFFLE_HASH"),
-              mSalted("url") === kSalted("_m_url") &&
-                mSalted("_salt") === kSalted("_k_salt") &&
-                (mSalted("_e") - kSalted("_m_e") === 0L))
-            .drop("_m_url", "_m_e", "_salt", "_k_salt")
-        }).drop("_e", "_gen")
-      merged.persist()
-      try {
-        // 4. write + per-bucket stats (two jobs over the cached result).
-        val newId = snap.snapshotId + 1
-        val newFiles = LakeTable.writeBuckets(spark, tableDir, newId, merged, touched)
-        phase("winners+union+write+stats")
-
-        val keptFiles: List[FileEntry] =
-          snap.files.filterNot(f => touchedSet.contains(f.bucket))
-        val oldTouched = snap.files.filter(f => touchedSet.contains(f.bucket))
-        val durMs = elapsedMs
-        val s2 = snap.withEpoch(epochId, EpochStat(epochId, events, upsW, delW,
-            durMs, if (durMs > 0) events * 1000.0 / durMs else 0.0))
-          .copy(
-            snapshotId = newId, parentId = snap.snapshotId,
-            files = keptFiles ++ newFiles,
-            lineage = lineage,
-            liveRows = snap.liveRows - oldTouched.map(_.live).sum + newFiles.map(_.live).sum,
-            tombstones = snap.tombstones - oldTouched.map(_.tombs).sum + newFiles.map(_.tombs).sum)
-        LakeTable.commit(tableDir, s2, expectParent = snap.snapshotId)
-        phase("commit")
-        MergeResult(s2, applied = true, events, upsW, delW, durMs)
-      } finally { merged.unpersist(); winners.unpersist() }
+          val (target, nGens) = LakeTable.readTagged(spark, tableDir, touchedFiles)
+          val input = target
+            .withColumn("bucket", pmod(col("url_hash"), lit(snap.numBuckets)).cast("int"))
+            .unionByName(candidates.withColumn("_gen", lit(nGens)))
+          (touchedFiles, LakeTable.writeBuckets(spark, tableDir, newId, input, touched))
+        }
+      val durMs = elapsedMs
+      val s2 = snap.withEpoch(epochId, EpochStat(epochId, events, upsW, delW,
+          durMs, if (durMs > 0) events * 1000.0 / durMs else 0.0))
+        .copy(
+          snapshotId = newId, parentId = snap.snapshotId,
+          files = snap.files.filterNot(replaced.toSet) ++ newFiles,
+          lineage = lineage,
+          liveRows = snap.liveRows - replaced.map(_.live).sum + newFiles.map(_.live).sum,
+          tombstones = snap.tombstones - replaced.map(_.tombs).sum +
+            newFiles.map(_.tombs).sum)
+      LakeTable.commit(tableDir, s2, expectParent = snap.snapshotId)
+      MergeResult(s2, applied = true, events, upsW, delW, durMs)
     } finally { keyAgg.unpersist(); restorePf() }
   }
 }

@@ -105,17 +105,22 @@ object CdcIngest {
           import org.apache.spark.sql.functions.{col, xxhash64}
           val collapsed = graft.operators.LwwCollapse
             .collapse(MergeInto.alignToLatest(b))
-          val winners = collapsed
-            .filter(col("op") =!= "D" && col("text").isNotNull)
-            .select(xxhash64(col("url")).as("doc_id"), col("text"))
+          val docId = xxhash64(col("url")).as("doc_id")
+          val live = col("op") =!= "D" && col("text").isNotNull
           // a deleted url's signature/metrics are superseded by a
           // TOMBSTONE row the same epoch its delete merges — neither
-          // index keeps serving documents no longer in the table
-          val deletes = collapsed.filter(col("op") === "D")
-            .select(xxhash64(col("url")).as("doc_id"))
+          // index keeps serving documents no longer in the table. So is
+          // an update that yields no new row: null text (both indexes)
+          // or text too short to shingle (no MinHash signature), else
+          // the index keeps serving the url's previous entry
+          val signed = live && graft.analytics.DedupQueries.hasShingles(col("text"))
+          def docsAndTombs(keep: org.apache.spark.sql.Column) =
+            (collapsed.filter(keep).select(docId, col("text")),
+              collapsed.filter(!keep).select(docId))
           dedupIndexDir.foreach { ix =>
+            val (docs, tombs) = docsAndTombs(signed)
             graft.operators.DedupIndex.appendEpoch(
-              batch.sparkSession, ix, epochId, winners, Some(deletes))
+              batch.sparkSession, ix, epochId, docs, Some(tombs))
             // maintained dup-cluster state folds the epoch's candidate
             // pairs BEFORE index maintenance (the fresh epoch always has
             // its own entry then); clusters form over the signature
@@ -134,8 +139,9 @@ object CdcIngest {
             graft.operators.DedupIndex.autoMaintain(batch.sparkSession, ix)
           }
           metricsDir.foreach { mx =>
+            val (docs, tombs) = docsAndTombs(live)
             graft.operators.MetricsIndex.appendEpoch(
-              batch.sparkSession, mx, epochId, winners, Some(deletes))
+              batch.sparkSession, mx, epochId, docs, Some(tombs))
             graft.operators.MetricsIndex.autoMaintain(batch.sparkSession, mx)
           }
         }

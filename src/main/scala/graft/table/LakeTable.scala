@@ -2,6 +2,7 @@ package graft.table
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.json4s.{DefaultFormats, Formats}
 import org.json4s.jackson.Serialization
@@ -210,17 +211,18 @@ object LakeTable {
     * a later epoch and be that epoch's per-url LWW winner again — landing
     * a second physical copy in a different write (a delta overlay, or a
     * batch winner colliding with the stored row on the copy-on-write
-    * path). A join-back keyed on (url, seq) alone would then return BOTH
-    * copies. (url, seq) is unique *within* one write — every write is
+    * path). A collapse or join-back keyed on (url, seq) alone cannot tell
+    * the copies apart. (url, seq) is unique *within* one write — every write is
     * per-url deduped — so tagging rows by write restores a unique key.
     *
     * Generations: all base files share gen 0 (each bucket has exactly one
     * base file and urls never span buckets, so base rows are jointly
     * per-url unique); each delta write gets its own gen in snapshot
-    * order. Callers fold `_gen` into the LWW order as low bits of seq:
-    * `(seq << genBits) | _gen` — order-preserving in seq, and for the
-    * byte-identical copies of one event (equal warc_ts, equal seq) it
-    * deterministically picks the newest write. Returns (rows, genCount).
+    * order. Callers rank `_gen` after seq in the LWW order — the last key
+    * of [[writeBuckets]]' collapse; [[readMerged]] folds it into seq's
+    * low bits, `(seq << genBits) | _gen` — so for the byte-identical
+    * copies of one event (equal warc_ts, equal seq) the newest write
+    * deterministically wins. Returns (rows, genCount).
     */
   private[graft] def readTagged(spark: SparkSession, dir: String,
                                 files: Seq[FileEntry]): (DataFrame, Int) = {
@@ -330,13 +332,26 @@ object LakeTable {
   def bucketOf(urlCol: org.apache.spark.sql.Column, numBuckets: Int) =
     pmod(xxhash64(urlCol), lit(numBuckets)).cast("int")
 
-  /** Write `rows` (tableSchema + a `bucket` column) for the touched
-    * buckets of snapshot `snapId`; returns manifest entries with
-    * per-bucket pruning + accounting stats. One output file per bucket
-    * via repartition-by-bucket (at 100 TB each bucket is itself a
-    * directory of many files; the entry granularity stays per-file).
-    * Exactly two jobs over `rows` (which callers persist): the write and
-    * one per-bucket stats aggregate.
+  /** LWW-collapse `rows` and write the result as the touched buckets of
+    * snapshot `snapId`; returns manifest entries with per-bucket pruning
+    * + accounting stats. The engine's single "collapse and write" step:
+    * `rows` (tableSchema + a `bucket` column, optionally a `_gen` write
+    * generation) may hold several rows per url — the target files of a
+    * copy-on-write epoch beside the batch's candidate rows, or redelivered
+    * copies of one event — and each url keeps its max
+    * (warc_ts, seq, _gen) row. Tombstones stay rows, so a later update
+    * older than a delete cannot resurrect the url. Rows with a null
+    * warc_ts are dropped first: the lww_seq winner aggregate ignores
+    * them too.
+    *
+    * Plan: ONE exchange, the repartition-by-bucket (one output file per
+    * bucket; at 100 TB each bucket is itself a directory of many files,
+    * the entry granularity stays per-file). The collapse is a row_number
+    * window partitioned by (bucket, url_hash, url): the bucket hash
+    * partitioning already satisfies it, so the window adds no exchange,
+    * and its sort is the (url_hash, url) file order. The collapsed result
+    * is persisted and feeds two jobs: the write and one per-bucket stats
+    * aggregate.
     */
   def writeBuckets(spark: SparkSession, dir: String, snapId: Long,
                    rows: DataFrame, touched: Seq[Int],
@@ -344,30 +359,38 @@ object LakeTable {
     if (touched.isEmpty) return Nil
     val rel = s"data/s$snapId$suffix"
     val out = s"$dir/$rel"
-    rows
+    val gen = if (rows.columns.contains("_gen")) col("_gen") else lit(0)
+    val lww = Window.partitionBy(col("bucket"), col("url_hash"), col("url"))
+      .orderBy(col("warc_ts").desc, col("seq").desc, gen.desc)
+    val collapsed = rows.filter(col("warc_ts").isNotNull)
       .repartition(touched.size, col("bucket"))
-      .sortWithinPartitions(col("url_hash"), col("url"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(out)
-    // per-bucket stats: pruning ranges + live/tombstone accounting (the
-    // manifest carries them so later merges never rescan for them)
-    val stats = rows.groupBy(col("bucket")).agg(
-      count(lit(1)).as("rows"),
-      sum(when(col("tombstone"), 0L).otherwise(1L)).as("live"),
-      min(col("seq")).as("minSeq"), max(col("seq")).as("maxSeq"),
-      min(col("warc_ts")).cast("long").as("minTs"),
-      max(col("warc_ts")).cast("long").as("maxTs"))
-      .collect()
-      .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getLong(5) * 1000L, r.getLong(6) * 1000L)).toMap
-    val base = Paths.get(out)
-    graft.FsUtil.walkDir(base)(_
-      .filter(p => p.getFileName.toString.endsWith(".parquet"))
-      .map { p =>
-        val relPath = Paths.get(dir).relativize(p).toString
-        val bucket = p.getParent.getFileName.toString.stripPrefix("bucket=").toInt
-        val (n, live, mnS, mxS, mnT, mxT) =
-          stats.getOrElse(bucket, (0L, 0L, 0L, 0L, 0L, 0L))
-        FileEntry(relPath, bucket, n, live, n - live, mnS, mxS, mnT, mxT, kind)
-      }.toList)
+      .withColumn("_rn", row_number().over(lww))
+      .filter(col("_rn") === 1)
+      .select((CdcSchema.tableSchema.fieldNames :+ "bucket").map(col).toIndexedSeq: _*)
+    collapsed.persist()
+    try {
+      collapsed.write.mode("overwrite").partitionBy("bucket").parquet(out)
+      // per-bucket stats: pruning ranges + live/tombstone accounting (the
+      // manifest carries them so later merges never rescan for them)
+      val stats = collapsed.groupBy(col("bucket")).agg(
+        count(lit(1)).as("rows"),
+        sum(when(col("tombstone"), 0L).otherwise(1L)).as("live"),
+        min(col("seq")).as("minSeq"), max(col("seq")).as("maxSeq"),
+        min(col("warc_ts")).cast("long").as("minTs"),
+        max(col("warc_ts")).cast("long").as("maxTs"))
+        .collect()
+        .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
+          r.getLong(4), r.getLong(5) * 1000L, r.getLong(6) * 1000L)).toMap
+      val base = Paths.get(out)
+      graft.FsUtil.walkDir(base)(_
+        .filter(p => p.getFileName.toString.endsWith(".parquet"))
+        .map { p =>
+          val relPath = Paths.get(dir).relativize(p).toString
+          val bucket = p.getParent.getFileName.toString.stripPrefix("bucket=").toInt
+          val (n, live, mnS, mxS, mnT, mxT) =
+            stats.getOrElse(bucket, (0L, 0L, 0L, 0L, 0L, 0L))
+          FileEntry(relPath, bucket, n, live, n - live, mnS, mxS, mnT, mxT, kind)
+        }.toList)
+    } finally collapsed.unpersist()
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.functions.{lit, xxhash64}
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.rng.Seed
 import graft.model.CdcSchema
@@ -91,11 +92,16 @@ class LwwPropertySpec extends SparkSpec {
     })
   }
 
-  test("random CoW/MoR mode per epoch + cross-epoch duplication: same state") {
+  /** `broadcastKeyLimit = 0` forces the salted shuffled-hash key join,
+    * so the fallback path is state-checked, not only shape-checked.
+    */
+  for ((suffix, keyLimit) <- Seq("" -> MergeInto.BroadcastKeyLimit,
+                                 " (salted key join)" -> 0L))
+  test(s"random CoW/MoR mode per epoch + cross-epoch duplication: same state$suffix") {
     // the few-keys generator already forces same-(warc_ts, seq) dup
     // redeliveries across epoch boundaries; the mode die adds every
     // write-path interleaving (base∪delta generations) on top
-    check("mode-mix")(Prop.forAll(
+    check(s"mode-mix$suffix")(Prop.forAll(
       Gen.listOfN(40, genEv), Gen.choose(2, 4),
       Gen.listOfN(5, Gen.choose(0, 2)), Gen.choose(0, 4)) {
       (evs0, nEpochs, modeDie, dupFrom) =>
@@ -113,7 +119,8 @@ class LwwPropertySpec extends SparkSpec {
             case 1 => MergeInto.MergeOnRead
             case _ => MergeInto.Auto
           }
-          MergeInto.merge(spark, dir, toDf(chunk), e.toLong, mode)
+          MergeInto.merge(spark, dir, toDf(chunk), e.toLong, mode,
+            broadcastKeyLimit = keyLimit)
         }
         val live = LakeTable.readLive(spark, dir)
           .select($"url", $"seq").collect()
@@ -121,6 +128,51 @@ class LwwPropertySpec extends SparkSpec {
         // no duplicated urls, and exact LWW state
         live.length == got.size && got == scalaOracle(evs)
     })
+  }
+
+  for (mode <- Seq(MergeInto.CopyOnWrite, MergeInto.MergeOnRead))
+  test(s"$mode: a null-warc_ts event beside dated ones keeps the dated winner") {
+    // lww_seq ignores null warc_ts, and so must the write's collapse — the
+    // undated event carries the url's highest seq and must still lose
+    val dir = tmpDir("prop-nullts") + "/t"
+    LakeTable.create(dir, numBuckets = 4)
+    def ev(seq: Long, tsMs: Option[Long], text: String, url: String = "u1") =
+      (seq, "U", url, tsMs.map(new java.sql.Timestamp(_)).orNull,
+        null: Array[Byte], text, "en", null.asInstanceOf[java.lang.Double])
+    def df(evs: (Long, String, String, java.sql.Timestamp, Array[Byte],
+        String, String, java.lang.Double)*) =
+      evs.toDF(CdcSchema.latest.fieldNames: _*)
+    // a seeded target, so the CoW epoch has stored rows to fold in
+    MergeInto.merge(spark, dir, df(ev(0L, Some(500L), "seed"),
+      ev(1L, Some(600L), "seed", url = "u2")), 0L)
+    MergeInto.merge(spark, dir, df(ev(2L, Some(1000L), "dated-old"),
+      ev(3L, Some(2000L), "dated-new"), ev(4L, None, "undated")), 1L, mode)
+    val live = LakeTable.readLive(spark, dir)
+      .select($"url", $"seq", $"text").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSet
+    assert(live === Set(("u1", 3L, "dated-new"), ("u2", 1L, "seed")))
+  }
+
+  test("writeBuckets' collapse: a null warc_ts never wins; undated-only urls are dropped") {
+    // the write-level half of the case above: uncollapsed rows straight
+    // into the collapse, no key join in front of it
+    val dir = tmpDir("prop-nullts-write") + "/t"
+    LakeTable.create(dir, numBuckets = 4)
+    val rows = Seq(("u1", Some(1000L), 1L), ("u1", None, 9L), ("u2", None, 5L))
+      .map { case (u, ts, seq) => (u, ts.map(new java.sql.Timestamp(_)).orNull, seq) }
+      .toDF("url", "warc_ts", "seq")
+      .select($"url", xxhash64($"url").as("url_hash"),
+        $"warc_ts", $"seq", lit(false).as("tombstone"),
+        lit(null).cast("binary").as("html"),
+        lit(null).cast("string").as("text"),
+        lit("en").as("lang"),
+        lit(null).cast("double").as("extra_score"))
+      .withColumn("bucket", LakeTable.bucketOf($"url", 4))
+    val files = LakeTable.writeBuckets(spark, dir, 1L, rows, 0 until 4)
+    assert(files.map(_.rows).sum === 1L)
+    val got = spark.read.parquet(files.map(f => s"$dir/${f.path}"): _*)
+      .select($"url", $"seq").collect().map(r => (r.getString(0), r.getLong(1)))
+    assert(got.toSeq === Seq(("u1", 1L)))
   }
 
   test("random maintenance interleavings (compact/rebucket/vacuum) preserve state") {

@@ -1,11 +1,15 @@
 package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.operators.MergeInto
-import graft.table.LakeTable
+import graft.table.{FileEntry, LakeTable}
 
 /** Plan-shape guard for the MERGE path itself (PlanShapeSpec covers the
   * 57 queries, not the epoch): the LWW winner selection must stay the
@@ -14,17 +18,20 @@ import graft.table.LakeTable
   * winner-sized max_by residual (PLANS.md "Ingest merge" shape). This is
   * the measured-10× Spark-4 trap — max(struct)/max_by buffers planize as
   * SortAggregate, sorting the whole batch per partition — wired to fail
-  * CI at sf-tiny if it ever returns to the hot path.
+  * CI at sf-tiny if it ever returns to the hot path. It also pins the
+  * payload traffic: the bucket write's repartition is the one exchange
+  * that carries html/text (the salted fallback adds its key-join
+  * exchange), and each touched target file is scanned once.
   */
 class MergePlanShapeSpec extends SparkSpec {
   import spark.implicits._
 
-  private def capturedPlans(work: => Unit): Seq[String] = {
-    val plans = new ConcurrentLinkedQueue[String]()
+  private def capturedPlans(work: => Unit): Seq[SparkPlan] = {
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution,
                              durationNs: Long): Unit =
-        plans.add(qe.executedPlan.toString)
+        plans.add(qe.executedPlan)
       override def onFailure(funcName: String, qe: QueryExecution,
                              exception: Exception): Unit = ()
     }
@@ -58,9 +65,74 @@ class MergePlanShapeSpec extends SparkSpec {
       lit("en").as("lang"),
       lit(null).cast("double").as("extra_score"))
 
-  private def assertMergeShape(plans: Seq[String], label: String): Unit = {
+  /** Every distinct physical node of the epoch's plans, descending into
+    * AQE query stages and cached relations' plans. A cached plan is
+    * shared by the jobs that read it, so nodes are deduped by identity:
+    * an exchange or scan counts once however many jobs reuse it.
+    */
+  private def epochNodes(plans: Seq[SparkPlan]): Seq[SparkPlan] = {
+    val seen = new java.util.IdentityHashMap[SparkPlan, Unit]()
+    val out = Seq.newBuilder[SparkPlan]
+    object walk extends AdaptiveSparkPlanHelper {
+      def apply(p: SparkPlan): Unit = foreach(p) { n =>
+        if (!seen.containsKey(n)) {
+          seen.put(n, ())
+          out += n
+          n match {
+            case m: InMemoryTableScanExec => apply(m.relation.cachedPlan)
+            case _ => ()
+          }
+        }
+      }
+    }
+    plans.foreach(walk(_))
+    out.result()
+  }
+
+  /** html/text as a top-level column or nested in a struct (a `max_by`
+    * payload struct carries them as fields).
+    */
+  private def isPayload(name: String, dt: DataType): Boolean =
+    name == "html" || name == "text" || (dt match {
+      case st: StructType => st.fields.exists(f => isPayload(f.name, f.dataType))
+      case _ => false
+    })
+
+  private def payloadExchanges(plans: Seq[SparkPlan]): Seq[ShuffleExchangeExec] =
+    epochNodes(plans).collect {
+      case e: ShuffleExchangeExec
+          if e.output.exists(a => isPayload(a.name, a.dataType)) => e
+    }
+
+  /** One payload exchange per epoch — the bucket write's repartition — plus
+    * the salted key join's exchange when the fallback path runs.
+    */
+  private def assertPayloadExchanges(plans: Seq[SparkPlan], label: String,
+                                     saltedJoin: Boolean): Unit = {
+    val ex = payloadExchanges(plans)
+    val (write, other) = ex.partition(_.shuffleOrigin == REPARTITION_BY_NUM)
+    assert(write.size === 1,
+      s"$label: expected exactly one bucket-write payload exchange, got $ex")
+    assert(other.size === (if (saltedJoin) 1 else 0),
+      s"$label: unexpected payload exchanges: $other")
+  }
+
+  /** Each of `files` is read by exactly `times` distinct scans. */
+  private def assertTargetScans(plans: Seq[SparkPlan], files: Seq[FileEntry],
+                                times: Int, label: String): Unit = {
+    val scanned = epochNodes(plans).collect {
+      case s: FileSourceScanExec => s.relation.location.inputFiles.toSeq
+    }
+    assert(files.nonEmpty, s"$label: no touched target files")
+    files.foreach { f =>
+      val n = scanned.count(_.exists(_.endsWith(f.path)))
+      assert(n === times, s"$label: ${f.path} scanned $n times, expected $times")
+    }
+  }
+
+  private def assertMergeShape(plans: Seq[SparkPlan], label: String): Unit = {
     assert(plans.nonEmpty, s"$label: no executed plans captured")
-    val all = plans.mkString("\n===\n")
+    val all = plans.map(_.toString).mkString("\n===\n")
     // 1. the winner selection ran as the primitive-buffer HashAggregate
     val lwwLines = all.linesIterator.filter(_.contains("lww_seq")).toSeq
     assert(lwwLines.nonEmpty, s"$label: no lww_seq aggregate in epoch plans")
@@ -98,16 +170,20 @@ class MergePlanShapeSpec extends SparkSpec {
     val dir = tmpDir("mps-cow") + "/t"
     LakeTable.create(dir, numBuckets = 8)
     MergeInto.merge(spark, dir, batch(4000, 300), 0L) // seed the target
+    val target = LakeTable.load(dir).files
     val plans = capturedPlans {
       MergeInto.merge(spark, dir, batch(4000, 300), 1L, MergeInto.CopyOnWrite)
     }
     assertMergeShape(plans, "CoW/broadcast")
+    assertPayloadExchanges(plans, "CoW/broadcast", saltedJoin = false)
+    assertTargetScans(plans, target, 1, "CoW/broadcast")
   }
 
   test("CoW epoch (salted fallback above the broadcast ceiling): same shape") {
     val dir = tmpDir("mps-fb") + "/t"
     LakeTable.create(dir, numBuckets = 8)
     MergeInto.merge(spark, dir, batch(4000, 300), 0L)
+    val target = LakeTable.load(dir).files
     val plans = capturedPlans {
       // broadcastKeyLimit=0 forces the salted ShuffledHashJoin path in
       // both phases — the 10^10-event backfill shape
@@ -115,15 +191,21 @@ class MergePlanShapeSpec extends SparkSpec {
         broadcastKeyLimit = 0L)
     }
     assertMergeShape(plans, "CoW/fallback")
+    assertPayloadExchanges(plans, "CoW/fallback", saltedJoin = true)
+    assertTargetScans(plans, target, 1, "CoW/fallback")
   }
 
   test("MoR epoch: winner selection stays the lww_seq HashAggregate") {
     val dir = tmpDir("mps-mor") + "/t"
     LakeTable.create(dir, numBuckets = 8)
     MergeInto.merge(spark, dir, batch(4000, 300), 0L)
+    val target = LakeTable.load(dir).files
     val plans = capturedPlans {
       MergeInto.merge(spark, dir, batch(500, 300), 1L, MergeInto.MergeOnRead)
     }
     assertMergeShape(plans, "MoR")
+    assertPayloadExchanges(plans, "MoR", saltedJoin = false)
+    // merge-on-read never opens the target
+    assertTargetScans(plans, target, 0, "MoR")
   }
 }

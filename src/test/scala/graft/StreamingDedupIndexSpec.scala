@@ -179,6 +179,41 @@ class StreamingDedupIndexSpec extends SparkSpec {
     graft.analytics.SessionCaches.release(spark)
   }
 
+  test("an update to null or too-short text tombstones the url's old index entries") {
+    val base = tmpDir("sdix-empty")
+    val words = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    def ev(seq: Long, url: String, text: String) =
+      (seq, "U", url, new java.sql.Timestamp(1700000000000L + seq * 1000L),
+        null: Array[Byte], text, "en", null.asInstanceOf[java.lang.Double])
+    // segment 0: urls a and b with identical text
+    FeedGen.appendSegment(spark, s"$base/feed",
+      Seq(ev(0L, "https://ex.org/a", words + " x"),
+        ev(1L, "https://ex.org/b", words + " x"))
+        .toDF(CdcSchema.latest.fieldNames: _*).coalesce(1), "s0")
+    // segment 1: a updated to text too short to shingle, b to null
+    // text, and c added with the text a and b used to have
+    FeedGen.appendSegment(spark, s"$base/feed",
+      Seq(ev(2L, "https://ex.org/a", "too short"),
+        ev(3L, "https://ex.org/b", null),
+        ev(4L, "https://ex.org/c", words + " x"))
+        .toDF(CdcSchema.latest.fieldNames: _*).coalesce(1), "s1")
+    CdcIngest.runAvailableNow(spark, s"$base/feed", s"$base/table",
+      s"$base/ckpt", numBuckets = 4, maxFilesPerTrigger = Some(1),
+      dedupIndexDir = Some(s"$base/ix"), metricsDir = Some(s"$base/mx"))
+    val epochs = DedupIndex.committedEpochs(s"$base/ix")
+    assert(epochs.size === 2)
+    val pairs = DedupIndex.epochPairs(spark, s"$base/ix", epochs.last).collect()
+    assert(pairs.isEmpty,
+      s"a and b no longer carry their old text, c must pair with nothing: ${pairs.toSeq}")
+    // metrics: b's null text drops its row; a's short text is a new row
+    val metrics = graft.operators.MetricsIndex.readLive(spark, s"$base/mx")
+      .select(col("doc_id"), col("ws_tokens")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(metrics.keySet === Set(xx("https://ex.org/a"), xx("https://ex.org/c")))
+    assert(metrics(xx("https://ex.org/a")) === 2L)
+    graft.analytics.SessionCaches.release(spark)
+  }
+
   private def xx(s: String): Long =
     Seq(Tuple1(s)).toDF("u").select(xxhash64(col("u")))
       .collect()(0).getLong(0)
