@@ -27,25 +27,16 @@ object CoreQueries {
     (ms(b) - ms(a)).cast("double")
   }
 
-  /** One scratch rollup dir PER sfDir, reused across invocations and
-    * reclaimed by a single JVM shutdown hook — a fresh dir per call
-    * would leak RAM-backed tmpfs (and stack one hook thread per call)
-    * in a long-lived session. Reuse is correct because AdditiveRollup's
-    * epoch ledger makes the replayed epochs no-ops: repeated q34 calls
-    * read the same committed state.
+  /** One scratch rollup dir PER sfDir ([[graft.FsUtil.scratchDir]],
+    * reclaimed at JVM exit), reused across invocations — a fresh dir per
+    * call would leak RAM-backed tmpfs in a long-lived session. Reuse is
+    * correct because AdditiveRollup's epoch ledger makes the replayed
+    * epochs no-ops: repeated q34 calls read the same committed state.
     */
   private val scratchDirs =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def scratchDirFor(key: String): String =
-    scratchDirs.computeIfAbsent(key, _ => {
-      val dir = (if (new java.io.File("/dev/shm").isDirectory)
-        java.nio.file.Files.createTempDirectory(
-          java.nio.file.Paths.get("/dev/shm"), "graft-q34")
-      else java.nio.file.Files.createTempDirectory("graft-q34")).toString
-      Runtime.getRuntime.addShutdownHook(
-        new Thread(() => graft.FsUtil.deleteTree(dir)))
-      dir
-    })
+    scratchDirs.computeIfAbsent(key, _ => graft.FsUtil.scratchDir("q34"))
 
   val queries: Map[String, Q] = Map(
     // A1/A4: grouped multi-aggregate (reference: messages-per-bucket

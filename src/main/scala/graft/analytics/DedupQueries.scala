@@ -352,16 +352,20 @@ object DedupQueries {
       graft.operators.DedupIndex.appendEpoch(s, ix, 0L,
         docs.filter(pmod(col("doc_id"), lit(2)) === 0))
       // epoch 0's candidate fold reads only its committed (pinned)
-      // files — materialize the memoized frame concurrently with
-      // epoch 1's append (guide §2.6); consumers get it cache-warm
-      val p0 = SessionCaches.memo(s, s"minhash-pairs|$d|0") {
-        graft.operators.DedupIndex.epochPairs(s, ix, 0L)
-      }
-      val pre = java.util.concurrent.CompletableFuture.runAsync(() =>
-        try { p0.count(); () } catch { case _: Throwable => () })
-      graft.operators.DedupIndex.appendEpoch(s, ix, 1L,
-        docs.filter(pmod(col("doc_id"), lit(2)) === 1))
-      pre.join()
+      // files — materialize it concurrently with epoch 1's append
+      // (guide §2.6) so consumers get it cache-warm. It joins the memo
+      // only once the whole build has succeeded: a failed build must
+      // not leave a memo pointing into an abandoned index dir. Neither
+      // task may call SessionCaches: this build runs under its monitor
+      val p0 = graft.operators.DedupIndex.epochPairs(s, ix, 0L).persist()
+      try graft.Parallel.all(Seq(
+        () => { p0.count(); () },
+        () => {
+          graft.operators.DedupIndex.appendEpoch(s, ix, 1L,
+            docs.filter(pmod(col("doc_id"), lit(2)) === 1)); ()
+        }))
+      catch { case e: Throwable => p0.unpersist(blocking = false); throw e }
+      SessionCaches.memo(s, s"minhash-pairs|$d|0")(p0)
       ix
     }
 
@@ -543,13 +547,8 @@ object DedupQueries {
       // CONCURRENT jobs before folding (guide §2.6): the folds must run
       // serially (fold 1 reads fold 0's committed state), but the pair
       // computations are independent of the cluster dir — overlapping
-      // them takes the pair stage to max(p0, p1) instead of p0 + p1.
-      // A failure here is swallowed: the frames are lazy, so the fold
-      // recomputes and surfaces the same error through the normal path.
-      val pre = Seq(p0, p1).map(p =>
-        java.util.concurrent.CompletableFuture.runAsync(() =>
-          try { p.count(); () } catch { case _: Throwable => () }))
-      pre.foreach(_.join())
+      // them takes the pair stage to max(p0, p1) instead of p0 + p1
+      graft.Parallel.all(Seq(p0, p1).map(p => () => p.count()))
       Seq(p0, p1).zipWithIndex.foreach { case (pairs, e) =>
         graft.operators.ClusterIndex.foldEpoch(s, clDir, e.toLong,
           pairs.select(col("doc_a"), col("doc_b")))
@@ -586,16 +585,12 @@ object DedupQueries {
       val docs = documents(s, d)
       // the two epochs' verify stages each run an eager full-corpus
       // guard count during construction — independent jobs, overlapped
-      // (guide §2.6); join() rethrows a failed guard's require()
-      val futs = Seq(p0, p1).map(p =>
-        java.util.concurrent.CompletableFuture.supplyAsync(() =>
+      // (guide §2.6); a failed guard's require() is rethrown once both
+      // have finished
+      graft.Parallel.all(Seq(p0, p1).map(p => () =>
           graft.operators.DedupIndex.verifyCandidates(s, p, docs,
             threshold = 0.8)))
-      futs.map { f =>
-        try f.join()
-        catch { case e: java.util.concurrent.CompletionException =>
-          throw Option(e.getCause).getOrElse(e) }
-      }.reduce(_ unionByName _)
+        .reduce(_ unionByName _)
     })
   )
 

@@ -73,9 +73,9 @@ object SessionCaches {
   }
 
   /** Build-once-per-(session, key): returns the existing persisted frame
-    * for `key` if still registered, else runs `build`, persists and
-    * registers the result under `key`. Reentrant — `build` may itself
-    * call [[track]].
+    * for `key` if still registered, else runs `build`, persists (unless
+    * `build` already did) and registers the result under `key`.
+    * Reentrant — `build` may itself call [[track]].
     */
   def memo(spark: SparkSession, key: String)(build: => DataFrame): DataFrame =
     synchronized {
@@ -83,7 +83,8 @@ object SessionCaches {
         case Some(e) => e.df
         case None =>
           val df = build
-          df.persist()
+          if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+            df.persist()
           add(spark, Entry(Some(key), df))
           df
       }

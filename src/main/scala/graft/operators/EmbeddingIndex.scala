@@ -10,8 +10,8 @@ import graft.analytics.{DedupQueries, Hashing}
   * sign-LSH candidates + exact-cosine verify as the batch op
   * (DedupQueries.embeddingNearDupPairs), at epoch-sized cost. Storage
   * and exactly-once/compaction/vacuum semantics are the SHARED
-  * manifest layer in DedupIndex (appendFrame/readSigs/compact/
-  * autoMaintain with keyCol = vec_id) — one commit protocol, two
+  * manifest layer in DedupIndex (appendFrameWithMirrors/readSigs/
+  * compact/autoMaintain with keyCol = vec_id) — one commit protocol, two
   * signature modalities. A vector row (vec_id, 64 floats, ~270 B) IS
   * its own signature: candidates and the exact-cosine verify both come
   * from the stored row, so the index never re-reads the source table.
@@ -32,8 +32,7 @@ object EmbeddingIndex {
     DedupIndex.appendFrameWithMirrors(spark, dir, epochId,
       vecs.select(col("vec_id"), col("embedding"))
         .withColumn("_sig_epoch", lit(epochId)),
-      List(DedupIndex.MirrorFeature), keyCol = "vec_id",
-      keysAreDistinct = true)
+      keyCol = "vec_id", keysAreDistinct = true)
 
   private def bucketed(s: SparkSession, vecs: DataFrame): DataFrame = {
     val tblCols = (0 until DedupQueries.NearDupTables).map { t =>
@@ -52,8 +51,8 @@ object EmbeddingIndex {
     * cumulative corpus (spec-pinned).
     */
   def epochPairs(spark: SparkSession, dir: String, epochId: Long,
-                 minCos: Double, forceLegacy: Boolean = false): DataFrame = {
-    val prior = DedupIndex.committedEpochs(dir).filter(_ < epochId)
+                 minCos: Double): DataFrame = {
+    val priors = DedupIndex.priorEntries(dir, epochId)
     val newV = DedupIndex.readSigs(spark, dir, Seq(epochId))
     val newB = bucketed(spark, newV)
     val within = newB.as("x").join(newB.as("y"),
@@ -61,22 +60,14 @@ object EmbeddingIndex {
           col("x.vec_id") < col("y.vec_id"))
       .select(col("x.vec_id").as("id_a"), col("y.vec_id").as("id_b"),
         col("x.v").as("va"), col("y.v").as("vb"))
-    val mirrored = !forceLegacy && DedupIndex.loadManifest(dir)
-      .features.contains(DedupIndex.MirrorFeature)
     val all =
-      if (prior.isEmpty) within
+      if (priors.isEmpty) within
       else {
-        val priorLive =
-          if (mirrored) {
-            val entries = DedupIndex.priorEntries(dir, epochId)
-            DedupIndex.dropSuperseded(
-              spark.read.parquet(entries.map(e => s"$dir/${e.path}"): _*),
-              newV.select(col("vec_id")),
-              DedupIndex.resignedLists(spark, dir, entries),
-              keyCol = "vec_id")
-          } else DedupIndex
-            .latestSigs(DedupIndex.readSigs(spark, dir, prior), "vec_id")
-            .join(newV.select(col("vec_id")), Seq("vec_id"), "left_anti")
+        val priorLive = DedupIndex.dropSuperseded(
+          spark.read.parquet(priors.map(e => s"$dir/${e.path}"): _*),
+          newV.select(col("vec_id")),
+          DedupIndex.resignedLists(spark, dir, priors),
+          keyCol = "vec_id")
         val oldB = bucketed(spark, priorLive)
         val cross = newB.as("x").join(oldB.as("y"),
             col("x.tbl") === col("y.tbl") && col("x.bkt") === col("y.bkt") &&

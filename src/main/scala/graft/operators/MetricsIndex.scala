@@ -16,7 +16,7 @@ import graft.analytics.DocMetrics
   * [[DedupIndex]]).
   *
   * Storage is the SHARED manifest layer in [[DedupIndex]]
-  * (appendFrame / readSigs / latestSigs / compact / autoMaintain with
+  * (appendFrameWithMirrors / readSigs / compact / autoMaintain with
   * keyCol = doc_id): snapshot-committed epoch dirs, exactly-once under
   * redelivery, latest-per-doc supersession for updated urls, all-null
   * tombstones for deletes (compaction drops them physically). One
@@ -93,31 +93,24 @@ object MetricsIndex {
     // the whole metrics table (round-6; the round-5 verdict flagged
     // this read path alongside the ClusterIndex fold)
     DedupIndex.appendFrameWithMirrors(spark, dir, epochId,
-      rows.withColumn("_sig_epoch", lit(epochId)),
-      List(DedupIndex.MirrorFeature))
+      rows.withColumn("_sig_epoch", lit(epochId)))
   }
 
   /** Current metrics: latest row per doc, tombstones dropped — one
     * narrow scan of the committed entries (post-compaction: one merged
     * dir + the freshest epoch); supersession resolved by broadcast
-    * anti-joins on mirror-era indexes, by the latest-per-doc groupBy on
-    * legacy dirs.
+    * anti-joins against the resigned/ lists.
     */
   def readLive(spark: SparkSession, dir: String): DataFrame = {
     val m = DedupIndex.loadManifest(dir)
     if (m.entries.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], liveSchema)
-    val base =
-      if (m.features.contains(DedupIndex.MirrorFeature))
-        DedupIndex.dropSuperseded(
-          spark.read.parquet(m.entries.map(e => s"$dir/${e.path}"): _*),
-          spark.emptyDataFrame.select(lit(0L).as("doc_id")).limit(0),
-          DedupIndex.resignedLists(spark, dir, m.entries))
-      else
-        DedupIndex.latestSigs(
-          DedupIndex.readSigs(spark, dir, m.epochs))
-    base.filter(col("ws_tokens").isNotNull).drop("_sig_epoch")
+    DedupIndex.dropSuperseded(
+        spark.read.parquet(m.entries.map(e => s"$dir/${e.path}"): _*),
+        spark.emptyDataFrame.select(lit(0L).as("doc_id")).limit(0),
+        DedupIndex.resignedLists(spark, dir, m.entries))
+      .filter(col("ws_tokens").isNotNull).drop("_sig_epoch")
   }
 
   /** Threshold-driven compaction/vacuum — delegates to the shared

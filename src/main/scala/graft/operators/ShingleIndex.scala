@@ -51,19 +51,6 @@ import graft.analytics.DedupQueries
   */
 object ShingleIndex {
 
-  /** Manifest feature marking every entry as carrying a resigned/
-    * mirror (and a doc_id Bloom sidecar): established at FIRST-epoch
-    * commit, it lets [[epochPairs]]/[[contamination]] resolve the live
-    * prior rows with two broadcast anti-joins instead of a
-    * latest-per-doc groupBy + join-back over the WHOLE shingle store —
-    * the largest artifact this engine persists, whose per-fold
-    * exchange would grow with the corpus forever. Indexes written
-    * before the mirror era (no flag) read through the groupBy fallback,
-    * which stays correct for them because mirror ABSENCE only means
-    * "no resigns" on entries that actually wrote mirrors.
-    */
-  val MirrorFeature: String = DedupIndex.MirrorFeature
-
   /** `docs`: (doc_id, text). Idempotent per epoch; `deletes` tombstone. */
   def appendEpoch(spark: SparkSession, dir: String, epochId: Long,
                   docs: DataFrame,
@@ -90,52 +77,35 @@ object ShingleIndex {
           lit(null).cast("long").as("n_sh")))
     }
     DedupIndex.appendFrameWithMirrors(spark, dir, epochId,
-      rows.withColumn("_sig_epoch", lit(epochId)), List(MirrorFeature))
+      rows.withColumn("_sig_epoch", lit(epochId)))
   }
 
   /** Live (not superseded, not tombstoned) rows of the entries strictly
     * older than `epochId` (all committed entries when `epochId` is
-    * None). Mirror-era indexes resolve supersession with broadcast
-    * anti-joins against the epoch's docs and the tiny resigned/ lists —
-    * the index side crosses ZERO exchanges; legacy dirs (no
-    * [[MirrorFeature]]) fall back to the latest-per-doc groupBy, which
-    * is also the regression anchor ([[graft.bench.ShingleFoldBench]]
-    * A/Bs the two on one index via `forceLegacy`).
+    * None). Supersession is resolved with broadcast anti-joins against
+    * the epoch's docs and the tiny resigned/ lists — the index side (the
+    * largest artifact this engine persists) crosses ZERO exchanges,
+    * where a latest-per-doc groupBy would exchange the whole shingle
+    * store on every fold.
     */
   private def liveRows(spark: SparkSession, dir: String,
                        before: Option[Long],
-                       excludeDocs: Option[DataFrame],
-                       forceLegacy: Boolean): Option[DataFrame] = {
-    val m = DedupIndex.loadManifest(dir)
+                       excludeDocs: Option[DataFrame]): Option[DataFrame] = {
     val entries = before match {
       case Some(e) => DedupIndex.priorEntries(dir, e)
-      case None => m.entries
+      case None => DedupIndex.loadManifest(dir).entries
     }
     if (entries.isEmpty) return None
-    val mirrored = !forceLegacy && m.features.contains(MirrorFeature)
-    val base =
-      if (mirrored) {
-        val resigned = DedupIndex.resignedLists(spark, dir,
-          // an entry's own mirror marks docs ITS epoch re-signed from
-          // even-older entries; rows of the entry itself carry that
-          // epoch as _sig_epoch, so `last > _sig_epoch` never drops
-          // them — safe to pass every entry's list, needed when
-          // `before` is None (latest overall)
-          entries)
-        DedupIndex.dropSuperseded(
-          spark.read.parquet(entries.map(e => s"$dir/${e.path}"): _*),
-          excludeDocs.getOrElse(
-            spark.emptyDataFrame.select(lit(0L).as("doc_id")).limit(0)),
-          resigned)
-      } else {
-        val epochs = entries.flatMap(e => e.minEpoch to e.maxEpoch)
-        val latest = DedupIndex.latestSigs(
-          DedupIndex.readSigs(spark, dir, epochs))
-        excludeDocs match {
-          case None => latest
-          case Some(x) => latest.join(x, Seq("doc_id"), "left_anti")
-        }
-      }
+    val base = DedupIndex.dropSuperseded(
+      spark.read.parquet(entries.map(e => s"$dir/${e.path}"): _*),
+      excludeDocs.getOrElse(
+        spark.emptyDataFrame.select(lit(0L).as("doc_id")).limit(0)),
+      // an entry's own mirror marks docs ITS epoch re-signed from
+      // even-older entries; rows of the entry itself carry that epoch
+      // as _sig_epoch, so `last > _sig_epoch` never drops them — safe to
+      // pass every entry's list, needed when `before` is None (latest
+      // overall)
+      DedupIndex.resignedLists(spark, dir, entries))
     Some(base.filter(col("shingle").isNotNull)
       .select(col("doc_id"), col("shingle"), col("n_sh")))
   }
@@ -148,12 +118,11 @@ object ShingleIndex {
     * rows — zero per-doc lookup joins.
     */
   def epochPairs(spark: SparkSession, dir: String, epochId: Long,
-                 threshold: Double, maxDocFreq: Int = 64,
-                 forceLegacy: Boolean = false): DataFrame = {
+                 threshold: Double, maxDocFreq: Int = 64): DataFrame = {
     val newAll = DedupIndex.readSigs(spark, dir, Seq(epochId))
     val newSh = newAll.filter(col("shingle").isNotNull)
     val priorLive = liveRows(spark, dir, Some(epochId),
-      Some(newAll.select(col("doc_id")).distinct()), forceLegacy)
+      Some(newAll.select(col("doc_id")).distinct()))
     // hot-shingle valve over the CUMULATIVE live sets, restricted to
     // shingles this epoch carries (only those can join) — the broadcast
     // semi keeps the df aggregate epoch-bounded, not corpus-bounded
@@ -239,8 +208,7 @@ object ShingleIndex {
     // without this, a train doc re-signed after `epochId` reported
     // both its stale and new sets in the union over epochs, diverging
     // from batch dd10. Broadcast anti-join against the later entries'
-    // tiny resigned/ lists (absent on legacy dirs → unchanged
-    // prospective semantics there).
+    // tiny resigned/ lists.
     val m = DedupIndex.loadManifest(dir)
     val laterResigns = DedupIndex.resignedLists(spark, dir,
       m.entries.filter(_.maxEpoch > epochId))
@@ -251,8 +219,7 @@ object ShingleIndex {
         laterResigns)
       .select(col("doc_id"), col("shingle"))
       .join(broadcast(ids), Seq("doc_id"), "left_anti")
-    val eval_ = liveRows(spark, dir, before = None, excludeDocs = None,
-        forceLegacy = false)
+    val eval_ = liveRows(spark, dir, before = None, excludeDocs = None)
       .getOrElse(sys.error(s"contamination on an empty index at $dir"))
       .join(broadcast(ids), Seq("doc_id"), "left_semi")
       .select(col("doc_id").as("eval_id"), col("shingle"))

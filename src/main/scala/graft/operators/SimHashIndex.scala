@@ -25,7 +25,7 @@ object SimHashIndex {
                   docs: DataFrame): Boolean =
     DedupIndex.appendFrameWithMirrors(spark, dir, epochId,
       DedupQueries.simhash(docs).withColumn("_sig_epoch", lit(epochId)),
-      List(DedupIndex.MirrorFeature), keysAreDistinct = true)
+      keysAreDistinct = true)
 
   private def bucketed(sigs: DataFrame): DataFrame = {
     val bandCols = (0 until 4).map(b =>
@@ -43,8 +43,8 @@ object SimHashIndex {
     * output on the cumulative corpus.
     */
   def epochPairs(spark: SparkSession, dir: String, epochId: Long,
-                 maxDist: Int, forceLegacy: Boolean = false): DataFrame = {
-    val prior = DedupIndex.committedEpochs(dir).filter(_ < epochId)
+                 maxDist: Int): DataFrame = {
+    val priors = DedupIndex.priorEntries(dir, epochId)
     val newS = DedupIndex.readSigs(spark, dir, Seq(epochId))
     val newB = bucketed(newS)
     val within = newB.as("x").join(newB.as("y"),
@@ -52,21 +52,13 @@ object SimHashIndex {
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
         bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).as("hamming"))
-    val mirrored = !forceLegacy && DedupIndex.loadManifest(dir)
-      .features.contains(DedupIndex.MirrorFeature)
     val all =
-      if (prior.isEmpty) within
+      if (priors.isEmpty) within
       else {
-        val priorLive =
-          if (mirrored) {
-            val entries = DedupIndex.priorEntries(dir, epochId)
-            DedupIndex.dropSuperseded(
-              spark.read.parquet(entries.map(e => s"$dir/${e.path}"): _*),
-              newS.select(col("doc_id")),
-              DedupIndex.resignedLists(spark, dir, entries))
-          } else DedupIndex
-            .latestSigs(DedupIndex.readSigs(spark, dir, prior))
-            .join(newS.select(col("doc_id")), Seq("doc_id"), "left_anti")
+        val priorLive = DedupIndex.dropSuperseded(
+          spark.read.parquet(priors.map(e => s"$dir/${e.path}"): _*),
+          newS.select(col("doc_id")),
+          DedupIndex.resignedLists(spark, dir, priors))
         val cross = newB.as("x").join(bucketed(priorLive).as("y"),
             col("x.band") === col("y.band") && col("x.bkt") === col("y.bkt") &&
               col("x.doc_id") =!= col("y.doc_id"))

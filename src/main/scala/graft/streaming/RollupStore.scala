@@ -45,14 +45,10 @@ object RollupStore {
       else {
         val cur = dir.resolve(Files.readString(ptr).trim)
         val ledger = cur.resolve("_epochs")
-        // pre-r2 layout kept the ledger at the top level; fall back so an
-        // upgraded store cannot double-apply a redelivered additive epoch
-        val legacy = dir.resolve("_epochs")
-        val src = if (Files.exists(ledger)) Some(ledger)
-          else if (Files.exists(legacy)) Some(legacy) else None
-        val s: Set[Long] = src.map(p =>
-          Files.readString(p).split("\n").filter(_.nonEmpty).map(_.toLong).toSet)
-          .getOrElse(Set.empty)
+        val s: Set[Long] =
+          if (!Files.exists(ledger)) Set.empty
+          else Files.readString(ledger).split("\n").filter(_.nonEmpty)
+            .map(_.toLong).toSet
         (Some(spark.read.parquet(cur.toString)), s)
       }
     if (seen.contains(epochId)) return false

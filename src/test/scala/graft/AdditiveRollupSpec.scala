@@ -122,21 +122,6 @@ class AdditiveRollupSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.rollup.maxRows")
   }
 
-  test("pre-r2 top-level ledger is honored: legacy redelivered epoch stays a no-op") {
-    val dir = tmpDir("ar-legacy")
-    val combine = Seq("n" -> AdditiveRollup.add)
-    def d(v: Long) = Seq((1L, v)).toDF("k", "n")
-    AdditiveRollup.upsert(spark, dir, d(5L), Seq("k"), 0L, combine)
-    // simulate a store written by the old layout: ledger at top level,
-    // none inside the current v-dir
-    val p = java.nio.file.Paths.get(dir)
-    val cur = p.resolve(java.nio.file.Files.readString(p.resolve("PTR")).trim)
-    java.nio.file.Files.move(cur.resolve("_epochs"), p.resolve("_epochs"))
-    assert(!AdditiveRollup.upsert(spark, dir, d(5L), Seq("k"), 0L, combine),
-      "legacy-ledger epoch must not double-apply")
-    assert(AdditiveRollup.read(spark, dir).head.getLong(1) === 5L)
-  }
-
   test("domain stats via the ingest sink across restarts == from-scratch aggregate") {
     val cfg = FeedGen.Config(seed = 21L, n = 6000L, nDomains = 25,
       pathsPerDomain = 6, dupRate = 0.05, evolveAt = 4000L, segments = 4)

@@ -9,9 +9,8 @@ import graft.operators.DedupIndex
 /** The directory-bucketed fold layout (round-4 verdict missing #3):
   * an epoch fold's index candidate side must read ONLY the buckets/ sb
   * dirs the epoch's own band-buckets hash into, must cross zero
-  * shuffles, and must stay pair-for-pair equal to the legacy fold shape
-  * (recompute buckets from sigs + full-index latest-per-doc groupBy)
-  * under re-signs, deletes and compaction.
+  * shuffles, and must stay pair-for-pair equal to the batch MinHash+LSH
+  * op over the live corpus under re-signs, deletes and compaction.
   */
 class BucketedFoldSpec extends SparkSpec {
 
@@ -85,21 +84,48 @@ class BucketedFoldSpec extends SparkSpec {
     }
   }
 
-  test("bucketed fold == legacy fold under re-signs, deletes and compaction") {
+  test("bucketed fold == batch MinHash+LSH over the live corpus under re-signs, deletes and compaction") {
+    import spark.implicits._
     val dir = tmpDir("bf-equiv")
     val e0 = docs.filter(col("doc_id") % 3 === 0)
-    val e1 = docs.filter(col("doc_id") % 3 === 1)
-    val e2 = docs.filter(col("doc_id") % 3 === 2)
-    DedupIndex.appendEpoch(spark, dir, 0L, e0)
-    // epoch 1: new docs + re-sign half of epoch 0's + delete a third
+    // epoch 1: new docs + re-sign half of epoch 0's with revised text +
+    // delete a third; epoch 3 (after compaction) re-signs every 7th doc,
+    // resurrecting some deleted ones
     val resign = e0.filter(col("doc_id") % 2 === 0)
+      .withColumn("text", concat(col("text"), lit(" revised")))
     val dels = e0.filter(col("doc_id") % 6 === 3).select(col("doc_id"))
-    DedupIndex.appendEpoch(spark, dir, 1L, e1.unionByName(resign), Some(dels))
-    DedupIndex.appendEpoch(spark, dir, 2L, e2)
-    for (e <- 1L to 2L) {
-      val b = pairSet(DedupIndex.epochPairs(spark, dir, e, useBuckets = true))
-      val l = pairSet(DedupIndex.epochPairs(spark, dir, e, useBuckets = false))
-      assert(b === l, s"epoch $e fold paths diverge")
+    val log = Seq(
+      (e0, None),
+      (docs.filter(col("doc_id") % 3 === 1).unionByName(resign), Some(dels)),
+      (docs.filter(col("doc_id") % 3 === 2), None),
+      (docs.filter(col("doc_id") % 7 === 0), None))
+    // every upsert and delete as (doc_id, text, epoch); null text = delete
+    val events = log.zipWithIndex.map { case ((up, del), e) =>
+      val u = up.select(col("doc_id"), col("text"), lit(e.toLong).as("epoch"))
+      del.fold(u)(d => u.unionByName(d.select(col("doc_id"),
+        lit(null).cast("string").as("text"), lit(e.toLong).as("epoch"))))
+    }.reduce(_ unionByName _)
+    // batch oracle for epoch e: MinHash+LSH over the corpus live as of e
+    // (latest text per doc, deleted docs removed), restricted to pairs
+    // with at least one doc signed in e
+    def oracle(e: Long): Set[(Long, Long, String)] = {
+      val latest = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("doc_id")).orderBy(col("epoch").desc)
+      val live = events.filter(col("epoch") <= e)
+        .withColumn("rn", row_number().over(latest))
+        .filter(col("rn") === 1 && col("text").isNotNull)
+        .select(col("doc_id"), col("text"))
+      val signed = events.filter(col("epoch") === e)
+        .select(col("doc_id")).as[Long].collect().toSet
+      pairSet(graft.analytics.DedupQueries.minhashLshPairs(live))
+        .filter(p => signed(p._1) || signed(p._2))
+    }
+    def append(e: Int): Unit =
+      DedupIndex.appendEpoch(spark, dir, e.toLong, log(e)._1, log(e)._2)
+    (0 to 2).foreach(append)
+    for (e <- 0L to 2L) {
+      val b = pairSet(DedupIndex.epochPairs(spark, dir, e))
+      assert(b === oracle(e), s"epoch $e fold diverges from the batch op")
       if (e == 2L) assert(b.nonEmpty)
     }
     // compaction folds the buckets side table too: the fold of a fresh
@@ -107,10 +133,10 @@ class BucketedFoldSpec extends SparkSpec {
     assert(DedupIndex.compact(spark, dir))
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(dir, "buckets", "compact-0-1")))
-    DedupIndex.appendEpoch(spark, dir, 3L, docs.filter(col("doc_id") % 7 === 0))
-    val b3 = pairSet(DedupIndex.epochPairs(spark, dir, 3L, useBuckets = true))
-    val l3 = pairSet(DedupIndex.epochPairs(spark, dir, 3L, useBuckets = false))
-    assert(b3 === l3)
+    append(3)
+    val b3 = pairSet(DedupIndex.epochPairs(spark, dir, 3L))
+    assert(b3 === oracle(3L))
     assert(b3.nonEmpty, "re-signed docs must still pair after compaction")
+    graft.analytics.SessionCaches.release(spark)
   }
 }

@@ -93,12 +93,6 @@ class IncrementalDedupSpec extends SparkSpec {
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(ps(batch).nonEmpty)
     assert(ps(all) === ps(batch))
-    // the mirrored supersession path equals the legacy groupBy anchor
-    val m2 = (1 to 2).map(e => ps(EmbeddingIndex.epochPairs(spark, dir,
-      e.toLong, 0.3))).reduce(_ ++ _)
-    val l2 = (1 to 2).map(e => ps(EmbeddingIndex.epochPairs(spark, dir,
-      e.toLong, 0.3, forceLegacy = true))).reduce(_ ++ _)
-    assert(m2 === l2)
     graft.analytics.SessionCaches.release(spark)
   }
 
@@ -115,12 +109,6 @@ class IncrementalDedupSpec extends SparkSpec {
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(ps(batch).nonEmpty)
     assert(ps(all) === ps(batch))
-    // the mirrored supersession path equals the legacy groupBy anchor
-    val m2 = (1 to 2).map(e => ps(SimHashIndex.epochPairs(spark, dir,
-      e.toLong, 3))).reduce(_ ++ _)
-    val l2 = (1 to 2).map(e => ps(SimHashIndex.epochPairs(spark, dir,
-      e.toLong, 3, forceLegacy = true))).reduce(_ ++ _)
-    assert(m2 === l2)
     graft.analytics.SessionCaches.release(spark)
   }
 
