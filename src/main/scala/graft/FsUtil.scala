@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, NoSuchFileException, Path, Paths}
 
 /** Small shared filesystem helpers (one definition for the recursive
   * delete the benches, scratch dirs and store GC all need).
@@ -50,13 +50,17 @@ object FsUtil {
   def scratchDir(prefix: String): String =
     Files.createTempDirectory(scratchRoot, prefix).toString
 
-  /** Delete `dir` and everything under it; missing paths are a no-op. */
+  /** Delete `dir` and everything under it; missing paths, also ones a
+    * concurrent delete removes mid-walk, are a no-op.
+    */
   def deleteTree(dir: Path): Unit =
-    if (Files.exists(dir))
-      scala.util.Using.resource(Files.walk(dir)) { st =>
-        st.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => { Files.deleteIfExists(p); () })
-      }
+    try scala.util.Using.resource(Files.walk(dir)) { st =>
+      st.sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => { Files.deleteIfExists(p); () })
+    } catch {
+      case e: Exception if e.isInstanceOf[NoSuchFileException] ||
+        e.getCause.isInstanceOf[NoSuchFileException] => ()
+    }
 
   def deleteTree(dir: String): Unit = deleteTree(Paths.get(dir))
 }

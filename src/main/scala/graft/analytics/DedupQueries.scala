@@ -355,8 +355,7 @@ object DedupQueries {
       // files — materialize it concurrently with epoch 1's append
       // (guide §2.6) so consumers get it cache-warm. It joins the memo
       // only once the whole build has succeeded: a failed build must
-      // not leave a memo pointing into an abandoned index dir. Neither
-      // task may call SessionCaches: this build runs under its monitor
+      // not leave a memo pointing into an abandoned index dir
       val p0 = graft.operators.DedupIndex.epochPairs(s, ix, 0L).persist()
       try graft.Parallel.all(Seq(
         () => { p0.count(); () },

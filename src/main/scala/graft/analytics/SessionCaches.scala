@@ -32,7 +32,18 @@ object SessionCaches {
   // run scope as the keyed DataFrame memos: released by [[release]], so
   // an in-place data rewrite can never serve stale driver-side state
   // past the run boundary
-  private val valReg = mutable.Map[SparkSession, mutable.Map[String, Any]]()
+  private val valReg = mutable.Map[SparkSession, mutable.Map[String, Once]]()
+
+  /** One key's value, built under this cell's own monitor: callers of
+    * the key wait for one build, and a failed build leaves the cell
+    * empty for the next caller.
+    */
+  private final class Once {
+    private var value: Option[Any] = None
+    def apply(build: => Any): Any = synchronized {
+      value.getOrElse { val v = build; value = Some(v); v }
+    }
+  }
 
   /** Bound on tracked intermediates per session: a caller that never
     * releases (direct DedupQueries API use without GraftSql.release)
@@ -96,13 +107,21 @@ object SessionCaches {
     * Nothing to unpersist — [[release]] just forgets the entry. The
     * round-4 fix for s02/s04 retraining identical k-means centroids
     * twice per suite run.
+    *
+    * `build` runs under its key's own once-cell, not the registry
+    * monitor: callers of the same key wait for one build, while
+    * [[track]], [[memo]] and other keys never block on it — so `build`
+    * may call them from any thread it starts. A failed build is not
+    * memoized; the next caller of the key builds again.
     */
-  def memoValue[T](spark: SparkSession, key: String)(build: => T): T =
-    synchronized {
+  def memoValue[T](spark: SparkSession, key: String)(build: => T): T = {
+    val once = synchronized {
       valReg.filterInPlace((s, _) => !s.sparkContext.isStopped)
-      val m = valReg.getOrElseUpdate(spark, mutable.Map())
-      m.getOrElseUpdate(key, build).asInstanceOf[T]
+      valReg.getOrElseUpdate(spark, mutable.Map())
+        .getOrElseUpdate(key, new Once)
     }
+    once(build).asInstanceOf[T]
+  }
 
   /** Unpersist the anonymous intermediates of `spark`, keeping keyed
     * memo entries — the between-queries release.

@@ -1,9 +1,10 @@
 package graft.operators
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.analytics.DedupQueries
+import graft.table.Commit
 
 /** Incremental near-dup INDEX maintenance: a persisted MinHash
   * signature table, appended per ingest epoch, that each ARRIVING epoch
@@ -23,8 +24,11 @@ import graft.analytics.DedupQueries
   * Layout under `indexDir` — the same snapshot-commit discipline as
   * LakeTable, because at ingest cadence the index IS a table:
   *   meta/vN.json + meta/CURRENT   — manifest of committed entries,
-  *     swapped atomically; a crashed append leaves only an orphan sig
-  *     dir the retry overwrites, and a redelivered epoch is a no-op.
+  *     version N created put-if-absent ([[graft.table.Commit]]); a
+  *     crashed or losing append leaves only orphan dirs of its own
+  *     token, which the retry does not reuse and [[vacuum]] reclaims,
+  *     and a redelivered epoch is a no-op. Every entry dir below is
+  *     named `…-{token}` by the attempt that wrote it, written once.
   *   sigs/epoch=N | sigs/compact-A-B — (doc_id, mh_0..mh_31) parquet;
   *     one dir per epoch until [[autoMaintain]]'s size-TIERED merges
   *     ([[compactRange]]) fold adjacent runs into range entries (10^4
@@ -90,12 +94,12 @@ object DedupIndex {
       entries.exists(e => epochId >= e.minEpoch && epochId <= e.maxEpoch)
   }
 
-  private def sigsRoot(dir: String): Path = Paths.get(dir, "sigs")
-  private def metaDir(dir: String): Path = Paths.get(dir, "meta")
-  private def currentPtr(dir: String): Path = metaDir(dir).resolve("CURRENT")
-  private def bucketsRoot(dir: String): Path = Paths.get(dir, "buckets")
-  private def resignedRoot(dir: String): Path = Paths.get(dir, "resigned")
-  private def bloomRoot(dir: String): Path = Paths.get(dir, "bloom")
+  /** The layout's roots: an entry's `sigs/…` path is mirrored under
+    * each of the others ([[side]]).
+    */
+  private val Sides = Seq("sigs", "buckets", "resigned", "bloom")
+  private def side(dir: String, rel: String, root: String): Path =
+    Paths.get(dir, rel.replaceFirst("^sigs/", s"$root/"))
 
   /** bloom/epoch=N | bloom/compact-A-B — one serialized Bloom filter
     * FILE per entry over the entry's key set (fpp 1%, sized by exact
@@ -109,11 +113,8 @@ object DedupIndex {
     * mirror write) disappear entirely. False positives only cost an
     * unnecessary entry scan; false negatives cannot happen; a missing
     * sidecar reads as "might overlap" (conservative full inclusion).
-    */
-  private def bloomPath(dir: String, rel: String): Path =
-    Paths.get(dir, rel.replaceFirst("^sigs/", "bloom/"))
-
-  /** `keysAreDistinct`: the frame has at most one row per key (every
+    *
+    * `keysAreDistinct`: the frame has at most one row per key (every
     * modality except the shingle store) — skips the dedup pass, so the
     * sidecar costs one metadata-count plus one narrow aggregation job.
     * Duplicate inserts would not corrupt the filter either way; the
@@ -135,19 +136,15 @@ object DedupIndex {
         if (n == 0L)
           org.apache.spark.util.sketch.BloomFilter.create(64L, 0.01)
         else ids.stat.bloomFilter(keyCol, n, 0.01)
-      Files.createDirectories(bloomRoot(dir))
-      val tmp = bloomRoot(dir)
-        .resolve(s".tmp-${rel.replaceFirst("^sigs/", "")}")
-      scala.util.Using.resource(Files.newOutputStream(tmp))(bf.writeTo)
-      val dst = bloomPath(dir, rel)
-      Files.deleteIfExists(dst)
-      Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
+      Files.createDirectories(Paths.get(dir, "bloom"))
+      scala.util.Using.resource(Files.newOutputStream(side(dir, rel, "bloom"),
+        StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE))(bf.writeTo)
     } finally if (!keysAreDistinct) ids.unpersist()
   }
 
   private def loadBloomSidecar(dir: String, entry: IndexEntry)
       : Option[org.apache.spark.util.sketch.BloomFilter] = {
-    val p = bloomPath(dir, entry.path)
+    val p = side(dir, entry.path, "bloom")
     if (!Files.exists(p)) None
     else Some(scala.util.Using.resource(Files.newInputStream(p))(
       org.apache.spark.util.sketch.BloomFilter.readFrom))
@@ -224,24 +221,20 @@ object DedupIndex {
   private def carriesBuckets(sigs: DataFrame, keyCol: String): Boolean =
     keyCol == "doc_id" && sigs.columns.contains("mh_0")
 
-  /** An entry's buckets/ side-table root (the mirror of its sigs path). */
-  private def bucketsDir(dir: String, entry: IndexEntry): Path =
-    Paths.get(dir, entry.path.replaceFirst("^sigs/", "buckets/"))
-
   /** The sb dirs an entry's bucket side table lives under (leaf paths,
     * existence-checked: a small epoch may populate only some of the
     * [[BucketDirs]] fan).
     */
   private def bucketLeafDirs(dir: String, entry: IndexEntry,
                              sbs: Set[Long]): Seq[String] =
-    sbs.toSeq.sorted.map(k => bucketsDir(dir, entry).resolve(s"sb=$k"))
+    sbs.toSeq.sorted.map(k => side(dir, entry.path, "buckets").resolve(s"sb=$k"))
       .filter(Files.exists(_)).map(_.toString)
 
   /** sb values present in an entry's buckets dir — read from the
     * directory listing, no Spark job.
     */
   private def entrySbs(dir: String, entry: IndexEntry): Set[Long] = {
-    val root = bucketsDir(dir, entry)
+    val root = side(dir, entry.path, "buckets")
     if (!Files.exists(root)) Set.empty
     else graft.FsUtil.listDir(root)(_
       .map(_.getFileName.toString)
@@ -250,30 +243,8 @@ object DedupIndex {
   }
 
   def loadManifest(dir: String): IndexManifest =
-    if (!Files.exists(currentPtr(dir))) IndexManifest(0L, Nil)
-    else {
-      val v = Files.readString(currentPtr(dir)).trim
-      Serialization.read[IndexManifest](
-        Files.readString(metaDir(dir).resolve(s"$v.json")))
-    }
-
-  /** Write manifest vN then atomically swap CURRENT — the LakeTable
-    * commit protocol (single-writer ingest posture; `expectVersion`
-    * catches a concurrent committer).
-    */
-  private def commitManifest(dir: String, m: IndexManifest,
-                             expectVersion: Long): Unit = {
-    val cur = loadManifest(dir)
-    require(cur.version == expectVersion,
-      s"concurrent index commit: CURRENT=v${cur.version}, expected v$expectVersion")
-    Files.createDirectories(metaDir(dir))
-    Files.writeString(metaDir(dir).resolve(s"v${m.version}.json"),
-      Serialization.write(m))
-    val tmp = metaDir(dir).resolve(s".CURRENT.tmp.${m.version}")
-    Files.writeString(tmp, s"v${m.version}")
-    Files.move(tmp, currentPtr(dir), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+    Commit.latest(dir).fold(IndexManifest(0L, Nil))(v =>
+      Serialization.read[IndexManifest](Commit.read(dir, v)))
 
   /** Epoch ids present in the index, ascending. */
   def committedEpochs(dir: String): Seq[Long] = loadManifest(dir).epochs
@@ -281,8 +252,9 @@ object DedupIndex {
   /** Compute `docs`' signatures (doc_id, text → mh_0..mh_31) and commit
     * them as `epochId`. Idempotent: a redelivered epoch returns false
     * and writes nothing — the retry contract of an at-least-once feed.
-    * A sig dir left by a CRASHED attempt (written but never committed)
-    * is overwritten by the retry — only the manifest defines existence.
+    * Dirs left by a CRASHED attempt (written but never committed) are
+    * never reused — the retry writes under a fresh token, and only the
+    * manifest defines existence.
     *
     * `deletes` (doc_id rows), when given, commit TOMBSTONE signatures
     * for docs deleted in this epoch: an all-null signature row that
@@ -314,8 +286,9 @@ object DedupIndex {
 
   /** Storage-layer append shared by every modality on this layer:
     * commit `df` (already carrying `_sig_epoch`) as `epochId` under the
-    * manifest protocol, plus the entry's side artifacts, all derived
-    * from the WRITTEN parquet (the source is computed once):
+    * manifest protocol, plus the entry's side artifacts, all written to
+    * this attempt's own paths and derived from the WRITTEN parquet (the
+    * source is computed once):
     *  - buckets/ (minhash frames only, [[carriesBuckets]]): band rows
     *    partitioned by directory bucket — the fold's pruned+broadcast
     *    candidate join reads only matching sb dirs. Published even when
@@ -338,59 +311,47 @@ object DedupIndex {
       keysAreDistinct: Boolean = false): Boolean = {
     val m = loadManifest(dir)
     if (m.isCommitted(epochId)) return false
-    val rel = s"sigs/epoch=$epochId"
-    Files.createDirectories(sigsRoot(dir))
-    val tmpSigs = sigsRoot(dir).resolve(s".tmp-epoch-$epochId")
-    df.write.mode("overwrite").parquet(tmpSigs.toString)
-    val back = spark.read.parquet(tmpSigs.toString)
+    val rel = s"sigs/epoch=$epochId-${Commit.token()}"
+    df.write.parquet(Paths.get(dir, rel).toString)
+    val back = spark.read.parquet(Paths.get(dir, rel).toString)
     // the side artifacts share no state — concurrent jobs, so the
-    // append's wall is the slowest of them, not their sum. Each returns
-    // the tmp dir it stages for publishing (the Bloom sidecar moves its
-    // own file into place); the probe reads only PRIOR entries' sidecars
-    val staged = graft.Parallel.all[Option[(Path, String)]](Seq(
-      () => if (!carriesBuckets(back, keyCol)) None else {
-        val tmp = bucketsRoot(dir).resolve(s".tmp-epoch-$epochId")
-        Files.createDirectories(bucketsRoot(dir))
-        bucketRows(back).write.mode("overwrite")
-          .partitionBy("sb").parquet(tmp.toString)
-        Some(tmp -> rel.replaceFirst("^sigs/", "buckets/"))
-      },
-      () => { writeBloomSidecar(dir, rel, back, keyCol, keysAreDistinct); None },
+    // append's wall is the slowest of them, not their sum; the probe
+    // reads only PRIOR entries' sidecars
+    graft.Parallel.all[Unit](Seq(
+      () => if (carriesBuckets(back, keyCol))
+        bucketRows(back).write.partitionBy("sb")
+          .parquet(side(dir, rel, "buckets").toString),
+      () => writeBloomSidecar(dir, rel, back, keyCol, keysAreDistinct),
       () => {
         val overlap = overlappingEntries(spark, dir, m.entries,
           back.select(col(keyCol)), keyCol)
-        if (overlap.isEmpty) None
-        else {
-          val tmp = resignedRoot(dir).resolve(s".tmp-epoch-$epochId")
-          Files.createDirectories(resignedRoot(dir))
+        if (overlap.nonEmpty) {
+          val mirror = side(dir, rel, "resigned")
           spark.read.parquet(overlap.map(e => s"$dir/${e.path}"): _*)
             .select(col(keyCol))
             .join(broadcast(back.select(col(keyCol)).distinct()),
               Seq(keyCol), "left_semi")
             .distinct()
             .withColumn("last", lit(epochId))
-            .write.mode("overwrite").parquet(tmp.toString)
+            .write.parquet(mirror.toString)
           // a Bloom false positive can select entries that share
           // nothing: never publish an EMPTY mirror (absence already
           // means empty, and keeps vacuum/reader dir counts
           // deterministic)
-          if (spark.read.parquet(tmp.toString).head(1).isEmpty) {
-            graft.FsUtil.deleteTree(tmp)
-            None
-          } else Some(tmp -> rel.replaceFirst("^sigs/", "resigned/"))
+          if (spark.read.parquet(mirror.toString).head(1).isEmpty)
+            graft.FsUtil.deleteTree(mirror)
         }
       }))
-    // publish the side artifacts, then the sigs, then commit — a crash
-    // before the manifest swap leaves only orphans the retry overwrites
-    (staged.flatten :+ (tmpSigs -> rel)).foreach { case (tmp, r) =>
-      val dst = Paths.get(dir, r)
-      graft.FsUtil.deleteTree(dst)
-      Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
-    }
-    commitManifest(dir, IndexManifest(m.version + 1,
-      m.entries :+ IndexEntry(epochId, epochId, rel)), m.version)
+    commit(dir, IndexManifest(m.version + 1,
+      m.entries :+ IndexEntry(epochId, epochId, rel)))
     true
   }
+
+  /** Commit `m` put-if-absent: the loser of a race for `m.version` fails
+    * with "concurrent commit".
+    */
+  private def commit(dir: String, m: IndexManifest): Unit =
+    Commit.put(dir, m.version, Serialization.write(m))
 
   /** Read the signatures of exactly `epochs` — entry paths resolved NOW
     * and PINNED into the plan, so a later append (or compaction) can
@@ -482,8 +443,8 @@ object DedupIndex {
     require(ids == (ids.min to ids.max),
       s"compactRange needs a gap-free epoch range, got $ids")
     val atPrefix = lo == sorted.head.minEpoch
-    val rel = s"sigs/compact-$lo-$hi"
-    val tmp = sigsRoot(dir).resolve(s".tmp-compact-${m.version + 1}")
+    val rel = s"sigs/compact-$lo-$hi-${Commit.token()}"
+    val dst = Paths.get(dir, rel)
     // physical supersession WITHIN the range: only each doc's latest
     // row in [lo, hi] survives (rows keep `_sig_epoch`, so global LWW
     // still resolves against entries outside the range)
@@ -494,44 +455,27 @@ object DedupIndex {
       if (atPrefix) // no older entry can resurrect a tombstoned doc
         folded.filter(!payload.map(col(_).isNull).reduce(_ && _))
       else folded
-    kept.write.mode("overwrite").parquet(tmp.toString)
-    val dst = Paths.get(dir, rel)
-    graft.FsUtil.deleteTree(dst)
-    Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
+    kept.write.parquet(dst.toString)
     // minhash indexes also fold the buckets/ side table (tombstone rows
     // produce no bucket rows)
-    if (carriesBuckets(folded, keyCol)) {
-      val bRel = rel.replaceFirst("^sigs/", "buckets/")
-      val bTmp = bucketsRoot(dir).resolve(s".tmp-compact-${m.version + 1}")
-      Files.createDirectories(bucketsRoot(dir))
-      bucketRows(spark.read.parquet(dst.toString))
-        .write.mode("overwrite").partitionBy("sb").parquet(bTmp.toString)
-      val bDst = Paths.get(dir, bRel)
-      graft.FsUtil.deleteTree(bDst)
-      Files.move(bTmp, bDst, StandardCopyOption.ATOMIC_MOVE)
-    }
+    if (carriesBuckets(folded, keyCol))
+      bucketRows(spark.read.parquet(dst.toString)).write.partitionBy("sb")
+        .parquet(side(dir, rel, "buckets").toString)
     // merged bloom sidecar, recomputed over the folded output
     writeBloomSidecar(dir, rel, spark.read.parquet(dst.toString), keyCol)
     // mid-range merge: carry the combined resigned/ list forward
     if (!atPrefix) {
       val lists = run
-        .map(e => Paths.get(dir, e.path.replaceFirst("^sigs/", "resigned/")))
+        .map(e => side(dir, e.path, "resigned"))
         .filter(Files.exists(_)).map(_.toString)
-      if (lists.nonEmpty) {
-        val rTmp = resignedRoot(dir).resolve(s".tmp-compact-${m.version + 1}")
-        Files.createDirectories(resignedRoot(dir))
+      if (lists.nonEmpty)
         spark.read.parquet(lists: _*)
           .groupBy(col(keyCol)).agg(max(col("last")).as("last"))
-          .write.mode("overwrite").parquet(rTmp.toString)
-        val rDst = Paths.get(dir, rel.replaceFirst("^sigs/", "resigned/"))
-        graft.FsUtil.deleteTree(rDst)
-        Files.move(rTmp, rDst, StandardCopyOption.ATOMIC_MOVE)
-      }
+          .write.parquet(side(dir, rel, "resigned").toString)
     }
     val merged = (sorted.filterNot(run.contains) :+
       IndexEntry(lo, hi, rel)).sortBy(_.minEpoch)
-    commitManifest(dir, IndexManifest(m.version + 1, merged.toList),
-      m.version)
+    commit(dir, IndexManifest(m.version + 1, merged.toList))
     true
   }
 
@@ -597,59 +541,30 @@ object DedupIndex {
     * enforces for the lake table (one manifest per epoch otherwise
     * accumulates forever on a sink-maintained index).
     */
-  def expireManifests(dir: String, keepLast: Int = 64): Int = {
-    require(keepLast >= 1)
-    if (!Files.exists(currentPtr(dir))) return 0
-    val cur = loadManifest(dir).version
-    var deleted = 0
-    graft.FsUtil.listDir(metaDir(dir))(_
-      .filter { pth =>
-        val n = pth.getFileName.toString
-        n.startsWith("v") && n.endsWith(".json") &&
-          n.stripPrefix("v").stripSuffix(".json").toLong <= cur - keepLast
-      }.toList)
-      .foreach { pth => Files.deleteIfExists(pth); deleted += 1 }
-    deleted
-  }
+  def expireManifests(dir: String, keepLast: Int = 64): Int =
+    Commit.expire(dir, keepLast)
 
-  /** Delete sig dirs not referenced by the CURRENT manifest and older
+  /** Delete sig dirs not referenced by the latest manifest and older
     * than `graceMs` (protects pinned-path plans still running over the
-    * pre-compaction layout, and in-flight appends). Returns dirs
-    * deleted.
+    * pre-compaction layout, and in-flight appends); this also reclaims
+    * the dirs of crashed and losing attempts. Returns dirs deleted.
     */
   def vacuum(dir: String, graceMs: Long = 3600000L): Int = {
-    if (!Files.exists(sigsRoot(dir))) return 0
+    if (!Files.exists(Paths.get(dir, "sigs"))) return 0
     val entries = loadManifest(dir).entries
     // referenced state: manifest sig paths plus their buckets/ and
     // resigned/ mirrors (a tiered-merged range carries a combined
     // resigned list; a full-prefix compaction has no mirror — nothing
     // to keep)
-    val referenced = entries
-      .flatMap(e => Seq(Paths.get(dir, e.path),
-        Paths.get(dir, e.path.replaceFirst("^sigs/", "buckets/")),
-        Paths.get(dir, e.path.replaceFirst("^sigs/", "resigned/")),
-        bloomPath(dir, e.path)))
+    val referenced = entries.flatMap(e => Sides.map(side(dir, e.path, _)))
       .map(_.toAbsolutePath.normalize).toSet
     val cutoff = System.currentTimeMillis() - graceMs
-    var deleted = 0
-    Seq(sigsRoot(dir), bucketsRoot(dir), resignedRoot(dir))
-      .filter(Files.exists(_)).foreach { root =>
-        graft.FsUtil.listDir(root)(_
-          .filter(p => Files.isDirectory(p))
-          .filter(p => !referenced.contains(p.toAbsolutePath.normalize))
-          .filter(p => Files.getLastModifiedTime(p).toMillis < cutoff)
-          .toList)
-          .foreach { p => graft.FsUtil.deleteTree(p); deleted += 1 }
-      }
-    // bloom sidecars are FILES, not dirs — same referenced/grace rules
-    if (Files.exists(bloomRoot(dir)))
-      graft.FsUtil.listDir(bloomRoot(dir))(_
-        .filter(p => Files.isRegularFile(p))
+    // entries are dirs, except the bloom sidecar FILES — same rules
+    Sides.map(Paths.get(dir, _)).filter(Files.exists(_)).flatMap(root => graft.FsUtil.listDir(root)(_
         .filter(p => !referenced.contains(p.toAbsolutePath.normalize))
         .filter(p => Files.getLastModifiedTime(p).toMillis < cutoff)
-        .toList)
-        .foreach { p => Files.deleteIfExists(p); deleted += 1 }
-    deleted
+        .toList))
+      .count { p => graft.FsUtil.deleteTree(p); true }
   }
 
   /** Latest row per key — the index's LWW over `_sig_epoch`, applied
@@ -691,7 +606,7 @@ object DedupIndex {
   private[operators] def resignedLists(spark: SparkSession, dir: String,
                             entries: Seq[IndexEntry]): Option[DataFrame] = {
     val paths = entries
-      .map(e => Paths.get(dir, e.path.replaceFirst("^sigs/", "resigned/")))
+      .map(e => side(dir, e.path, "resigned"))
       .filter(Files.exists(_)).map(_.toString)
     if (paths.isEmpty) None else Some(spark.read.parquet(paths: _*))
   }
@@ -780,7 +695,7 @@ object DedupIndex {
         // filters by Files.exists, so an entry MISSING its root would
         // silently drop all cross-epoch pairs against it — fail loud
         val unbucketed = (eEntry :: priors)
-          .filterNot(e => Files.exists(bucketsDir(dir, e)))
+          .filterNot(e => Files.exists(side(dir, e.path, "buckets")))
         require(unbucketed.isEmpty,
           s"index at $dir has no buckets/ layout for entries " +
             s"${unbucketed.map(_.path).mkString(", ")} - rebuild it")

@@ -1,9 +1,9 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.Paths
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.analytics.SimilarityQueries
+import graft.table.Commit
 
 /** Persisted IVF centroid index: train once, assign every arriving
   * epoch — the [[EmbeddingIndex]] maintenance pattern applied to the
@@ -15,12 +15,15 @@ import graft.analytics.SimilarityQueries
   * vectors.
   *
   * Layout under `dir` — the index is K (cid, vector) rows, replaced
-  * whole on retrain, so the commit protocol is a single versioned
-  * parquet + atomic CURRENT swap (no entry manifest needed: there is no
-  * epoch history to fold, unlike the signature indexes):
-  *   cents-vN.parquet — (cid BIGINT, cv ARRAY<DOUBLE>), K rows
-  *   CURRENT          — "vN", swapped atomically; readers pin the
-  *                      version they opened
+  * whole on retrain, so each version names a single parquet (no entry
+  * manifest needed: there is no epoch history to fold, unlike the
+  * signature indexes):
+  *   meta/vN.json     — the name of version N's parquet, created
+  *                      put-if-absent ([[graft.table.Commit]]); readers
+  *                      pin the version they opened
+  *   meta/CURRENT     — read hint
+  *   cents-vN-{token}.parquet — (cid BIGINT, cv ARRAY<DOUBLE>), K rows,
+  *                      written once by one attempt at version N
   *
   * Reference analog: the maintained aggregate philosophy of
   * /root/reference/convoetl/loaders/sqlite.py:205-236 — persist the
@@ -29,48 +32,36 @@ import graft.analytics.SimilarityQueries
   */
 object IvfCentroids {
 
-  private def currentPtr(dir: String) = Paths.get(dir, "CURRENT")
-
-  /** Persist `cents` as the new CURRENT centroid set (atomic swap;
-    * concurrent readers keep the version they pinned). Returns the
-    * committed version.
+  /** Persist `cents` as the new latest centroid set (concurrent readers
+    * keep the version they pinned). Returns the committed version.
     */
   def persist(spark: SparkSession, dir: String,
               cents: Seq[(Long, Array[Double])]): Long = {
     require(cents.nonEmpty, "empty centroid set")
-    Files.createDirectories(Paths.get(dir))
-    val v = currentVersion(dir).getOrElse(0L) + 1L
     import spark.implicits._
-    val tmp = Paths.get(dir, s".tmp-cents-v$v")
-    cents.toDF("cid", "cv").coalesce(1)
-      .write.mode("overwrite").parquet(tmp.toString)
-    val dst = Paths.get(dir, s"cents-v$v.parquet")
-    graft.FsUtil.deleteTree(dst)
-    Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
-    commitCurrent(dir, v)
+    commitFrame(dir, cents.toDF("cid", "cv"))
+  }
+
+  /** Write `df` as the parquet of the next version and commit it: a
+    * writer that lost the race for that version fails with "concurrent
+    * commit", and its file is never one a committed version names.
+    */
+  private def commitFrame(dir: String, df: DataFrame): Long = {
+    val v = Commit.latest(dir).getOrElse(0L) + 1L
+    Commit.attempt(dir, v) {
+      val name = s"cents-v$v-${Commit.token()}.parquet"
+      df.coalesce(1).write.parquet(Paths.get(dir, name).toString)
+      name
+    }
     v
   }
 
-  /** Swap CURRENT to `v` with a commitManifest-style expected-version
-    * check: two concurrent writers that both chose `v` would otherwise
-    * deleteTree each other's committed parquet and last-wins the swap —
-    * a lost retrain, or a reader seeing a vanished version. The loser
-    * now fails loudly instead (single-writer posture, like the
-    * signature indexes).
-    */
-  private def commitCurrent(dir: String, v: Long): Unit = {
-    val cur = currentVersion(dir).getOrElse(0L)
-    require(cur == v - 1,
-      s"concurrent centroid commit at $dir: CURRENT=v$cur, expected v${v - 1}")
-    val ptmp = Paths.get(dir, s".CURRENT.tmp.$v")
-    Files.writeString(ptmp, s"v$v")
-    Files.move(ptmp, currentPtr(dir), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+  /** The parquet of the latest committed version. */
+  private def latestFile(dir: String, trainHint: String): (Long, String) = {
+    val v = Commit.latest(dir).getOrElse(
+      sys.error(s"no committed centroids at $dir - run $trainHint() first"))
+    v -> Paths.get(dir, Commit.read(dir, v)).toString
   }
-
-  private def currentVersion(dir: String): Option[Long] =
-    if (!Files.exists(currentPtr(dir))) None
-    else Some(Files.readString(currentPtr(dir)).trim.stripPrefix("v").toLong)
 
   /** Train seeded Lloyd k-means on the corpus at `sfDir` (identical
     * arithmetic to the oracle-checked batch path) and persist the
@@ -83,17 +74,14 @@ object IvfCentroids {
     cents
   }
 
-  /** The CURRENT centroid set — a bounded collect of K rows (O(index
+  /** The latest centroid set — a bounded collect of K rows (O(index
     * params), never O(data)).
     */
-  def load(spark: SparkSession, dir: String): Seq[(Long, Array[Double])] = {
-    val v = currentVersion(dir).getOrElse(
-      sys.error(s"no committed centroids at $dir - run train() first"))
-    spark.read.parquet(Paths.get(dir, s"cents-v$v.parquet").toString)
+  def load(spark: SparkSession, dir: String): Seq[(Long, Array[Double])] =
+    spark.read.parquet(latestFile(dir, "train")._2)
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
       .toSeq.sortBy(_._1)
-  }
 
   /** Assign an arriving epoch's vectors (vec_id, v) to inverted lists
     * against the PERSISTED centroids: no retraining, no corpus pass, no
@@ -110,7 +98,7 @@ object IvfCentroids {
     * LONGS) alongside the centroid it denotes (cv = sums/(n·Fix), the
     * exact Lloyd division): Long sums are associative and
     * order-independent, so folding an arriving epoch is
-    *   assign epoch to CURRENT centroids (projection argmax, epoch-
+    *   assign epoch to the latest centroids (projection argmax, epoch-
     *   bounded) → aggregate (cid, n_e, sums_e) → state' = state + epoch
     *   (pure integer addition) → cv' = statsMean(state')
     * — no corpus pass, no approximation drift in the arithmetic, and
@@ -124,37 +112,26 @@ object IvfCentroids {
   final case class ListStat(cid: Long, cv: Array[Double], n: Long,
                             sfix: Array[Long])
 
-  /** Persist a full stats state as the new CURRENT version (same swap
-    * protocol; (cid, cv, n, sfix) columns — [[load]] keeps reading the
-    * first two, so stat-era and plain versions interoperate).
+  /** Persist a full stats state as the new latest version ((cid, cv, n,
+    * sfix) columns — [[load]] keeps reading the first two, so stat-era
+    * and plain versions interoperate).
     */
   def persistStats(spark: SparkSession, dir: String,
                    stats: Seq[ListStat]): Long = {
     require(stats.nonEmpty, "empty centroid stats")
-    Files.createDirectories(Paths.get(dir))
-    val v = currentVersion(dir).getOrElse(0L) + 1L
     import spark.implicits._
-    val tmp = Paths.get(dir, s".tmp-cents-v$v")
-    stats.map(s => (s.cid, s.cv, s.n, s.sfix))
-      .toDF("cid", "cv", "n", "sfix").coalesce(1)
-      .write.mode("overwrite").parquet(tmp.toString)
-    val dst = Paths.get(dir, s"cents-v$v.parquet")
-    graft.FsUtil.deleteTree(dst)
-    Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
-    commitCurrent(dir, v)
-    v
+    commitFrame(dir, stats.map(s => (s.cid, s.cv, s.n, s.sfix))
+      .toDF("cid", "cv", "n", "sfix"))
   }
 
-  /** The CURRENT stats state — requires a stats-era version (train with
+  /** The latest stats state — requires a stats-era version (train with
     * [[trainWithStats]]; a plain [[train]]ed set carries no sums to
     * fold onto, so refreshing it would silently weight history zero —
     * fail loud instead).
     */
   def loadStats(spark: SparkSession, dir: String): Seq[ListStat] = {
-    val v = currentVersion(dir).getOrElse(
-      sys.error(s"no committed centroids at $dir - run trainWithStats() first"))
-    val df = spark.read
-      .parquet(Paths.get(dir, s"cents-v$v.parquet").toString)
+    val (v, file) = latestFile(dir, "trainWithStats")
+    val df = spark.read.parquet(file)
     require(df.columns.contains("sfix"),
       s"centroid version v$v at $dir has no sufficient statistics - " +
         "it was trained without stats; retrain with trainWithStats()")
@@ -207,19 +184,10 @@ object IvfCentroids {
   }
 
   /** Delete superseded centroid versions older than the newest
-    * `keepLast` — the same meta-growth bound as the signature indexes.
+    * `keepLast` — the same meta-growth bound as the signature indexes —
+    * plus the parquet of every crashed or losing attempt at a version up
+    * to the latest. Returns the number of parquet files deleted.
     */
-  def expire(dir: String, keepLast: Int = 4): Int = {
-    require(keepLast >= 1)
-    val cur = currentVersion(dir).getOrElse(return 0)
-    var deleted = 0
-    graft.FsUtil.listDir(Paths.get(dir))(_
-      .filter { p =>
-        val n = p.getFileName.toString
-        n.startsWith("cents-v") && n.endsWith(".parquet") &&
-          n.stripPrefix("cents-v").stripSuffix(".parquet").toLong <= cur - keepLast
-      }.toList)
-      .foreach { p => graft.FsUtil.deleteTree(p); deleted += 1 }
-    deleted
-  }
+  def expire(dir: String, keepLast: Int = 4): Int =
+    Commit.expireWithData(dir, keepLast, Paths.get(dir), "cents-")(identity)
 }

@@ -198,7 +198,7 @@ object MergeInto {
       if (bstats.isEmpty) {
         val s2 = snap.withEpoch(epochId, EpochStat(epochId, 0, 0, 0, 0, 0.0))
           .copy(snapshotId = snap.snapshotId + 1, parentId = snap.snapshotId)
-        LakeTable.commit(tableDir, s2, expectParent = snap.snapshotId)
+        LakeTable.commit(tableDir, s2)
         return MergeResult(s2, applied = true, 0L, 0L, 0L, elapsedMs)
       }
       val touched = bstats.map(_.getInt(0)).sorted.toSeq
@@ -300,7 +300,7 @@ object MergeInto {
           liveRows = snap.liveRows - replaced.map(_.live).sum + newFiles.map(_.live).sum,
           tombstones = snap.tombstones - replaced.map(_.tombs).sum +
             newFiles.map(_.tombs).sum)
-      LakeTable.commit(tableDir, s2, expectParent = snap.snapshotId)
+      LakeTable.commit(tableDir, s2)
       MergeResult(s2, applied = true, events, upsW, delW, durMs)
     } finally { keyAgg.unpersist(); restorePf() }
   }

@@ -42,7 +42,7 @@ object MetricsRollup {
         col("win.start").as("hour_start"), col("lang"),
         col("events"), col("upserts"), col("deletes"), col("max_seq"))
 
-  /** Tail the WAL and maintain the rollup at `rollupDir/current`.
+  /** Tail the WAL and maintain the rollup at `rollupDir` ([[RollupStore]]).
     * `lateness` is the event-time watermark: events arriving more than
     * this behind max(warc_ts) are excluded (and their window state is
     * droppable) — the reference's "re-scan last 24h" reconciliation

@@ -1,6 +1,5 @@
 package graft.table
 
-import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.json4s.jackson.Serialization
@@ -27,11 +26,8 @@ object Changelog {
     * remain readable until `Maintenance.vacuum` reclaims their files —
     * the Iceberg expire-snapshots contract.
     */
-  def loadVersion(dir: String, snapshotId: Long): Snapshot = {
-    val p = Paths.get(dir, "meta", s"v$snapshotId.json")
-    require(Files.exists(p), s"snapshot v$snapshotId does not exist under $dir/meta")
-    Serialization.read[Snapshot](Files.readString(p))(LakeTable.fmts, implicitly)
-  }
+  def loadVersion(dir: String, snapshotId: Long): Snapshot =
+    Serialization.read[Snapshot](Commit.read(dir, snapshotId))(LakeTable.fmts, implicitly)
 
   /** Live rows exactly as of snapshot `snapshotId` (time travel read). */
   def readLiveAt(spark: SparkSession, dir: String, snapshotId: Long): DataFrame =
@@ -55,7 +51,7 @@ object Changelog {
   }
 
   /** Rows whose visible state changed after snapshot `fromSnapshotId`, as
-    * of `toSnapshotId` (default: CURRENT). Output = table schema with
+    * of `toSnapshotId` (default: the latest). Output = table schema with
     * tombstone → `op` ('U' upsert / 'D' delete): a downstream consumer
     * applying these changes to its copy of snapshot `from` reaches
     * snapshot `to` exactly (ChangelogSpec). Deletes appear only while

@@ -1,6 +1,6 @@
 package graft.table
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -108,18 +108,24 @@ case class Snapshot(
   * — no Iceberg jar ships in this env, SURVEY §7.0).
   *
   * Layout under `tableDir`:
-  *   meta/v{N}.json   — full snapshot manifest (immutable once written)
-  *   meta/CURRENT     — pointer file, swapped atomically (write-temp +
-  *                      ATOMIC_MOVE rename) — the single commit point
-  *   data/s{N}/bucket={b}/part-*.parquet — copy-on-write data files
+  *   meta/v{N}.json   — full snapshot manifest N, created put-if-absent
+  *                      ([[Commit]]) — the single commit point
+  *   meta/CURRENT     — "vN", a read hint rewritten after every commit
+  *   data/s{N}-{token}[-delta]/bucket={b}/part-*.parquet — the files one
+  *                      attempt at snapshot N wrote (copy-on-write base
+  *                      or merge-on-read delta), each path written once
   *
-  * Readers resolve CURRENT → manifest → file list; data files never
-  * change after commit, so reads are snapshot-isolated. A crash between
-  * data-file write and CURRENT swap leaves only unreachable orphans —
-  * the retried epoch rewrites them (idempotence test, SURVEY §5.5).
+  * Readers resolve the latest manifest → file list; data files never
+  * change after commit, so reads are snapshot-isolated. Snapshot N's
+  * parent is always N−1, so two writers racing from one parent both
+  * attempt N and exactly one creates `v{N}.json`; the other fails with
+  * "concurrent commit". A crash or a lost race before that creation
+  * leaves only unreachable data dirs (their own token, never a committed
+  * snapshot's), which the retried epoch does not reuse and
+  * [[Maintenance.vacuum]] reclaims (idempotence test, SURVEY §5.5).
   *
   * On a real cluster the identical protocol runs against an object store
-  * (rename → catalog CAS); the commit surface is this one file.
+  * with a conditional put; the commit surface is [[Commit]].
   */
 object LakeTable {
   implicit val fmts: Formats = DefaultFormats
@@ -130,40 +136,27 @@ object LakeTable {
     */
   val EpochStatsWindow: Int = 256
 
-  private def meta(dir: String): Path = Paths.get(dir, "meta")
-  private def currentPtr(dir: String): Path = meta(dir).resolve("CURRENT")
-
+  /** Commit snapshot 0 of a new table; fails loudly if `dir` already
+    * holds one.
+    */
   def create(dir: String, numBuckets: Int = 32, schemaId: Int = CdcSchema.latestSchemaId): Snapshot = {
-    Files.createDirectories(meta(dir))
+    require(!exists(dir), s"a table already exists at $dir")
     Files.createDirectories(Paths.get(dir, "data"))
     val s0 = Snapshot(0L, -1L, schemaId, numBuckets, Nil, Nil, Map.empty, Nil, 0L, 0L)
-    commit(dir, s0, expectParent = -2L)
+    commit(dir, s0)
     s0
   }
 
-  def exists(dir: String): Boolean = Files.exists(currentPtr(dir))
+  def exists(dir: String): Boolean = Commit.latest(dir).nonEmpty
 
-  def load(dir: String): Snapshot = {
-    val v = Files.readString(currentPtr(dir)).trim
-    Serialization.read[Snapshot](Files.readString(meta(dir).resolve(s"$v.json")))
-  }
+  def load(dir: String): Snapshot = Changelog.loadVersion(dir, Commit.latest(dir)
+    .getOrElse(throw new IllegalArgumentException(s"no table at $dir")))
 
-  /** Write manifest then atomically swap CURRENT. `expectParent` gives
-    * cheap optimistic concurrency for the single-writer ingest loop.
+  /** Commit `snap` (parent `snapshotId − 1`) put-if-absent; a writer that
+    * lost the race for its snapshot id fails with "concurrent commit".
     */
-  def commit(dir: String, snap: Snapshot, expectParent: Long): Unit = {
-    if (expectParent >= -1L) {
-      val cur = load(dir)
-      require(cur.snapshotId == expectParent,
-        s"concurrent commit: CURRENT=${cur.snapshotId}, expected parent=$expectParent")
-    }
-    val mf = meta(dir).resolve(s"v${snap.snapshotId}.json")
-    Files.writeString(mf, Serialization.write(snap))
-    val tmp = meta(dir).resolve(s".CURRENT.tmp.${snap.snapshotId}")
-    Files.writeString(tmp, s"v${snap.snapshotId}")
-    Files.move(tmp, currentPtr(dir), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  def commit(dir: String, snap: Snapshot): Unit =
+    Commit.put(dir, snap.snapshotId, Serialization.write(snap))
 
   private def emptyTable(spark: SparkSession): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], CdcSchema.tableSchema)
@@ -174,15 +167,11 @@ object LakeTable {
     * the table regardless of total size.
     */
   def read(spark: SparkSession, dir: String, snap: Snapshot,
-           buckets: Option[Set[Int]] = None): DataFrame = {
-    val files = buckets match {
-      case Some(bs) => snap.files.filter(f => bs.contains(f.bucket))
-      case None     => snap.files
-    }
-    if (files.isEmpty) emptyTable(spark)
-    else spark.read.schema(CdcSchema.tableSchema)
-      .parquet(files.map(f => s"$dir/${f.path}"): _*)
-  }
+           buckets: Option[Set[Int]] = None): DataFrame =
+    readFiles(spark, dir, filesIn(snap, buckets))
+
+  private def filesIn(snap: Snapshot, buckets: Option[Set[Int]]): List[FileEntry] =
+    buckets.fold(snap.files)(bs => snap.files.filter(f => bs.contains(f.bucket)))
 
   private def readFiles(spark: SparkSession, dir: String,
                         files: Seq[FileEntry]): DataFrame =
@@ -190,12 +179,12 @@ object LakeTable {
     else spark.read.schema(CdcSchema.tableSchema)
       .parquet(files.map(f => s"$dir/${f.path}"): _*)
 
-  /** The physical write that produced a file: its `data/s{N}[-delta]`
-    * dir (one copy-on-write rewrite or one merge-on-read epoch).
+  /** The physical write that produced a file: its
+    * `data/s{N}-{token}[-delta]` dir (one copy-on-write rewrite or one
+    * merge-on-read epoch), ordered by its snapshot id N.
     */
   private def writeDirOf(f: FileEntry): String = f.path.split('/')(1)
-  private def writeOrd(g: String): Long =
-    g.stripPrefix("s").stripSuffix("-delta").toLong
+  private def writeOrd(g: String): Long = g.drop(1).takeWhile(_.isDigit).toLong
 
   /** Bits needed to encode generation values 0..nGens-1 into the low
     * bits of `seq` (see [[readTagged]]).
@@ -258,10 +247,7 @@ object LakeTable {
     */
   def readMerged(spark: SparkSession, dir: String, snap: Snapshot,
                  buckets: Option[Set[Int]] = None): DataFrame = {
-    val sel = buckets match {
-      case Some(bs) => snap.files.filter(f => bs.contains(f.bucket))
-      case None     => snap.files
-    }
+    val sel = filesIn(snap, buckets)
     val dirtyBuckets = sel.filter(_.kind == "delta").map(_.bucket).toSet
     if (dirtyBuckets.isEmpty) return readFiles(spark, dir, sel)
     val (dirty, clean) = sel.partition(f => dirtyBuckets.contains(f.bucket))
@@ -333,12 +319,14 @@ object LakeTable {
     pmod(xxhash64(urlCol), lit(numBuckets)).cast("int")
 
   /** LWW-collapse `rows` and write the result as the touched buckets of
-    * snapshot `snapId`; returns manifest entries with per-bucket pruning
-    * + accounting stats. The engine's single "collapse and write" step:
-    * `rows` (tableSchema + a `bucket` column, optionally a `_gen` write
-    * generation) may hold several rows per url — the target files of a
-    * copy-on-write epoch beside the batch's candidate rows, or redelivered
-    * copies of one event — and each url keeps its max
+    * snapshot `snapId`, into a data dir of this attempt's own (a fresh
+    * [[Commit.token]], written once); returns manifest entries with
+    * per-bucket pruning + accounting stats. The engine's single
+    * "collapse and write" step: `rows` (tableSchema + a `bucket` column,
+    * optionally a `_gen` write generation) may hold several rows per url
+    * — the target files of a copy-on-write epoch beside the batch's
+    * candidate rows, or redelivered copies of one event — and each url
+    * keeps its max
     * (warc_ts, seq, _gen) row. Tombstones stay rows, so a later update
     * older than a delete cannot resurrect the url. Rows with a null
     * warc_ts are dropped first: the lww_seq winner aggregate ignores
@@ -357,7 +345,7 @@ object LakeTable {
                    rows: DataFrame, touched: Seq[Int],
                    suffix: String = "", kind: String = "base"): List[FileEntry] = {
     if (touched.isEmpty) return Nil
-    val rel = s"data/s$snapId$suffix"
+    val rel = s"data/s$snapId-${Commit.token()}$suffix"
     val out = s"$dir/$rel"
     val gen = if (rows.columns.contains("_gen")) col("_gen") else lit(0)
     val lww = Window.partitionBy(col("bucket"), col("url_hash"), col("url"))
@@ -369,7 +357,7 @@ object LakeTable {
       .select((CdcSchema.tableSchema.fieldNames :+ "bucket").map(col).toIndexedSeq: _*)
     collapsed.persist()
     try {
-      collapsed.write.mode("overwrite").partitionBy("bucket").parquet(out)
+      collapsed.write.partitionBy("bucket").parquet(out)
       // per-bucket stats: pruning ranges + live/tombstone accounting (the
       // manifest carries them so later merges never rescan for them)
       val stats = collapsed.groupBy(col("bucket")).agg(

@@ -1,20 +1,20 @@
 package graft.table
 
 import java.nio.file.{Files, Path, Paths}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Table maintenance: orphan-file vacuum and copy-on-write compaction.
   *
   * Reference analog: SQLite gets this for free (single file, VACUUM);
   * a snapshot-committed lake accumulates (a) unreachable data files from
-  * crashed epochs (the commit protocol's documented failure mode) and
-  * superseded copy-on-write snapshots, and (b) tombstone rows retained
-  * for late-update protection (SURVEY §7.4).
+  * crashed epochs and lost commit races (the commit protocol's
+  * documented failure mode) and superseded copy-on-write snapshots, and
+  * (b) tombstone rows retained for late-update protection (SURVEY §7.4).
   */
 object Maintenance {
 
-  /** Delete data files not referenced by the CURRENT snapshot and older
+  /** Delete data files not referenced by the latest snapshot and older
     * than `graceMs` (protects files of an in-flight writer). Single
     * concurrent vacuum assumed (same single-writer posture as ingest).
     * Returns the number of files deleted.
@@ -63,7 +63,7 @@ object Maintenance {
   val DefaultKeepManifests: Int = 64
 
   /** Delete snapshot manifests older than the newest `keepLast`
-    * (CURRENT is always kept). The Iceberg expire-snapshots analog:
+    * (the latest is always kept). The Iceberg expire-snapshots analog:
     * time travel / `Changelog.changesSince` to an expired snapshot id
     * fails loudly with its existing "does not exist" require —
     * consumers re-baseline, the standard CDC-out contract. Returns the
@@ -73,23 +73,8 @@ object Maintenance {
     * the metadata-chain growth failure mode (MetadataSoak measures the
     * with-expiry steady state).
     */
-  def expireSnapshots(dir: String, keepLast: Int = DefaultKeepManifests): Int = {
-    require(keepLast >= 1)
-    val cur = LakeTable.load(dir).snapshotId
-    val metaDir = Paths.get(dir, "meta")
-    var deleted = 0
-    graft.FsUtil.listDir(metaDir)(_
-      .filter { p =>
-        val n = p.getFileName.toString
-        n.startsWith("v") && n.endsWith(".json")
-      }
-      .filter { p =>
-        val id = p.getFileName.toString.stripPrefix("v").stripSuffix(".json").toLong
-        id <= cur - keepLast
-      }
-      .foreach { p => Files.deleteIfExists(p); deleted += 1 })
-    deleted
-  }
+  def expireSnapshots(dir: String, keepLast: Int = DefaultKeepManifests): Int =
+    Commit.expire(dir, keepLast)
 
   /** One-call maintenance policy for an operator cron job: compact when
     * the merge-on-read overlay has grown past `maxDeltaFiles` (or when a
@@ -144,26 +129,12 @@ object Maintenance {
   def rebucket(spark: SparkSession, dir: String, newBuckets: Int): Snapshot = {
     val snap = LakeTable.load(dir)
     require(newBuckets > 0)
-    val rows = LakeTable.readMerged(spark, dir, snap)
-      .withColumn("bucket", pmod(col("url_hash"), lit(newBuckets)).cast("int"))
-    rows.persist()
-    try {
-      val touched = rows.select(col("bucket")).distinct()
-        .collect().map(_.getInt(0)).sorted.toSeq
-      val newId = snap.snapshotId + 1
-      val newFiles = LakeTable.writeBuckets(spark, dir, newId, rows, touched)
+    rewrite(spark, dir, snap, newBuckets,
+      LakeTable.readMerged(spark, dir, snap)) { (s2, newFiles) =>
       val maxApplied = (snap.lineage.values ++ newFiles.map(_.maxSeq))
         .foldLeft(Long.MinValue)(math.max)
-      val s2 = snap.copy(
-        snapshotId = newId, parentId = snap.snapshotId,
-        numBuckets = newBuckets,
-        files = newFiles,
-        lineage = (0 until newBuckets).map(b => b.toString -> maxApplied).toMap,
-        liveRows = newFiles.map(_.live).sum,
-        tombstones = newFiles.map(_.tombs).sum)
-      LakeTable.commit(dir, s2, expectParent = snap.snapshotId)
-      s2
-    } finally rows.unpersist()
+      s2.copy(lineage = (0 until newBuckets).map(b => b.toString -> maxApplied).toMap)
+    }
   }
 
   /** Rewrite the table into one file per bucket (copy-on-write compaction),
@@ -182,22 +153,33 @@ object Maintenance {
     // the older base row it shadows. readMerged collapses only buckets
     // that carry deltas, so a pure copy-on-write table compacts
     // shuffle-free.
-    val rows = LakeTable.readMerged(spark, dir, snap)
+    rewrite(spark, dir, snap, snap.numBuckets, LakeTable.readMerged(spark, dir, snap)
       .filter(!col("tombstone") ||
-        col("warc_ts").cast("long") * 1000L >= tombstoneHorizonMs)
-      .withColumn("bucket", pmod(col("url_hash"), lit(snap.numBuckets)).cast("int"))
+        col("warc_ts").cast("long") * 1000L >= tombstoneHorizonMs))((s2, _) => s2)
+  }
+
+  /** Write `rows` (table rows) as the whole table in `numBuckets`
+    * buckets and commit it as the snapshot after `snap`; `adjust` sets
+    * whatever else the rewrite changes in the manifest.
+    */
+  private def rewrite(spark: SparkSession, dir: String, snap: Snapshot,
+                      numBuckets: Int, rows0: DataFrame)
+                     (adjust: (Snapshot, List[FileEntry]) => Snapshot): Snapshot = {
+    val rows = rows0
+      .withColumn("bucket", pmod(col("url_hash"), lit(numBuckets)).cast("int"))
     rows.persist()
     try {
       val touched = rows.select(col("bucket")).distinct()
         .collect().map(_.getInt(0)).sorted.toSeq
       val newId = snap.snapshotId + 1
       val newFiles = LakeTable.writeBuckets(spark, dir, newId, rows, touched)
-      val s2 = snap.copy(
+      val s2 = adjust(snap.copy(
         snapshotId = newId, parentId = snap.snapshotId,
+        numBuckets = numBuckets,
         files = newFiles,
         liveRows = newFiles.map(_.live).sum,
-        tombstones = newFiles.map(_.tombs).sum)
-      LakeTable.commit(dir, s2, expectParent = snap.snapshotId)
+        tombstones = newFiles.map(_.tombs).sum), newFiles)
+      LakeTable.commit(dir, s2)
       s2
     } finally rows.unpersist()
   }

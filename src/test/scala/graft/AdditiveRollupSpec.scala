@@ -45,13 +45,11 @@ class AdditiveRollupSpec extends SparkSpec {
     def d(v: Long) = Seq((1L, v)).toDF("k", "n")
     def readN(): Long = AdditiveRollup.read(spark, dir).head.getLong(1)
     AdditiveRollup.upsert(spark, dir, d(5L), Seq("k"), 0L, combine)
-    // epoch 1 commits, then we simulate a crash that happened BEFORE the
-    // PTR swap by reverting the pointer: the v-1 state dir (with its
-    // embedded ledger) is left as an orphan, exactly the crash residue
-    val ptr = java.nio.file.Paths.get(dir).resolve("PTR")
-    val preSwap = java.nio.file.Files.readString(ptr)
+    // epoch 1 commits, then we simulate a crash that happened BEFORE its
+    // version file was created by deleting that file: the state dir it
+    // named is left as an orphan, exactly the crash residue
     AdditiveRollup.upsert(spark, dir, d(2L), Seq("k"), 1L, combine)
-    java.nio.file.Files.writeString(ptr, preSwap) // "crash"
+    java.nio.file.Files.delete(java.nio.file.Paths.get(dir, "meta", "v1.json")) // "crash"
     assert(readN() === 5L) // pre-crash state visible, epoch 1 invisible
     // retry must APPLY (the committed ledger doesn't contain epoch 1) …
     assert(AdditiveRollup.upsert(spark, dir, d(2L), Seq("k"), 1L, combine))

@@ -20,8 +20,14 @@ class BucketedFoldSpec extends SparkSpec {
   private def pairSet(df: DataFrame): Set[(Long, Long, String)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.get(2).toString)).toSet
 
-  private def sbDirs(dir: String, entry: String): Set[String] =
-    graft.FsUtil.listDir(java.nio.file.Paths.get(dir, "buckets", entry))(_
+  /** The buckets/ dir of the entry covering exactly [lo, hi]. */
+  private def bucketsOf(dir: String, lo: Long, hi: Long): String =
+    DedupIndex.loadManifest(dir).entries
+      .find(e => e.minEpoch == lo && e.maxEpoch == hi).get.path
+      .replaceFirst("^sigs/", "buckets/")
+
+  private def sbDirs(dir: String, epoch: Long): Set[String] =
+    graft.FsUtil.listDir(java.nio.file.Paths.get(dir, bucketsOf(dir, epoch, epoch)))(_
       .map(_.getFileName.toString).filter(_.startsWith("sb=")).toSet)
 
   test("fold reads only the epoch's matching sb dirs from the index side") {
@@ -32,8 +38,8 @@ class BucketedFoldSpec extends SparkSpec {
     // 16 sb dirs; the fold must prune the index side to those
     val one = docs.orderBy(col("doc_id")).limit(1)
     DedupIndex.appendEpoch(spark, dir, 1L, one)
-    val sb0 = sbDirs(dir, "epoch=0")
-    val sb1 = sbDirs(dir, "epoch=1")
+    val sb0 = sbDirs(dir, 0L)
+    val sb1 = sbDirs(dir, 1L)
     assert(sb1.nonEmpty && sb1.size <= 8)
     assert(sb0.size > sb1.size,
       s"corpus epoch must fan wider than a 1-doc epoch (${sb0.size} vs ${sb1.size})" +
@@ -45,7 +51,7 @@ class BucketedFoldSpec extends SparkSpec {
     val bucketFiles = fold.inputFiles.filter(_.contains("/buckets/")).toSeq
     assert(bucketFiles.nonEmpty, "the fold must read the buckets side table")
     bucketFiles.foreach { f =>
-      assert(f.contains("/buckets/epoch=0/"))
+      assert(f.contains(s"/${bucketsOf(dir, 0L, 0L)}/"))
       val sb = f.split("/").find(_.startsWith("sb=")).get
       assert(sb1.contains(sb), s"read unmatched index bucket dir $sb")
     }
@@ -132,7 +138,7 @@ class BucketedFoldSpec extends SparkSpec {
     // epoch against compacted history still prunes and still matches
     assert(DedupIndex.compact(spark, dir))
     assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(dir, "buckets", "compact-0-1")))
+      java.nio.file.Paths.get(dir, bucketsOf(dir, 0L, 1L))))
     append(3)
     val b3 = pairSet(DedupIndex.epochPairs(spark, dir, 3L))
     assert(b3 === oracle(3L))

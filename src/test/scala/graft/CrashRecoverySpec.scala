@@ -7,8 +7,9 @@ import graft.operators.MergeInto
 import graft.table.LakeTable
 
 /** Crash-window semantics of the snapshot commit protocol (SURVEY §5.5):
-  * data files written without a CURRENT swap are unreachable orphans; a
-  * retried epoch over them converges to the correct state.
+  * data files written without their manifest being created are
+  * unreachable orphans; a retried epoch over them converges to the
+  * correct state.
   */
 class CrashRecoverySpec extends SparkSpec {
   import spark.implicits._
@@ -58,13 +59,15 @@ class CrashRecoverySpec extends SparkSpec {
     LakeTable.create(s"$base/t", numBuckets = 4)
     val snap = LakeTable.load(s"$base/t")
     val bogus = snap.copy(snapshotId = snap.snapshotId + 1, parentId = snap.snapshotId)
-    LakeTable.commit(s"$base/t", bogus, expectParent = snap.snapshotId)
-    // second writer with the same (now stale) parent must fail
-    val bogus2 = snap.copy(snapshotId = snap.snapshotId + 2, parentId = snap.snapshotId)
+    LakeTable.commit(s"$base/t", bogus)
+    // second writer with the same (now stale) parent attempts the same
+    // snapshot id and must fail, leaving the first writer's manifest
+    val bogus2 = bogus.copy(liveRows = 1L)
     val e = intercept[IllegalArgumentException] {
-      LakeTable.commit(s"$base/t", bogus2, expectParent = snap.snapshotId)
+      LakeTable.commit(s"$base/t", bogus2)
     }
     assert(e.getMessage.contains("concurrent commit"))
+    assert(LakeTable.load(s"$base/t") === bogus)
   }
 
   test("batch split points do not change the final state (epoch-boundary invariance)") {

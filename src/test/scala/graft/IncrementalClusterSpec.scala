@@ -165,11 +165,12 @@ class IncrementalClusterSpec extends SparkSpec {
     val words = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     ShingleIndex.appendEpoch(spark, dir, 0L,
       Seq((1L, words)).toDF("doc_id", "text"))
+    val path = DedupIndex.loadManifest(dir).entries.head.path
     java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "meta", "v1.json"),
       """{"version":1,"entries":[{"minEpoch":0,"maxEpoch":0,""" +
-        """"path":"sigs/epoch=0"}],"features":["resigned-mirrors"]}""")
+        s""""path":"$path"}],"features":["resigned-mirrors"]}""")
     assert(DedupIndex.loadManifest(dir) === DedupIndex.IndexManifest(1L,
-      List(DedupIndex.IndexEntry(0L, 0L, "sigs/epoch=0"))))
+      List(DedupIndex.IndexEntry(0L, 0L, path))))
     val p1 = ShingleIndex.foldEpoch(spark, dir, 1L,
       Seq((2L, words)).toDF("doc_id", "text"), 0.5)
     assert(DedupIndex.committedEpochs(dir) === Seq(0L, 1L))

@@ -156,7 +156,7 @@ class IncrementalDedupSpec extends SparkSpec {
       java.nio.file.Paths.get(dir, "meta"))(
       _.count(_.getFileName.toString.endsWith(".json")))
     assert(metaJsons <= 5)
-    assert(DedupIndex.committedEpochs(dir) === (0L to 20L)) // CURRENT intact
+    assert(DedupIndex.committedEpochs(dir) === (0L to 20L)) // latest intact
     graft.analytics.SessionCaches.release(spark)
   }
 
@@ -244,10 +244,12 @@ class IncrementalDedupSpec extends SparkSpec {
   test("bloom sidecars prune the resigned scan: fresh epochs publish no mirror, re-signs still do") {
     import spark.implicits._
     val dir = tmpDir("dd08-bloom")
+    def entry(e: Long) = DedupIndex.loadManifest(dir).entries
+      .find(x => x.minEpoch == e && x.maxEpoch == e).get.path
     def mirror(e: Long) =
-      java.nio.file.Paths.get(dir, s"resigned/epoch=$e")
+      java.nio.file.Paths.get(dir, entry(e).replaceFirst("^sigs/", "resigned/"))
     def sidecar(e: Long) =
-      java.nio.file.Paths.get(dir, s"bloom/epoch=$e")
+      java.nio.file.Paths.get(dir, entry(e).replaceFirst("^sigs/", "bloom/"))
     val words = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     DedupIndex.appendEpoch(spark, dir, 0L,
       Seq((1L, words + " one"), (2L, words + " two")).toDF("doc_id", "text"))

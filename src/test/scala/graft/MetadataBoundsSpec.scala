@@ -71,7 +71,7 @@ class MetadataBoundsSpec extends SparkSpec {
     (1L to 30L).foldLeft(LakeTable.load(dir)) { (prev, i) =>
       val s = prev.withEpoch(i - 1, stat(i - 1))
         .copy(snapshotId = i, parentId = prev.snapshotId)
-      LakeTable.commit(dir, s, expectParent = prev.snapshotId)
+      LakeTable.commit(dir, s)
       s
     }
     val removed = Maintenance.expireSnapshots(dir, keepLast = 10)

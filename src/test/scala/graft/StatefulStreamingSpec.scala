@@ -57,12 +57,12 @@ class StatefulStreamingSpec extends SparkSpec {
 
     MetricsRollup.runAvailableNow(spark, s"$base/feed", s"$base/rollup",
       s"$base/ckpt", lateness = "1 hour", maxFilesPerTrigger = Some(1))
-    // the applied-epoch ledger rides inside the current version dir
-    // (committed atomically with the state by the PTR swap)
-    val curV = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$base/rollup/PTR")).trim
-    val epochs = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$base/rollup/$curV/_epochs")).split("\n").count(_.nonEmpty)
+    // the applied-epoch ledger rides in the latest version file
+    // (committed atomically with the state by one put-if-absent)
+    val meta = java.nio.file.Paths.get(s"$base/rollup/meta")
+    val curV = java.nio.file.Files.readString(meta.resolve("CURRENT")).trim
+    val epochs = (org.json4s.jackson.JsonMethods.parse(java.nio.file.Files
+      .readString(meta.resolve(s"$curV.json"))) \ "epochs").children.size
     info(s"epochs committed: $epochs")
     val got = MetricsRollup.read(spark, s"$base/rollup")
       .select($"hour_start".cast("long") - base0 / 1000L, $"events")
@@ -81,7 +81,7 @@ class StatefulStreamingSpec extends SparkSpec {
         java.nio.file.Paths.get(s"$base/rollup")).iterator()
     val vCount = Iterator.continually(versions)
       .takeWhile(_.hasNext).map(_.next().getFileName.toString)
-      .count(_.startsWith("v-"))
+      .count(_.matches("""v\d+-.*"""))
     assert(vCount <= 3, s"expected ≤3 retained versions, got $vCount")
   }
 

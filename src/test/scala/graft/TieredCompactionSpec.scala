@@ -100,7 +100,9 @@ class TieredCompactionSpec extends SparkSpec {
     // three superseded singletons (sigs+buckets+bloom each, plus the
     // resigned mirror only epoch 2 wrote — fresh-doc epochs 1 and 3
     // never publish one)
-    val carried = java.nio.file.Paths.get(dir, "resigned/compact-1-3")
+    val carried = java.nio.file.Paths.get(dir, entriesOf(dir)
+      .find(e => e.minEpoch == 1L && e.maxEpoch == 3L).get.path
+      .replaceFirst("^sigs/", "resigned/"))
     assert(java.nio.file.Files.exists(carried))
     assert(DedupIndex.vacuum(dir, graceMs = 0L) === 10)
     assert(java.nio.file.Files.exists(carried),
