@@ -135,20 +135,6 @@ object MergeInto {
       return MergeResult(snap, applied = false, 0L, 0L, 0L, 0L)
     def elapsedMs = (System.nanoTime() - t0) / 1000000L
 
-    // Spark 4.1 AQE coalesces post-shuffle partitions toward the 64MB
-    // advisory size with parallelism-first DISABLED by default — on this
-    // merge (CPU-heavy per byte, modest shuffle volumes) that collapses
-    // the key aggregation to a handful of tasks and serializes
-    // the epoch (measured 4× wall-clock at 16 cores). Pin
-    // parallelism-first for the duration of the merge, restore after.
-    val pfKey = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-    val pfPrev = spark.conf.getOption(pfKey)
-    spark.conf.set(pfKey, "true")
-    def restorePf(): Unit = pfPrev match {
-      case Some(v) => spark.conf.set(pfKey, v)
-      case None    => spark.conf.unset(pfKey)
-    }
-
     // 1. two-phase LWW winner selection. Phase A shuffles only the
     //    NARROW key columns (url, warc_ts, seq, op) — never the html/text
     //    payload: at web scale the payload is ~95% of the row, so the
@@ -161,8 +147,8 @@ object MergeInto {
     //    The winner argmax is graft.plans.LwwSeq — a declarative
     //    aggregate with a primitive (warc_ts, seq) buffer, so phase A is
     //    one codegen'd HashAggregate with map-side partial aggregation.
-    //    (`max(struct)` / `max_by` buffers are structs ⇒ SortAggregate:
-    //    measured 22–28 s vs 2.6 s on a 64M-event epoch at 32 cores.)
+    //    (a struct-typed argmax buffer plans as SortAggregate: measured
+    //    22–28 s vs 2.6 s on a 64M-event epoch at 32 cores.)
     //    The winner's tombstone flag rides in the low bit of the
     //    encoded seq: order-preserving, since seq is unique per event.
     val batch = alignToLatest(batchIn)
@@ -302,6 +288,6 @@ object MergeInto {
             newFiles.map(_.tombs).sum)
       LakeTable.commit(tableDir, s2)
       MergeResult(s2, applied = true, events, upsW, delW, durMs)
-    } finally { keyAgg.unpersist(); restorePf() }
+    } finally keyAgg.unpersist()
   }
 }

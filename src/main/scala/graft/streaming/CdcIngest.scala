@@ -41,14 +41,16 @@ object CdcIngest {
     *
     * `dedupIndexDir`, when set, maintains the near-dup SIGNATURE INDEX
     * ([[graft.operators.DedupIndex]]) from the same epoch: the epoch's
-    * per-url LWW winner texts are MinHash-signed (doc key =
-    * xxhash64(url)) and appended under the stream's epochId, so each
-    * arriving epoch can be deduped against the whole history without
-    * ever re-shingling the corpus — the watermark-incremental posture
-    * applied to dedup. An updated url re-signs under a new epoch and
-    * SUPERSEDES its older signature; a DELETED url supersedes to a
-    * tombstone the same epoch, so the index stops pairing against it
-    * (the index's logical content is one signature per LIVE doc —
+    * per-url LWW winners — the table's own collapse,
+    * [[LakeTable.lwwCollapse]], so undated events never win — have their
+    * texts MinHash-signed (doc key = xxhash64(url)) and appended under
+    * the stream's epochId, so each arriving epoch can be deduped against
+    * the whole history without ever re-shingling the corpus — the
+    * watermark-incremental posture applied to dedup. An updated url
+    * re-signs under a new epoch and SUPERSEDES its older signature; a
+    * DELETED url supersedes to a tombstone the same epoch, so the index
+    * stops pairing against it (the index's logical content is one
+    * signature per LIVE doc —
     * DedupIndex resolves latest-per-doc at read, compaction makes it
     * storage truth).
     *
@@ -103,8 +105,9 @@ object CdcIngest {
           DomainStatsRollup.upsert(batch.sparkSession, sd, b, epochId))
         if (dedupIndexDir.nonEmpty || metricsDir.nonEmpty) {
           import org.apache.spark.sql.functions.{col, xxhash64}
-          val collapsed = graft.operators.LwwCollapse
-            .collapse(MergeInto.alignToLatest(b))
+          // the table's own LWW collapse: the winner per url is the row
+          // the merge writes, and a url with only undated events has none
+          val collapsed = LakeTable.lwwCollapse(MergeInto.alignToLatest(b))
           val docId = xxhash64(col("url")).as("doc_id")
           val live = col("op") =!= "D" && col("text").isNotNull
           // a deleted url's signature/metrics are superseded by a

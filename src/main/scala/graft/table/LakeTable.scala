@@ -186,12 +186,6 @@ object LakeTable {
   private def writeDirOf(f: FileEntry): String = f.path.split('/')(1)
   private def writeOrd(g: String): Long = g.drop(1).takeWhile(_.isDigit).toLong
 
-  /** Bits needed to encode generation values 0..nGens-1 into the low
-    * bits of `seq` (see [[readTagged]]).
-    */
-  private[graft] def genBits(nGens: Int): Int =
-    64 - java.lang.Long.numberOfLeadingZeros(math.max(nGens - 1, 1).toLong)
-
   /** Read `files` with a `_gen` column that makes `(url, seq, _gen)`
     * UNIQUE — the disambiguator for byte-identical duplicate rows.
     *
@@ -207,11 +201,9 @@ object LakeTable {
     * Generations: all base files share gen 0 (each bucket has exactly one
     * base file and urls never span buckets, so base rows are jointly
     * per-url unique); each delta write gets its own gen in snapshot
-    * order. Callers rank `_gen` after seq in the LWW order — the last key
-    * of [[writeBuckets]]' collapse; [[readMerged]] folds it into seq's
-    * low bits, `(seq << genBits) | _gen` — so for the byte-identical
-    * copies of one event (equal warc_ts, equal seq) the newest write
-    * deterministically wins. Returns (rows, genCount).
+    * order. [[lwwCollapse]] ranks `_gen` after seq, so for the
+    * byte-identical copies of one event (equal warc_ts, equal seq) the
+    * newest write deterministically wins. Returns (rows, genCount).
     */
   private[graft] def readTagged(spark: SparkSession, dir: String,
                                 files: Seq[FileEntry]): (DataFrame, Int) = {
@@ -225,25 +217,42 @@ object LakeTable {
     (df, deltaGens.size + 1)
   }
 
-  /** Merged view: LWW-collapse base∪delta rows to one row per url —
-    * tombstone winners retained (callers filter). The collapse (a
-    * shuffle) runs ONLY over buckets that carry delta files; clean
-    * copy-on-write buckets stream through shuffle-free. That makes the
-    * merge-on-read tax proportional to the un-compacted overlay, not the
-    * table: a 100 TB table with deltas on 3 of 4096 buckets pays the
-    * read-side collapse on 3 buckets.
+  /** The engine's one last-writer-wins collapse: each url keeps its max
+    * (warc_ts, seq, _gen) row, `_gen` ([[readTagged]]) when `rows`
+    * carries it. Rows with a null warc_ts are dropped first, so an undated
+    * event never wins and a url with only undated events has no winner.
+    * Deletes stay rows (tombstone = true, or op = 'D' on feed rows), so a
+    * later update older than a delete cannot resurrect the url; callers
+    * filter them.
     *
-    * Plan shape (same reasoning as the MergeInto fallback): the winner
-    * per url is found on a NARROW (url, warc_ts, seq) scan with the
-    * primitive-buffer lww_seq HashAggregate, then the payload is
-    * hash-joined back on (url, enc-residual) — payload bytes cross one
-    * url-partitioned exchange and are never sort-aggregated. The join-back
-    * key is `(seq << genBits) | _gen` ([[readTagged]]): (url, seq) alone
-    * is NOT unique across base∪delta under at-least-once redelivery (the
-    * same event can be re-applied as a later epoch's winner), and a
-    * (url, seq) join-back would duplicate the url; the write-generation
-    * low bits keep exactly one copy — the newest write's — with no
-    * dedup aggregate over the payload.
+    * Plan: a row_number window partitioned by url behind whichever of
+    * `bucket` and `url_hash` `rows` carries. An exchange on `bucket`
+    * alone satisfies that partitioning ([[writeBuckets]]: no exchange of
+    * its own, and the window's sort is the files' (url_hash, url) order);
+    * otherwise the window brings one exchange on its keys. No aggregate
+    * and no join-back: each input file is scanned once, and a narrow
+    * projection of the result still prunes the payload at the scans.
+    */
+  private[graft] def lwwCollapse(rows: DataFrame): DataFrame = {
+    val has = rows.columns.toSet
+    val byUrl = Seq("bucket", "url_hash", "url").filter(has).map(col)
+    val order = Seq(col("warc_ts").desc, col("seq").desc) ++
+      (if (has("_gen")) Seq(col("_gen").desc) else Nil)
+    val lww = Window.partitionBy(byUrl: _*).orderBy(order: _*)
+    rows.filter(col("warc_ts").isNotNull)
+      .withColumn("_rn", row_number().over(lww))
+      .filter(col("_rn") === 1)
+      .drop("_rn")
+  }
+
+  /** Merged view: LWW-collapse base∪delta rows to one row per url —
+    * tombstone winners retained (callers filter). The collapse
+    * ([[lwwCollapse]] over [[readTagged]], one exchange) runs ONLY over
+    * buckets that carry delta files; clean copy-on-write buckets stream
+    * through shuffle-free. That makes the merge-on-read tax proportional
+    * to the un-compacted overlay, not the table: a 100 TB table with
+    * deltas on 3 of 4096 buckets pays the read-side collapse on 3
+    * buckets.
     */
   def readMerged(spark: SparkSession, dir: String, snap: Snapshot,
                  buckets: Option[Set[Int]] = None): DataFrame = {
@@ -251,22 +260,8 @@ object LakeTable {
     val dirtyBuckets = sel.filter(_.kind == "delta").map(_.bucket).toSet
     if (dirtyBuckets.isEmpty) return readFiles(spark, dir, sel)
     val (dirty, clean) = sel.partition(f => dirtyBuckets.contains(f.bucket))
-    val (tagged, nGens) = readTagged(spark, dir, dirty)
-    val bits = genBits(nGens)
-    require(dirty.map(_.maxSeq).max < (1L << (62 - bits)),
-      s"seq too large for $nGens-generation encoding")
-    val enc = shiftleft(col("seq"), bits) + col("_gen")
-    val keys = tagged
-      .select(col("url"), col("warc_ts"), enc.as("_e"))
-      .groupBy(col("url"))
-      .agg(graft.plans.LwwFunctions.lww_seq(spark, col("warc_ts"), col("_e"))
-        .as("_w_e"))
-      .select(col("url").as("_k_url"), col("_w_e"))
-    val dirtyDf = tagged.withColumn("_e", enc)
-      .join(keys.hint("SHUFFLE_HASH"),
-        col("url") === col("_k_url") && (col("_e") - col("_w_e") === 0L))
-      .drop("_k_url", "_w_e", "_e", "_gen")
-    readFiles(spark, dir, clean).unionByName(dirtyDf)
+    readFiles(spark, dir, clean)
+      .unionByName(lwwCollapse(readTagged(spark, dir, dirty)._1).drop("_gen"))
   }
 
   /** The user-facing latest-state view: live rows only (delta overlays
@@ -325,21 +320,15 @@ object LakeTable {
     * "collapse and write" step: `rows` (tableSchema + a `bucket` column,
     * optionally a `_gen` write generation) may hold several rows per url
     * — the target files of a copy-on-write epoch beside the batch's
-    * candidate rows, or redelivered copies of one event — and each url
-    * keeps its max
-    * (warc_ts, seq, _gen) row. Tombstones stay rows, so a later update
-    * older than a delete cannot resurrect the url. Rows with a null
-    * warc_ts are dropped first: the lww_seq winner aggregate ignores
-    * them too.
+    * candidate rows, or redelivered copies of one event — and
+    * [[lwwCollapse]] keeps one.
     *
     * Plan: ONE exchange, the repartition-by-bucket (one output file per
     * bucket; at 100 TB each bucket is itself a directory of many files,
-    * the entry granularity stays per-file). The collapse is a row_number
-    * window partitioned by (bucket, url_hash, url): the bucket hash
-    * partitioning already satisfies it, so the window adds no exchange,
-    * and its sort is the (url_hash, url) file order. The collapsed result
-    * is persisted and feeds two jobs: the write and one per-bucket stats
-    * aggregate.
+    * the entry granularity stays per-file). It satisfies the collapse's
+    * window, which adds no exchange, and the window's sort is the
+    * (url_hash, url) file order. The collapsed result is persisted and
+    * feeds two jobs: the write and one per-bucket stats aggregate.
     */
   def writeBuckets(spark: SparkSession, dir: String, snapId: Long,
                    rows: DataFrame, touched: Seq[Int],
@@ -347,13 +336,7 @@ object LakeTable {
     if (touched.isEmpty) return Nil
     val rel = s"data/s$snapId-${Commit.token()}$suffix"
     val out = s"$dir/$rel"
-    val gen = if (rows.columns.contains("_gen")) col("_gen") else lit(0)
-    val lww = Window.partitionBy(col("bucket"), col("url_hash"), col("url"))
-      .orderBy(col("warc_ts").desc, col("seq").desc, gen.desc)
-    val collapsed = rows.filter(col("warc_ts").isNotNull)
-      .repartition(touched.size, col("bucket"))
-      .withColumn("_rn", row_number().over(lww))
-      .filter(col("_rn") === 1)
+    val collapsed = lwwCollapse(rows.repartition(touched.size, col("bucket")))
       .select((CdcSchema.tableSchema.fieldNames :+ "bucket").map(col).toIndexedSeq: _*)
     collapsed.persist()
     try {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.feedgen.{FeedGen, TextExtract}
 import graft.model.CdcSchema
-import graft.operators.{LwwCollapse, MergeInto}
+import graft.operators.MergeInto
 import graft.table.LakeTable
 
 /** End-to-end batch ingest: feedgen → collapse → merge (multiple epochs)
@@ -157,13 +157,5 @@ class IngestSpec extends SparkSpec {
     val got = LakeTable.readLive(spark, tableDir)
     assert(got.columns.contains("extra_score"))
     assert(got.select($"extra_score").collect()(0).isNullAt(0))
-  }
-
-  test("salted collapse ≡ plain collapse") {
-    val feed = FeedGen.events(spark, cfg.copy(n = 3000L)).toDF()
-    val a = LwwCollapse.collapse(feed)
-    val b = LwwCollapse.collapseSalted(feed, 8)
-    assert(a.count() === b.count())
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
   }
 }

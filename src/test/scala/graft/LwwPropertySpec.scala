@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions.{lit, xxhash64}
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.rng.Seed
 import graft.model.CdcSchema
-import graft.operators.{LwwCollapse, MergeInto}
+import graft.operators.MergeInto
 import graft.table.LakeTable
 
 /** ScalaCheck properties (SURVEY §5.4): random event permutations,
@@ -67,7 +67,7 @@ class LwwPropertySpec extends SparkSpec {
         val evs = uniqueSeq(evs0)
         val withDups = evs ++ evs.take(dups) // redeliveries
         val shuffled = new scala.util.Random(shuffleSeed).shuffle(withDups)
-        val collapsed = LwwCollapse.collapse(toDf(shuffled))
+        val collapsed = LakeTable.lwwCollapse(toDf(shuffled))
           .filter($"op" =!= "D")
           .select($"url", $"seq")
           .collect().map(r => (r.getString(0), r.getLong(1))).toMap

@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, Spark
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -21,7 +22,9 @@ import graft.table.{FileEntry, LakeTable}
   * CI at sf-tiny if it ever returns to the hot path. It also pins the
   * payload traffic: the bucket write's repartition is the one exchange
   * that carries html/text (the salted fallback adds its key-join
-  * exchange), and each touched target file is scanned once.
+  * exchange), and each touched target file is scanned once. The merged
+  * read is pinned the same way: its LWW collapse is the write's window,
+  * one exchange and no join-back.
   */
 class MergePlanShapeSpec extends SparkSpec {
   import spark.implicits._
@@ -164,6 +167,27 @@ class MergePlanShapeSpec extends SparkSpec {
       assert(!s.contains("html") && !s.contains("text"),
         s"payload column scanned for a narrow projection: $s")
     }
+  }
+
+  test("merged read over delta files: one exchange, no join, each dirty file scanned once") {
+    // readMerged resolves the delta-carrying buckets with the write's own
+    // LWW window — one exchange over the dirty rows and no join-back, so
+    // no file is scanned twice; clean buckets stream through unshuffled
+    val dir = tmpDir("mps-read") + "/t"
+    LakeTable.create(dir, numBuckets = 8)
+    MergeInto.merge(spark, dir, batch(2000, 200), 0L)
+    MergeInto.merge(spark, dir, batch(60, 3), 1L, MergeInto.MergeOnRead)
+    MergeInto.merge(spark, dir, batch(40, 2), 2L, MergeInto.MergeOnRead)
+    val snap = LakeTable.load(dir)
+    val dirtyBuckets = snap.files.filter(_.kind == "delta").map(_.bucket).toSet
+    assert(dirtyBuckets.nonEmpty && dirtyBuckets.size < snap.numBuckets)
+    val plans = capturedPlans { LakeTable.readMerged(spark, dir, snap).collect() }
+    val nodes = epochNodes(plans)
+    val exchanges = nodes.collect { case e: ShuffleExchangeExec => e }
+    assert(exchanges.size === 1, s"expected exactly one exchange, got $exchanges")
+    val joins = nodes.collect { case j: BaseJoinExec => j }
+    assert(joins.isEmpty, s"unexpected joins in the merged read: $joins")
+    assertTargetScans(plans, snap.files, 1, "readMerged")
   }
 
   test("CoW epoch (broadcast path): lww_seq HashAggregate, SortAggregate only in the winner residual") {

@@ -214,6 +214,54 @@ class StreamingDedupIndexSpec extends SparkSpec {
     graft.analytics.SessionCaches.release(spark)
   }
 
+  test("undated events never win: no index entry of their own, and older entries kept") {
+    // the sinks collapse with the table's LWW: an event with a null
+    // warc_ts never wins, so it neither signs a url nor supersedes the
+    // url's dated entry — the table keeps a's epoch-0 row, and so must
+    // both indexes
+    val base = tmpDir("sdix-undated")
+    val words = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    def ev(seq: Long, url: String, text: String, dated: Boolean = true) =
+      (seq, "U", url,
+        if (dated) new java.sql.Timestamp(1700000000000L + seq * 1000L) else null,
+        null: Array[Byte], text, "en", null.asInstanceOf[java.lang.Double])
+    // segment 0: a dated, u undated (its only event)
+    FeedGen.appendSegment(spark, s"$base/feed",
+      Seq(ev(0L, "https://ex.org/a", words + " x"),
+        ev(1L, "https://ex.org/u", words + " x", dated = false))
+        .toDF(CdcSchema.latest.fieldNames: _*).coalesce(1), "s0")
+    // segment 1: an undated update of a, and c with a's epoch-0 text
+    FeedGen.appendSegment(spark, s"$base/feed",
+      Seq(ev(2L, "https://ex.org/a",
+          "an undated rewrite of the page with its own long list of words",
+          dated = false),
+        ev(3L, "https://ex.org/c", words + " x"))
+        .toDF(CdcSchema.latest.fieldNames: _*).coalesce(1), "s1")
+    CdcIngest.runAvailableNow(spark, s"$base/feed", s"$base/table",
+      s"$base/ckpt", numBuckets = 4, maxFilesPerTrigger = Some(1),
+      dedupIndexDir = Some(s"$base/ix"), metricsDir = Some(s"$base/mx"))
+    val Seq(a, u, c) = Seq("a", "u", "c").map(n => xx(s"https://ex.org/$n"))
+    val table = graft.table.LakeTable.readLive(spark, s"$base/table")
+      .select(xxhash64(col("url")), col("seq")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(table === Map(a -> 0L, c -> 3L))
+
+    val epochs = DedupIndex.committedEpochs(s"$base/ix")
+    assert(epochs.size === 2)
+    def signed(e: Long) = DedupIndex.readSigs(spark, s"$base/ix", Seq(e))
+      .select(col("doc_id")).collect().map(_.getLong(0)).toSet
+    assert(signed(epochs.head) === Set(a), "the undated-only url u must not be signed")
+    assert(signed(epochs.last) === Set(c), "a's undated update must not re-sign a")
+    val pairs = DedupIndex.epochPairs(spark, s"$base/ix", epochs.last)
+      .collect().map(r => Set(r.getLong(0), r.getLong(1))).toSet
+    assert(pairs === Set(Set(a, c)), s"c must pair with a's epoch-0 entry, got $pairs")
+    val metrics = graft.operators.MetricsIndex.readLive(spark, s"$base/mx")
+      .select(col("doc_id"), col("ws_tokens")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(metrics === Map(a -> 11L, c -> 11L))
+    graft.analytics.SessionCaches.release(spark)
+  }
+
   private def xx(s: String): Long =
     Seq(Tuple1(s)).toDF("u").select(xxhash64(col("u")))
       .collect()(0).getLong(0)
