@@ -58,8 +58,8 @@ object ConnectedComponents {
     * microseconds. Below this many edges the graph is collected
     * (BOUNDED by construction — the probe is limit(N+1), never an
     * unbounded collect) and solved locally; at or above it the
-    * distributed loop runs unchanged. Override per session with
-    * `spark.graft.cc.localEdges` (0 disables the local path).
+    * distributed loop runs unchanged. Override per call with
+    * `localEdges` (0 disables the local path).
     */
   val LocalSolveEdges = 1 << 20
 
@@ -68,28 +68,19 @@ object ConnectedComponents {
     */
   def run(spark: SparkSession, pairs: DataFrame,
           hashMinBudget: Int = HashMinBudget,
-          maxRounds: Int = MaxRounds): CCResult = {
+          maxRounds: Int = MaxRounds,
+          localEdges: Int = LocalSolveEdges): CCResult = {
+    require(localEdges >= 0 && localEdges < Int.MaxValue,
+      s"localEdges must be in [0, Int.MaxValue), got $localEdges")
     val Array(cSrc, cDst) = pairs.columns.take(2)
     val p = pairs.select(col(cSrc).as("src"), col(cDst).as("dst"))
-    // clamp to a sane Int range before it feeds limit(): a value above
-    // Int.MaxValue would overflow to a negative/garbage limit, and a
-    // non-numeric value should fail with the conf name, not a bare NFE
-    val localCap = spark.conf
-      .getOption("spark.graft.cc.localEdges")
-      .map { v =>
-        val n = try v.toLong catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"spark.graft.cc.localEdges must be a long, got '$v'")
-        }
-        math.min(math.max(n, 0L), (Int.MaxValue - 1).toLong)
-      }.getOrElse(LocalSolveEdges.toLong)
-    if (localCap > 0) {
-      // one evaluation, early-terminated: at most localCap+1 rows ever
+    if (localEdges > 0) {
+      // one evaluation, early-terminated: at most localEdges+1 rows ever
       // reach the driver, and if they all fit we already hold the graph
       val head = p.select(col("src").cast("long"), col("dst").cast("long"))
-        .limit(localCap.toInt + 1)
+        .limit(localEdges + 1)
         .collect().map(r => (r.getLong(0), r.getLong(1)))
-      if (head.length <= localCap) return localSolve(spark, head)
+      if (head.length <= localEdges) return localSolve(spark, head)
     }
     val edges = p.unionByName(p.select(col("dst").as("src"), col("src").as("dst")))
       .persist()

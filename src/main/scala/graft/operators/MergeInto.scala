@@ -27,10 +27,10 @@ import graft.table.{EpochStat, LakeTable, Snapshot}
   *   2. phase B, a key join that keeps only the batch rows carrying a
   *      winner (url, seq) — broadcast and map-side, or salted above
   *      [[BroadcastKeyLimit]];
-  *   3. [[LakeTable.writeBuckets]] over those candidate rows (MoR) or
-  *      over the touched target files ∪ the candidates (CoW): its one
-  *      repartition-by-bucket exchange carries the payload, and its
-  *      row_number window is the LWW collapse.
+  *   3. [[LakeTable.writeBuckets]] over those candidate rows (MoR), or
+  *      [[LakeTable.rewriteBuckets]] over the touched target files ∪ the
+  *      candidates (CoW): the write's one repartition-by-bucket exchange
+  *      carries the payload, and its row_number window is the LWW collapse.
   * An 8 k-event copy-on-write tail epoch (perfbench `ingest_bulk
   * --trace 1`, local[4]) runs 9 Spark jobs and 17 stages: AQE splits
   * step 1 into 4 jobs, the key broadcast is 1, the write 3 (payload
@@ -57,7 +57,7 @@ object MergeInto {
     *    the touched buckets' current rows AND no touched bucket has hit
     *    its delta-file cap; CopyOnWrite otherwise. A CoW epoch over a
     *    delta-carrying bucket folds the overlay in (minor compaction for
-    *    free — the union-collapse is the same aggregate either way).
+    *    free — compaction is the same bucket rewrite with no batch).
     */
   sealed trait MergeMode
   case object CopyOnWrite extends MergeMode
@@ -183,7 +183,7 @@ object MergeInto {
         max(col("_n_events")).as("maxUrl")).collect()
       if (bstats.isEmpty) {
         val s2 = snap.withEpoch(epochId, EpochStat(epochId, 0, 0, 0, 0, 0.0))
-          .copy(snapshotId = snap.snapshotId + 1, parentId = snap.snapshotId)
+          .successor(Nil, Nil)
         LakeTable.commit(tableDir, s2)
         return MergeResult(s2, applied = true, 0L, 0L, 0L, elapsedMs)
       }
@@ -258,34 +258,22 @@ object MergeInto {
       //    manifest commit; liveRows/tombstones become upper bounds (a
       //    delta upsert may shadow a base row) until the next CoW fold-in
       //    or compaction restores exact counts; per-FILE stats stay exact
-      //    throughout. CoW rewrites the touched buckets from their current
-      //    files ∪ the candidates, the batch tagged as the newest write
-      //    generation (LakeTable.readTagged), so a redelivered event that
-      //    already sits in the table keeps exactly one copy. Delta overlays
-      //    on the touched buckets enter the same collapse and their files
-      //    leave the manifest — a CoW epoch IS the overlay fold-in.
+      //    throughout. CoW runs the one bucket rewrite (rewriteBuckets,
+      //    also compaction's) over the touched buckets' files with the
+      //    candidates as the newest write generation, so a redelivered
+      //    event already in the table keeps exactly one copy; delta
+      //    overlays there fold in and leave the manifest.
       val newId = snap.snapshotId + 1
       val (replaced, newFiles) =
         if (useMor)
           (Nil, LakeTable.writeBuckets(spark, tableDir, newId, candidates,
             touched, suffix = "-delta", kind = "delta"))
-        else {
-          val (target, nGens) = LakeTable.readTagged(spark, tableDir, touchedFiles)
-          val input = target
-            .withColumn("bucket", pmod(col("url_hash"), lit(snap.numBuckets)).cast("int"))
-            .unionByName(candidates.withColumn("_gen", lit(nGens)))
-          (touchedFiles, LakeTable.writeBuckets(spark, tableDir, newId, input, touched))
-        }
+        else (touchedFiles, LakeTable.rewriteBuckets(spark, tableDir, newId,
+          touchedFiles, snap.numBuckets, touched, Some(candidates)))
       val durMs = elapsedMs
       val s2 = snap.withEpoch(epochId, EpochStat(epochId, events, upsW, delW,
           durMs, if (durMs > 0) events * 1000.0 / durMs else 0.0))
-        .copy(
-          snapshotId = newId, parentId = snap.snapshotId,
-          files = snap.files.filterNot(replaced.toSet) ++ newFiles,
-          lineage = lineage,
-          liveRows = snap.liveRows - replaced.map(_.live).sum + newFiles.map(_.live).sum,
-          tombstones = snap.tombstones - replaced.map(_.tombs).sum +
-            newFiles.map(_.tombs).sum)
+        .successor(replaced, newFiles).copy(lineage = lineage)
       LakeTable.commit(tableDir, s2)
       MergeResult(s2, applied = true, events, upsW, delW, durMs)
     } finally keyAgg.unpersist()

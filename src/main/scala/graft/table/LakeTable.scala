@@ -102,6 +102,16 @@ case class Snapshot(
       epochStats = (epochStats :+ stat).takeRight(LakeTable.EpochStatsWindow),
       totals = totals.add(stat))
   }
+
+  /** The next snapshot after a write: `replaced` leave the manifest,
+    * `added` join it, and `liveRows`/`tombstones` move by their file
+    * stats (so they stay the sums over `files`).
+    */
+  def successor(replaced: Seq[FileEntry], added: Seq[FileEntry]): Snapshot =
+    copy(snapshotId = snapshotId + 1, parentId = snapshotId,
+      files = files.filterNot(replaced.toSet) ++ added,
+      liveRows = liveRows - replaced.map(_.live).sum + added.map(_.live).sum,
+      tombstones = tombstones - replaced.map(_.tombs).sum + added.map(_.tombs).sum)
 }
 
 /** A minimal snapshot-committed lake table ("Iceberg-v2 semantics rebuilt"
@@ -160,18 +170,6 @@ object LakeTable {
 
   private def emptyTable(spark: SparkSession): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], CdcSchema.tableSchema)
-
-  /** Read raw table rows (tombstones included). `buckets = Some(set)`
-    * prunes at the FILE level from the manifest — the lake analog of
-    * partition pruning; a MERGE touching 3 of 32 buckets scans 3/32 of
-    * the table regardless of total size.
-    */
-  def read(spark: SparkSession, dir: String, snap: Snapshot,
-           buckets: Option[Set[Int]] = None): DataFrame =
-    readFiles(spark, dir, filesIn(snap, buckets))
-
-  private def filesIn(snap: Snapshot, buckets: Option[Set[Int]]): List[FileEntry] =
-    buckets.fold(snap.files)(bs => snap.files.filter(f => bs.contains(f.bucket)))
 
   private def readFiles(spark: SparkSession, dir: String,
                         files: Seq[FileEntry]): DataFrame =
@@ -256,7 +254,7 @@ object LakeTable {
     */
   def readMerged(spark: SparkSession, dir: String, snap: Snapshot,
                  buckets: Option[Set[Int]] = None): DataFrame = {
-    val sel = filesIn(snap, buckets)
+    val sel = buckets.fold(snap.files)(bs => snap.files.filter(f => bs.contains(f.bucket)))
     val dirtyBuckets = sel.filter(_.kind == "delta").map(_.bucket).toSet
     if (dirtyBuckets.isEmpty) return readFiles(spark, dir, sel)
     val (dirty, clean) = sel.partition(f => dirtyBuckets.contains(f.bucket))
@@ -313,15 +311,38 @@ object LakeTable {
   def bucketOf(urlCol: org.apache.spark.sql.Column, numBuckets: Int) =
     pmod(xxhash64(urlCol), lit(numBuckets)).cast("int")
 
+  /** The engine's one bucket rewrite (copy-on-write): `files`, all files
+    * of the buckets being rewritten, read as write generations
+    * ([[readTagged]]) and bucketed in a `numBuckets` layout, plus `newest`
+    * (tableSchema + `bucket`: a merge epoch's candidates; compaction and
+    * rebucketing pass none) as the newest generation, collapsed and
+    * written by [[writeBuckets]] — each file scanned once, one exchange.
+    */
+  private[graft] def rewriteBuckets(spark: SparkSession, dir: String, snapId: Long,
+                                    files: Seq[FileEntry], numBuckets: Int,
+                                    touched: Seq[Int],
+                                    newest: Option[DataFrame] = None,
+                                    tombstoneHorizonMs: Long = Long.MinValue)
+      : List[FileEntry] = {
+    val (stored, nGens) = readTagged(spark, dir, files)
+    val tagged = stored
+      .withColumn("bucket", pmod(col("url_hash"), lit(numBuckets)).cast("int"))
+    val rows = newest.fold(tagged)(n => tagged.unionByName(n.withColumn("_gen", lit(nGens))))
+    writeBuckets(spark, dir, snapId, rows, touched,
+      tombstoneHorizonMs = tombstoneHorizonMs)
+  }
+
   /** LWW-collapse `rows` and write the result as the touched buckets of
     * snapshot `snapId`, into a data dir of this attempt's own (a fresh
     * [[Commit.token]], written once); returns manifest entries with
     * per-bucket pruning + accounting stats. The engine's single
     * "collapse and write" step: `rows` (tableSchema + a `bucket` column,
     * optionally a `_gen` write generation) may hold several rows per url
-    * — the target files of a copy-on-write epoch beside the batch's
-    * candidate rows, or redelivered copies of one event — and
-    * [[lwwCollapse]] keeps one.
+    * — the stored files of a bucket rewrite ([[rewriteBuckets]]) beside
+    * a batch's candidate rows, or redelivered copies of one event — and
+    * [[lwwCollapse]] keeps one. Tombstone winners whose warc_ts predates
+    * `tombstoneHorizonMs` are dropped AFTER the collapse: dropping an
+    * expired tombstone first would resurrect the older row it shadows.
     *
     * Plan: ONE exchange, the repartition-by-bucket (one output file per
     * bucket; at 100 TB each bucket is itself a directory of many files,
@@ -330,13 +351,18 @@ object LakeTable {
     * (url_hash, url) file order. The collapsed result is persisted and
     * feeds two jobs: the write and one per-bucket stats aggregate.
     */
-  def writeBuckets(spark: SparkSession, dir: String, snapId: Long,
-                   rows: DataFrame, touched: Seq[Int],
-                   suffix: String = "", kind: String = "base"): List[FileEntry] = {
+  private[graft] def writeBuckets(spark: SparkSession, dir: String, snapId: Long,
+                                  rows: DataFrame, touched: Seq[Int],
+                                  suffix: String = "", kind: String = "base",
+                                  tombstoneHorizonMs: Long = Long.MinValue)
+      : List[FileEntry] = {
     if (touched.isEmpty) return Nil
     val rel = s"data/s$snapId-${Commit.token()}$suffix"
     val out = s"$dir/$rel"
-    val collapsed = lwwCollapse(rows.repartition(touched.size, col("bucket")))
+    val winners = lwwCollapse(rows.repartition(touched.size, col("bucket")))
+    val collapsed = (if (tombstoneHorizonMs == Long.MinValue) winners
+      else winners.filter(!col("tombstone") ||
+        col("warc_ts").cast("long") * 1000L >= tombstoneHorizonMs))
       .select((CdcSchema.tableSchema.fieldNames :+ "bucket").map(col).toIndexedSeq: _*)
     collapsed.persist()
     try {

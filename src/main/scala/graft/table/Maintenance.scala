@@ -1,8 +1,7 @@
 package graft.table
 
 import java.nio.file.{Files, Path, Paths}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 
 /** Table maintenance: orphan-file vacuum and copy-on-write compaction.
   *
@@ -78,18 +77,17 @@ object Maintenance {
 
   /** One-call maintenance policy for an operator cron job: compact when
     * the merge-on-read overlay has grown past `maxDeltaFiles` (or when a
-    * tombstone horizon is given — expiry only happens through a
-    * compaction pass), then vacuum unreachable files older than
-    * `vacuumGraceMs` and expire superseded snapshot manifests beyond
-    * `keepManifests`. Returns (compacted?, filesVacuumed). The
+    * file may hold a tombstone older than `tombstoneHorizonMs` — expiry only
+    * happens through a compaction pass), then vacuum unreachable files
+    * older than `vacuumGraceMs` and expire superseded snapshot manifests
+    * beyond `keepManifests`. Returns (compacted?, filesVacuumed). The
     * thresholds bound the read-side merge tax, the orphan footprint AND
     * the metadata chain without a human in the loop. NB expiry is ON by
     * default: changelog/time-travel consumers must poll within the last
     * `keepManifests` snapshots or re-baseline (their reads past the
     * horizon fail loudly) — raise `keepManifests` for slow consumers.
-    * This is the engine-side
-    * analog of the reference's scheduler-driven upkeep (scheduler.py),
-    * expressed as policy over the manifest instead of cron-driven SQL.
+    * This is the engine-side analog of the reference's scheduler-driven
+    * upkeep (scheduler.py), as policy over the manifest, not cron SQL.
     */
   def autoMaintain(spark: SparkSession, dir: String,
                    maxDeltaFiles: Int = 16,
@@ -98,23 +96,25 @@ object Maintenance {
                    keepManifests: Int = DefaultKeepManifests): (Boolean, Int) = {
     val snap = LakeTable.load(dir)
     val deltas = snap.files.count(_.kind == "delta")
-    val expirable = tombstoneHorizonMs != Long.MinValue &&
-      snap.files.exists(f => f.tombs > 0 && f.minTsMs < tombstoneHorizonMs)
-    val doCompact = deltas > maxDeltaFiles || expirable
+    val doCompact = deltas > maxDeltaFiles ||
+      snap.files.exists(expires(_, tombstoneHorizonMs))
     if (doCompact) compact(spark, dir, tombstoneHorizonMs)
     val vacuumed = vacuum(dir, vacuumGraceMs)
     expireSnapshots(dir, keepManifests)
     (doCompact, vacuumed)
   }
 
+  /** `f` may hold a tombstone `horizonMs` expires (min warc_ts is over all rows). */
+  private def expires(f: FileEntry, horizonMs: Long): Boolean =
+    horizonMs != Long.MinValue && f.tombs > 0 && f.minTsMs < horizonMs
+
   /** Rewrite the table into a NEW url-hash bucket layout (bucket split /
-    * merge): a table created with P buckets outgrows them at 100 TB —
-    * this is the Iceberg "rewrite with new partition spec" analog. One
-    * copy-on-write pass: delta overlays are LWW-resolved on the way
-    * through (readMerged), tombstones are preserved (their late-update
-    * protection is layout-independent), and the new snapshot carries
-    * `numBuckets = newBuckets` so every later merge prunes on the new
-    * layout.
+    * merge; the Iceberg "rewrite with new partition spec" analog for a
+    * table that outgrew its P buckets): the one bucket rewrite
+    * ([[LakeTable.rewriteBuckets]]) over every file, with no batch. Delta
+    * overlays are LWW-resolved on the way through, tombstones are kept
+    * (their late-update protection is layout-independent), and the new
+    * snapshot's `numBuckets = newBuckets` so later merges prune on it.
     *
     * Lineage: per-bucket watermarks cannot be remapped (old bucket →
     * urls is not invertible), so every new bucket gets the GLOBAL max
@@ -129,58 +129,40 @@ object Maintenance {
   def rebucket(spark: SparkSession, dir: String, newBuckets: Int): Snapshot = {
     val snap = LakeTable.load(dir)
     require(newBuckets > 0)
-    rewrite(spark, dir, snap, newBuckets,
-      LakeTable.readMerged(spark, dir, snap)) { (s2, newFiles) =>
-      val maxApplied = (snap.lineage.values ++ newFiles.map(_.maxSeq))
-        .foldLeft(Long.MinValue)(math.max)
-      s2.copy(lineage = (0 until newBuckets).map(b => b.toString -> maxApplied).toMap)
-    }
+    val newFiles = LakeTable.rewriteBuckets(spark, dir, snap.snapshotId + 1,
+      snap.files, newBuckets, 0 until newBuckets)
+    val maxApplied = (snap.lineage.values ++ newFiles.map(_.maxSeq))
+      .foldLeft(Long.MinValue)(math.max)
+    val s2 = snap.successor(snap.files, newFiles).copy(numBuckets = newBuckets,
+      lineage = (0 until newBuckets).map(b => b.toString -> maxApplied).toMap)
+    LakeTable.commit(dir, s2)
+    s2
   }
 
-  /** Rewrite the table into one file per bucket (copy-on-write compaction),
-    * optionally expiring tombstones whose warc_ts predates
-    * `tombstoneHorizonMs` (epoch millis). Expired tombstones lose their
-    * late-update protection — only expire beyond the feed's max possible
-    * lateness, exactly like Iceberg's delete-file expiry. Logical live
-    * state is unchanged (asserted in MaintenanceSpec). Commits a new
-    * snapshot; pair with `vacuum` to reclaim the superseded files.
+  /** Copy-on-write compaction into one base file per bucket: the buckets
+    * that carry delta files, plus, given `tombstoneHorizonMs` (epoch
+    * millis), those with a file that may hold an older tombstone, which
+    * the rewrite expires after its collapse. Clean buckets are not read:
+    * each already holds one base file. The rewrite is a copy-on-write
+    * epoch with no batch ([[LakeTable.rewriteBuckets]]). Expired
+    * tombstones lose their late-update protection — only expire beyond
+    * the feed's max possible lateness, like Iceberg's delete-file expiry.
+    * Logical live state is unchanged (asserted in MaintenanceSpec).
+    * Commits a new snapshot, or returns the current one when no bucket
+    * qualifies; pair with `vacuum` to reclaim the superseded files.
     */
   def compact(spark: SparkSession, dir: String,
               tombstoneHorizonMs: Long = Long.MinValue): Snapshot = {
     val snap = LakeTable.load(dir)
-    // Delta overlays must be LWW-resolved BEFORE the tombstone-horizon
-    // filter: dropping an expired delta tombstone first would resurrect
-    // the older base row it shadows. readMerged collapses only buckets
-    // that carry deltas, so a pure copy-on-write table compacts
-    // shuffle-free.
-    rewrite(spark, dir, snap, snap.numBuckets, LakeTable.readMerged(spark, dir, snap)
-      .filter(!col("tombstone") ||
-        col("warc_ts").cast("long") * 1000L >= tombstoneHorizonMs))((s2, _) => s2)
-  }
-
-  /** Write `rows` (table rows) as the whole table in `numBuckets`
-    * buckets and commit it as the snapshot after `snap`; `adjust` sets
-    * whatever else the rewrite changes in the manifest.
-    */
-  private def rewrite(spark: SparkSession, dir: String, snap: Snapshot,
-                      numBuckets: Int, rows0: DataFrame)
-                     (adjust: (Snapshot, List[FileEntry]) => Snapshot): Snapshot = {
-    val rows = rows0
-      .withColumn("bucket", pmod(col("url_hash"), lit(numBuckets)).cast("int"))
-    rows.persist()
-    try {
-      val touched = rows.select(col("bucket")).distinct()
-        .collect().map(_.getInt(0)).sorted.toSeq
-      val newId = snap.snapshotId + 1
-      val newFiles = LakeTable.writeBuckets(spark, dir, newId, rows, touched)
-      val s2 = adjust(snap.copy(
-        snapshotId = newId, parentId = snap.snapshotId,
-        numBuckets = numBuckets,
-        files = newFiles,
-        liveRows = newFiles.map(_.live).sum,
-        tombstones = newFiles.map(_.tombs).sum), newFiles)
-      LakeTable.commit(dir, s2)
-      s2
-    } finally rows.unpersist()
+    val touched = snap.files
+      .filter(f => f.kind == "delta" || expires(f, tombstoneHorizonMs))
+      .map(_.bucket).distinct.sorted
+    if (touched.isEmpty) return snap
+    val replaced = snap.files.filter(f => touched.contains(f.bucket))
+    val s2 = snap.successor(replaced, LakeTable.rewriteBuckets(spark, dir,
+      snap.snapshotId + 1, replaced, snap.numBuckets, touched,
+      tombstoneHorizonMs = tombstoneHorizonMs))
+    LakeTable.commit(dir, s2)
+    s2
   }
 }

@@ -15,12 +15,9 @@ class ConnectedComponentsSpec extends SparkSpec {
   private def labelsOf(pairs: Seq[(Long, Long)],
                        hashMinBudget: Int = ConnectedComponents.HashMinBudget,
                        maxRounds: Int = ConnectedComponents.MaxRounds) = {
-    spark.conf.set("spark.graft.cc.localEdges", "0")
-    try {
-      val r = ConnectedComponents.run(spark,
-        pairs.toDF("doc_a", "doc_b"), hashMinBudget, maxRounds)
-      (r.labels.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap, r.rounds)
-    } finally spark.conf.unset("spark.graft.cc.localEdges")
+    val r = ConnectedComponents.run(spark,
+      pairs.toDF("doc_a", "doc_b"), hashMinBudget, maxRounds, localEdges = 0)
+    (r.labels.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap, r.rounds)
   }
 
   test("driver-local solve (default for small graphs) equals the distributed loop") {

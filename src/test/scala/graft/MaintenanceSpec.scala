@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.feedgen.FeedGen
 import graft.operators.MergeInto
@@ -94,6 +95,75 @@ class MaintenanceSpec extends SparkSpec {
     assert(c2 && vac > 0)
     assert(LakeTable.load(dir).files.forall(_.kind == "base"))
     assert(state(dir) === before)
+  }
+
+  /** Epoch 0 (`base`) writes every one of 8 buckets copy-on-write, then
+    * two merge-on-read epochs touch only two buckets outside `avoid`:
+    * those carry delta files, the rest stay clean. Returns the dirty ids.
+    */
+  def partlyDirty(dir: String, base: DataFrame, avoid: Int = -1): Set[Int] = {
+    LakeTable.create(dir, numBuckets = 8)
+    MergeInto.merge(spark, dir, base, 0L)
+    val dirty = (0 until 8).filterNot(_ == avoid).take(2).toSet
+    val tail = FeedGen.events(spark, cfg).toDF()
+      .filter($"seq" >= 2000L && LakeTable.bucketOf($"url", 8).isin(dirty.toSeq: _*))
+    MergeInto.merge(spark, dir, tail.filter($"seq" < 3000L), 1L, MergeInto.MergeOnRead)
+    MergeInto.merge(spark, dir, tail.filter($"seq" >= 3000L), 2L, MergeInto.MergeOnRead)
+    val snap = LakeTable.load(dir)
+    assert(snap.files.map(_.bucket).toSet === (0 until 8).toSet)
+    assert(snap.files.filter(_.kind == "delta").map(_.bucket).toSet === dirty)
+    dirty
+  }
+
+  /** The snapshot's counts are the exact live and tombstone row counts. */
+  def assertExactCounts(dir: String): Unit = {
+    val snap = LakeTable.load(dir)
+    val merged = LakeTable.readMerged(spark, dir, snap)
+    assert(snap.liveRows === merged.filter(!$"tombstone").count())
+    assert(snap.tombstones === merged.filter($"tombstone").count())
+  }
+
+  test("compact rewrites only delta-carrying buckets: clean files kept, counts exact") {
+    val dir = tmpDir("maint-part") + "/t"
+    val feed = FeedGen.events(spark, cfg).toDF()
+    val dirty = partlyDirty(dir, feed.filter($"seq" < 2000L))
+    val clean = LakeTable.load(dir).files.filterNot(f => dirty(f.bucket))
+    val before = state(dir)
+
+    val s2 = Maintenance.compact(spark, dir)
+    assert(state(dir) === before)
+    clean.foreach(f => assert(s2.files.contains(f), s"clean bucket ${f.bucket} rewritten"))
+    assert(s2.files.forall(_.kind == "base"))
+    assert(s2.files.groupBy(_.bucket).values.forall(_.size == 1))
+    assert(s2.tombstones > 0)
+    assertExactCounts(dir)
+    // nothing left to compact: no new snapshot
+    assert(Maintenance.compact(spark, dir).snapshotId === s2.snapshotId)
+    assert(LakeTable.load(dir).snapshotId === s2.snapshotId)
+  }
+
+  test("compact with a horizon also rewrites a clean bucket holding an expired tombstone") {
+    val dir = tmpDir("maint-part-ts") + "/t"
+    val feed = FeedGen.events(spark, cfg).toDF()
+    val oldUrl = "https://old.example.com/gone"
+    val oldBucket = Seq(oldUrl).toDF("url").select(LakeTable.bucketOf($"url", 8)).head.getInt(0)
+    val oldDelete = Seq((100000L, "D", oldUrl, new java.sql.Timestamp(1000L)))
+      .toDF("seq", "op", "url", "warc_ts")
+    val dirty = partlyDirty(dir, MergeInto.alignToLatest(feed.filter($"seq" < 2000L))
+      .unionByName(MergeInto.alignToLatest(oldDelete)), avoid = oldBucket)
+    val snap = LakeTable.load(dir)
+    val expiredFile = snap.files.filter(_.bucket == oldBucket)
+    val clean = snap.files.filterNot(f => dirty(f.bucket) || f.bucket == oldBucket)
+    val before = state(dir)
+
+    val s2 = Maintenance.compact(spark, dir, tombstoneHorizonMs = 1000000L)
+    assert(state(dir) === before)
+    assert(expiredFile.nonEmpty && !expiredFile.exists(s2.files.contains),
+      "the bucket holding the expired tombstone was not rewritten")
+    clean.foreach(f => assert(s2.files.contains(f), s"clean bucket ${f.bucket} rewritten"))
+    assert(LakeTable.readMerged(spark, dir, s2).filter($"url" === oldUrl).count() === 0L)
+    assert(s2.tombstones > 0)
+    assertExactCounts(dir)
   }
 
   test("rebucket 8→32: state unchanged, new layout live, later merges + changelog work") {

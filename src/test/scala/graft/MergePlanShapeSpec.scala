@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.operators.MergeInto
-import graft.table.{FileEntry, LakeTable}
+import graft.table.{FileEntry, LakeTable, Maintenance}
 
 /** Plan-shape guard for the MERGE path itself (PlanShapeSpec covers the
   * 57 queries, not the epoch): the LWW winner selection must stay the
@@ -24,7 +24,8 @@ import graft.table.{FileEntry, LakeTable}
   * that carries html/text (the salted fallback adds its key-join
   * exchange), and each touched target file is scanned once. The merged
   * read is pinned the same way: its LWW collapse is the write's window,
-  * one exchange and no join-back.
+  * one exchange and no join-back; and so is compaction, the same bucket
+  * rewrite with no batch, which never reads a clean bucket.
   */
 class MergePlanShapeSpec extends SparkSpec {
   import spark.implicits._
@@ -188,6 +189,26 @@ class MergePlanShapeSpec extends SparkSpec {
     val joins = nodes.collect { case j: BaseJoinExec => j }
     assert(joins.isEmpty, s"unexpected joins in the merged read: $joins")
     assertTargetScans(plans, snap.files, 1, "readMerged")
+  }
+
+  test("compaction: one payload exchange, dirty buckets' files scanned once, clean ones never") {
+    // compaction is the copy-on-write epoch's bucket rewrite with no
+    // batch: the delta-carrying buckets cross the write's one exchange
+    // and are collapsed once; clean buckets keep their files unread
+    val dir = tmpDir("mps-compact") + "/t"
+    LakeTable.create(dir, numBuckets = 8)
+    MergeInto.merge(spark, dir, batch(2000, 200), 0L)
+    MergeInto.merge(spark, dir, batch(60, 3), 1L, MergeInto.MergeOnRead)
+    MergeInto.merge(spark, dir, batch(40, 2), 2L, MergeInto.MergeOnRead)
+    val snap = LakeTable.load(dir)
+    val dirtyBuckets = snap.files.filter(_.kind == "delta").map(_.bucket).toSet
+    val (dirty, clean) = snap.files.partition(f => dirtyBuckets(f.bucket))
+    assert(dirtyBuckets.nonEmpty && clean.nonEmpty)
+    val plans = capturedPlans { Maintenance.compact(spark, dir) }
+    val ex = payloadExchanges(plans)
+    assert(ex.size === 1, s"expected exactly one payload exchange, got $ex")
+    assertTargetScans(plans, dirty, 1, "compact/dirty")
+    assertTargetScans(plans, clean, 0, "compact/clean")
   }
 
   test("CoW epoch (broadcast path): lww_seq HashAggregate, SortAggregate only in the winner residual") {
