@@ -1,7 +1,5 @@
 package graft.bench
 
-import org.apache.spark.sql.SparkSession
-
 /** Round-6 measurement harness (guide §1): times the SAME query suite
   * as [[graft.Bench]] with the same session config and per-query action,
   * but without the ingest trials — a 2-3 minute loop for optimization
@@ -21,20 +19,7 @@ object BenchExtra {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
-      .config("spark.local.dir",
-        if (new java.io.File("/dev/shm").isDirectory) {
-          val d = new java.io.File("/dev/shm/graft-spark-local")
-          d.mkdirs(); d.getAbsolutePath
-        } else System.getProperty("java.io.tmpdir"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchSession("graft-bench-extra", s"local[$cpus]", cpus)
 
     // identical warmup to Bench.scala
     Seq("q01_pricing_summary", "dd03_ngram_jaccard", "dd06_embedding_neardup",

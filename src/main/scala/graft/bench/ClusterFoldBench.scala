@@ -1,6 +1,5 @@
 package graft.bench
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.analytics.{DedupQueries, SessionCaches, Tables}
 import graft.operators.{ClusterIndex, ConnectedComponents}
@@ -36,26 +35,9 @@ object ClusterFoldBench {
   def main(args: Array[String]): Unit = {
     val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft-cluster-fold-bench")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
-      .config("spark.local.dir",
-        if (new java.io.File("/dev/shm").isDirectory) {
-          val d = new java.io.File("/dev/shm/graft-spark-local")
-          d.mkdirs(); d.getAbsolutePath
-        } else System.getProperty("java.io.tmpdir"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchSession("graft-cluster-fold-bench", s"local[$cores]", cores)
 
-    val root = java.nio.file.Paths.get(
-      if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-ddbench"
-      else System.getProperty("java.io.tmpdir"))
-    java.nio.file.Files.createDirectories(root)
+    val root = BenchSession.scratchRoot("graft-ddbench")
 
     // dense corpus (BENCH/BASELINE.md §3a construction): ×X near-dup
     // copies so the pair graph carries real volume

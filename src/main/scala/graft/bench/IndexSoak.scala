@@ -1,6 +1,5 @@
 package graft.bench
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.DedupIndex
 
@@ -34,27 +33,10 @@ object IndexSoak {
     val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
     val epochs = sys.env.getOrElse("SPARK_GRAFT_IXSOAK_EPOCHS", "2000").toInt
     val perEpoch = sys.env.getOrElse("SPARK_GRAFT_IXSOAK_BATCH", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft-index-soak")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
-      .config("spark.local.dir",
-        if (new java.io.File("/dev/shm").isDirectory) {
-          val d = new java.io.File("/dev/shm/graft-spark-local")
-          d.mkdirs(); d.getAbsolutePath
-        } else System.getProperty("java.io.tmpdir"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchSession("graft-index-soak", s"local[$cores]", cores)
     import spark.implicits._
 
-    val root = java.nio.file.Paths.get(
-      if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-soak"
-      else System.getProperty("java.io.tmpdir"))
-    java.nio.file.Files.createDirectories(root)
+    val root = BenchSession.scratchRoot("graft-soak")
     val base = java.nio.file.Files.createTempDirectory(root, "ixsoak").toString
     val dir = s"$base/ix"
 

@@ -121,31 +121,11 @@ object IngestBench {
     val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
     val n = sys.env.getOrElse("SPARK_GRAFT_INGEST_N", "1000000").toLong
     val buckets = sys.env.getOrElse("SPARK_GRAFT_BUCKETS", "64").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft-ingest-bench")
-      .config("spark.sql.shuffle.partitions", cores * 2)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
-      // shuffle files on tmpfs: the sandbox's single virtio disk caps
-      // shuffle scaling at ~1.1x (measured); cluster executors get local
-      // SSDs whose aggregate bandwidth scales with node count
-      .config("spark.local.dir",
-        if (new java.io.File("/dev/shm").isDirectory) {
-          val d = new java.io.File("/dev/shm/graft-spark-local")
-          d.mkdirs(); d.getAbsolutePath
-        } else System.getProperty("java.io.tmpdir"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchSession("graft-ingest-bench", s"local[$cores]", cores * 2)
     // feed/table/ckpt on tmpfs like the shuffle dirs (BENCH/BASELINE.md
     // methodology): the single virtio disk would otherwise add its own
     // variance to the measurement
-    val root = java.nio.file.Paths.get(
-      if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-ibench"
-      else System.getProperty("java.io.tmpdir"))
-    java.nio.file.Files.createDirectories(root)
+    val root = BenchSession.scratchRoot("graft-ibench")
     val base = java.nio.file.Files.createTempDirectory(root, "run").toString
     val control = PlatformControl.run(spark)
     val r = try IngestBenchCore.run(spark, n, cores, base, buckets)

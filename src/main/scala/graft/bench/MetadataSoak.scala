@@ -1,6 +1,5 @@
 package graft.bench
 
-import org.apache.spark.sql.SparkSession
 import graft.feedgen.FeedGen
 import graft.operators.MergeInto
 import graft.table.{LakeTable, Maintenance}
@@ -27,27 +26,10 @@ object MetadataSoak {
     val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
     val epochs = sys.env.getOrElse("SPARK_GRAFT_SOAK_EPOCHS", "10000").toInt
     val perEpoch = sys.env.getOrElse("SPARK_GRAFT_SOAK_BATCH", "256").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft-metadata-soak")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
-      .config("spark.local.dir",
-        if (new java.io.File("/dev/shm").isDirectory) {
-          val d = new java.io.File("/dev/shm/graft-spark-local")
-          d.mkdirs(); d.getAbsolutePath
-        } else System.getProperty("java.io.tmpdir"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchSession("graft-metadata-soak", s"local[$cores]", cores)
     import spark.implicits._
 
-    val root = java.nio.file.Paths.get(
-      if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-soak"
-      else System.getProperty("java.io.tmpdir"))
-    java.nio.file.Files.createDirectories(root)
+    val root = BenchSession.scratchRoot("graft-soak")
     val base = java.nio.file.Files.createTempDirectory(root, "run").toString
     val dir = s"$base/table"
     LakeTable.create(dir, numBuckets = 8)

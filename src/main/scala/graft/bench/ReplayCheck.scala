@@ -1,6 +1,5 @@
 package graft.bench
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -26,25 +25,9 @@ object ReplayCheck {
     val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
     val n = sys.env.getOrElse("SPARK_GRAFT_INGEST_N", "4000000").toLong
     val manyEpochs = sys.env.get("SPARK_GRAFT_EPOCHS").contains("many")
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft-replay-check")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.local.dir",
-        if (new java.io.File("/dev/shm").isDirectory) {
-          val d = new java.io.File("/dev/shm/graft-spark-local")
-          d.mkdirs(); d.getAbsolutePath
-        } else System.getProperty("java.io.tmpdir"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchSession("graft-replay-check", s"local[$cores]", cores)
 
-    val root = java.nio.file.Paths.get(
-      if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-replay"
-      else System.getProperty("java.io.tmpdir"))
-    java.nio.file.Files.createDirectories(root)
+    val root = BenchSession.scratchRoot("graft-replay")
     val base = java.nio.file.Files.createTempDirectory(root, "run").toString
     try {
       val cfg = graft.feedgen.FeedGen.Config(seed = 42L, n = n,

@@ -1,6 +1,5 @@
 package graft.bench
 
-import org.apache.spark.sql.SparkSession
 import graft.feedgen.FeedGen
 import graft.streaming.CdcIngest
 
@@ -25,24 +24,8 @@ object ScalingBench {
     // local-cluster[2,4,8192] vs local-cluster[8,4,8192] gives the
     // north-rule's N vs 4N EXECUTORS as separate JVMs (own heap/GC),
     // the closest sandbox stand-in for two real cluster sizes.
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cores]"))
-      .appName("graft-scaling-bench")
-      .config("spark.sql.shuffle.partitions", cores * 2)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
-      // shuffle files on tmpfs: the sandbox's single virtio disk caps
-      // shuffle scaling at ~1.1x (measured); cluster executors get local
-      // SSDs whose aggregate bandwidth scales with node count
-      .config("spark.local.dir",
-        if (new java.io.File("/dev/shm").isDirectory) {
-          val d = new java.io.File("/dev/shm/graft-spark-local")
-          d.mkdirs(); d.getAbsolutePath
-        } else System.getProperty("java.io.tmpdir"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = BenchSession("graft-scaling-bench",
+      sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cores]"), cores * 2)
 
     // segment count scales with n (~1M events ≈ 73 MB per file) so scan
     // tasks stay fine-grained at the largest core count under test —
@@ -58,10 +41,7 @@ object ScalingBench {
     // aggregate write bandwidth scales with node count, while this VM
     // has ONE virtio disk shared by both core counts — writing the
     // output table to it would measure the disk, not the engine.
-    val trialBase = java.nio.file.Paths.get(
-      if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-scale-trials"
-      else System.getProperty("java.io.tmpdir"))
-    java.nio.file.Files.createDirectories(trialBase)
+    val trialBase = BenchSession.scratchRoot("graft-scale-trials")
 
     // inline platform control per trial (round-4 methodology): the
     // control is core-count-invariant on a quiet host, so readers can

@@ -8,7 +8,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * Reference analog: the Telegram change feed the reference tails in
   * pages (/root/reference/convoetl/extractors/telegram.py:88–148). Here
   * the feed is synthesized: Common-Crawl-style urls with Zipf-skewed
-  * domains (hot-key realism for the salting path), inserts / updates /
+  * domains (hot-key realism for the merge's skew bound), inserts / updates /
   * deletes per url over time, out-of-order `warc_ts`, exact duplicate
   * redeliveries, equal-`warc_ts` ties broken only by `seq`, and an
   * additive column (`extra_score`) appearing mid-stream.

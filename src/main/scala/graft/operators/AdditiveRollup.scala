@@ -45,13 +45,15 @@ object AdditiveRollup {
   /** Fold one epoch's pre-aggregated `delta` into the rollup at `dir`.
     * Epoch-idempotent (RollupStore ledger): a redelivered epoch is a
     * no-op, so counts never double under at-least-once delivery.
-    * `combine` lists every non-key column of `delta` with its rule.
+    * `combine` lists every non-key column of `delta` with its rule; an
+    * epoch whose state would exceed `maxRows` keys fails uncommitted.
     * Returns true if applied.
     */
   def upsert(spark: SparkSession, dir: String, delta: DataFrame,
              keyCols: Seq[String], epochId: Long,
-             combine: Seq[(String, Combine)]): Boolean =
-    RollupStore.applyEpoch(spark, dir, epochId) {
+             combine: Seq[(String, Combine)],
+             maxRows: Long = RollupStore.DefaultMaxRows): Boolean =
+    RollupStore.applyEpoch(spark, dir, epochId, maxRows) {
       case None => delta
       case Some(old) =>
         val joinCond = keyCols.map(k => old(k) <=> delta(k)).reduce(_ && _)

@@ -1,7 +1,9 @@
 package graft.operators
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.sketch.BloomFilter
 import graft.model.CdcSchema
 import graft.table.{EpochStat, LakeTable, Snapshot}
 
@@ -17,25 +19,25 @@ import graft.table.{EpochStat, LakeTable, Snapshot}
   * redelivered epoch (foreachBatch retry after crash) is detected and
   * skipped BEFORE any work, so the sink is idempotent end-to-end.
   *
-  * Plan shape — three steps, one payload exchange (two on the salted
-  * fallback):
+  * Plan shape — three steps, one payload exchange, the same at every
+  * key count:
   *   1. phase A, a NARROW per-url key aggregate over the batch (the
   *      primitive-buffer lww_seq HashAggregate; map-side partial
-  *      aggregation pre-combines hot keys — the skew bound), cached, plus
-  *      one small collect of per-bucket batch stats (touched buckets,
-  *      counts, lineage, hottest url) that picks CoW vs MoR and the salt;
-  *   2. phase B, a key join that keeps only the batch rows carrying a
-  *      winner (url, seq) — broadcast and map-side, or salted above
-  *      [[BroadcastKeyLimit]];
+  *      aggregation pre-combines hot keys — the skew bound, and the only
+  *      url-keyed exchange), cached, plus one small collect of per-bucket
+  *      batch stats (touched buckets, counts, lineage) that picks CoW vs MoR;
+  *   2. phase B, a map-side filter that keeps the batch rows a Bloom
+  *      filter of the winning (url, seq) keys might contain — no join;
   *   3. [[LakeTable.writeBuckets]] over those candidate rows (MoR), or
   *      [[LakeTable.rewriteBuckets]] over the touched target files ∪ the
   *      candidates (CoW): the write's one repartition-by-bucket exchange
-  *      carries the payload, and its row_number window is the LWW collapse.
+  *      carries the payload, about one row per url, and its row_number
+  *      window is the exact LWW collapse.
   * An 8 k-event copy-on-write tail epoch (perfbench `ingest_bulk
-  * --trace 1`, local[4]) runs 9 Spark jobs and 17 stages: AQE splits
-  * step 1 into 4 jobs, the key broadcast is 1, the write 3 (payload
-  * shuffle, cache build, file write) and the stats aggregate 1 — it reads
-  * the bucket-partitioned cache with no exchange.
+  * --trace 1`, local[4]) runs 10 Spark jobs and 20 stages: AQE splits
+  * step 1 into 4 jobs, the filter aggregate into 2, the write into 3
+  * (payload shuffle, cache build, file write) and the stats aggregate 1 —
+  * it reads the bucket-partitioned cache with no exchange.
   * Old live/tombstone accounting comes from manifest file stats — no
   * rescan of the target. Only the url-hash buckets the batch touches are
   * read and rewritten, each touched file scanned once: a batch touching
@@ -94,41 +96,8 @@ object MergeInto {
     batch.select(cols.toIndexedSeq: _*)
   }
 
-  /** Above this many distinct urls per epoch the winner-key set is no
-    * longer broadcastable and the merge falls back to the salted
-    * shuffled-hash join. ~4M keys × ~50B ≈ 200MB broadcast ceiling.
-    */
-  val BroadcastKeyLimit: Long = 4000000L
-
-  /** Minimum salt factor for the fallback join's shuffle key: a hot
-    * url's payload spreads over at least this many partitions
-    * (pmod(seq, S) on both sides — equal seqs salt identically, so
-    * winners always meet their key). The factor ADAPTS per batch from
-    * the heavy-hitter count the phase-A aggregate already produces
-    * (SURVEY §7.4 "salting factor adaptive per batch"): see
-    * [[saltFactorFor]].
-    */
-  val FallbackSaltFactor: Int = 16
-
-  /** Rows of one url we are willing to leave on a single (url, salt)
-    * partition before widening the salt.
-    */
-  val TargetRowsPerSalt: Long = 2000000L
-
-  /** Adaptive salt: enough partitions that the batch's hottest url
-    * spreads to ≤ TargetRowsPerSalt rows per partition, clamped to
-    * [FallbackSaltFactor, 1024]. A Zipf-head crawl domain with 10^9
-    * events in one backfill epoch gets S=512 instead of drowning 1/16th
-    * of the cluster.
-    */
-  def saltFactorFor(maxEventsPerUrl: Long): Int = {
-    val needed = (maxEventsPerUrl + TargetRowsPerSalt - 1) / TargetRowsPerSalt
-    math.min(1024L, math.max(FallbackSaltFactor.toLong, needed)).toInt
-  }
-
   def merge(spark: SparkSession, tableDir: String, batchIn: DataFrame,
-            epochId: Long, mode: MergeMode = Auto,
-            broadcastKeyLimit: Long = BroadcastKeyLimit): MergeResult = {
+            epochId: Long, mode: MergeMode = Auto): MergeResult = {
     val t0 = System.nanoTime()
     val snap = LakeTable.load(tableDir)
     if (snap.isCommitted(epochId))
@@ -139,10 +108,8 @@ object MergeInto {
     //    NARROW key columns (url, warc_ts, seq, op) — never the html/text
     //    payload: at web scale the payload is ~95% of the row, so the
     //    winner-key aggregate costs ~1/20 of a payload shuffle. Phase B
-    //    broadcasts the winning (url, seq) keys back over the batch and
-    //    keeps winner rows map-side, so the only payload exchange is the
-    //    bucket write's. (Fallback below if the key set is too big to
-    //    broadcast.)
+    //    filters the batch map-side, so the only payload exchange is the
+    //    bucket write's.
     //
     //    The winner argmax is graft.plans.LwwSeq — a declarative
     //    aggregate with a primitive (warc_ts, seq) buffer, so phase A is
@@ -173,14 +140,16 @@ object MergeInto {
       .withColumn("_w_seq", shiftrightunsigned(col("_w_enc"), 1))
       .withColumn("_tomb", col("_w_enc").bitwiseAND(lit(1L)) === 1L)
     keyAgg.persist()
+    var winnerFilter: Option[Broadcast[BloomFilter]] = None
     try {
       // 2. per-bucket batch stats: touched set, metric counts, lineage.
+      //    `keys` counts winners only: a url whose events are all undated
+      //    has none and the table never writes it.
       val bstats = keyAgg.groupBy(col("_bucket").as("bucket")).agg(
         sum(col("_n_events")).as("events"),
         sum(when(col("_tomb"), 1L).otherwise(0L)).as("dels"),
-        count(lit(1)).as("keys"),
-        max(col("_max_seq")).as("maxSeq"),
-        max(col("_n_events")).as("maxUrl")).collect()
+        count(col("_w_enc")).as("keys"),
+        max(col("_max_seq")).as("maxSeq")).collect()
       if (bstats.isEmpty) {
         val s2 = snap.withEpoch(epochId, EpochStat(epochId, 0, 0, 0, 0, 0.0))
           .successor(Nil, Nil)
@@ -194,9 +163,6 @@ object MergeInto {
       val nKeys = bstats.map(_.getLong(3)).sum
       val upsW = nKeys - delW
       val batchLineage = bstats.map(r => r.getInt(0).toString -> r.getLong(4)).toMap
-      // heavy-hitter probe (free: same collect): the hottest url's event
-      // count sets the fallback-join salt width for this epoch
-      val saltF = saltFactorFor(bstats.map(_.getLong(5)).max)
 
       // Write-path choice (manifest stats only — zero extra jobs).
       val touchedFiles = snap.files.filter(f => touchedSet.contains(f.bucket))
@@ -210,43 +176,24 @@ object MergeInto {
           nKeys.toDouble < MorWinnerFraction * targetRows.toDouble
       }
 
-      // Phase B: candidate rows — the batch rows carrying a winner's
-      // (url, seq). Broadcast path when the key set fits
-      // (≤ BroadcastKeyLimit urls): winner keys hash-joined map-side
-      // against the batch, so losers never reach an exchange. No collapse
-      // here: exact redelivered copies of a winner both pass, and
-      // writeBuckets' LWW collapse keeps one.
-      val candidates =
-        if (nKeys <= broadcastKeyLimit) {
-          // key side renamed (as in the fallback path) — joining on a
-          // column derived from `rows` itself degrades to a trivially
-          // true equals predicate and the join would key on seq alone
-          val keys = keyAgg.select(col("url").as("_k_url"), col("_w_seq"))
-          rows.join(broadcast(keys),
-              rows("url") === keys("_k_url") && rows("seq") === col("_w_seq"))
-            .drop("_w_seq", "_k_url")
-        } else {
-          // Fallback above the broadcast ceiling (e.g. a 10^10-event
-          // backfill epoch): shuffle the payload ONCE and hash-join the
-          // winner keys per partition. The shuffle key is SALTED:
-          // (url, pmod(seq,S)) on the event side, (url, pmod(_w_seq,S)) on
-          // the key side. A crawl-hot url (Zipf head) spreads its payload
-          // uniformly over S partitions instead of skewing one (north_rule's
-          // explicit hot-key salting; AQE skew handling is unavailable
-          // inside a streaming foreachBatch). Correct because the only
-          // row that can match carries seq == _w_seq, and equal seqs
-          // salt identically; rows on other salts are losers by
-          // definition. The residual seq check rejects salt collisions.
-          val keys = keyAgg.select(col("url").as("_k_url"), col("_w_seq"),
-            pmod(col("_w_seq"), lit(saltF)).as("_k_salt"))
-          val salted = rows.withColumn("_salt",
-            pmod(col("seq"), lit(saltF)))
-          salted.join(keys.hint("SHUFFLE_HASH"),
-              salted("url") === keys("_k_url") &&
-                salted("_salt") === keys("_k_salt") &&
-                (salted("seq") - keys("_w_seq") === 0L))
-            .drop("_k_url", "_w_seq", "_k_salt", "_salt")
-        }
+      // Phase B: candidate rows — the batch rows whose xxhash64(url, seq)
+      // the winner filter might contain. Spark's Bloom-filter aggregate
+      // builds it over the cached keys: the partial filters merge on the
+      // executors and the driver receives the one result, sized for the
+      // winner count at 1 % false positives. Spark clamps it at its
+      // runtime-filter bounds (spark.sql.optimizer.runtime.bloomFilter.
+      // maxNumItems / maxNumBits: 4 M winners, 8 MiB by default); past
+      // them only the false-positive rate grows. The test is map-side: no
+      // join and no url-keyed exchange at any key count. A Bloom filter
+      // has no false negatives, so a false positive is a loser whose
+      // winner also passes and outranks it in writeBuckets' LWW collapse,
+      // which likewise keeps one of a winner's redelivered exact copies.
+      val filter = keyAgg.where(col("_w_seq").isNotNull)
+        .stat.bloomFilter(xxhash64(col("url"), col("_w_seq")), math.max(nKeys, 1L), 0.01)
+      val bc = spark.sparkContext.broadcast(filter)
+      winnerFilter = Some(bc)
+      val mightWin = udf((h: Long) => bc.value.mightContainLong(h))
+      val candidates = rows.filter(mightWin(xxhash64(col("url"), col("seq"))))
 
       val lineage = snap.lineage ++ batchLineage.map { case (b, s) =>
         b -> math.max(s, snap.lineage.getOrElse(b, Long.MinValue))
@@ -276,6 +223,9 @@ object MergeInto {
         .successor(replaced, newFiles).copy(lineage = lineage)
       LakeTable.commit(tableDir, s2)
       MergeResult(s2, applied = true, events, upsW, delW, durMs)
-    } finally keyAgg.unpersist()
+    } finally {
+      keyAgg.unpersist()
+      winnerFilter.foreach(_.destroy())
+    }
   }
 }

@@ -67,6 +67,8 @@ object Reconcile {
       .select(col("url"), col("warc_ts"), col("seq"), col("op"))
       .groupBy(col("url"))
       .agg(graft.plans.LwwFunctions.lww_seq(spark, col("warc_ts"), enc).as("_enc"))
+      // a url whose events are all undated has no winner, and no row
+      .where(col("_enc").isNotNull)
       .select(col("url"),
         shiftrightunsigned(col("_enc"), 1).as("feed_seq"),
         (col("_enc").bitwiseAND(lit(1L)) === 1L).as("feed_tombstone"))

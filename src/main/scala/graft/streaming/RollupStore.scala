@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.nio.file.Paths
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.table.Commit
+import graft.table.{Commit, EpochLedger}
 
 /** Epoch-idempotent store for BOUNDED-CARDINALITY keyed rollup tables
   * (shared by the windowed metrics rollup and the additive keyed stats
@@ -13,9 +13,11 @@ import graft.table.Commit
   * O(feed); anything unbounded belongs in a LakeTable, not here.
   *
   * Layout under the rollup dir:
-  *   meta/v{N}.json — {"path": "v{N}-{token}", "epochs": [...]}: the
-  *                    state dir version N names and the epochs applied
-  *                    up to it, committed together by one put-if-absent
+  *   meta/v{N}.json — {"path": "v{N}-{token}", "floor": F, "epochs": [...]}:
+  *                    the state dir version N names and the epochs
+  *                    applied up to it (a bounded [[EpochLedger]]: every
+  *                    id ≤ F, plus the listed ids above it), committed
+  *                    together by one put-if-absent
   *   meta/CURRENT   — read hint
   *   v{N}-{token}/  — the state one attempt at version N wrote
   */
@@ -24,19 +26,18 @@ object RollupStore {
   import org.json4s.jackson.Serialization
   implicit private val fmts: Formats = DefaultFormats
 
-  private final case class Version(path: String, epochs: List[Long])
+  private final case class Version(path: String, floor: Long, epochs: List[Long])
 
   /** Versions kept for readers mid-read; older state dirs, and those of
     * crashed or losing attempts, are reclaimed after every commit.
     */
   private val KeepVersions = 3
 
-  /** Hard ceiling on rollup state rows (override per session via the
-    * `spark.graft.rollup.maxRows` conf). The store's contract is
-    * BOUNDED-cardinality state — the per-epoch rewrite is O(rows), so a
-    * key domain that grows with the feed would degrade every epoch
-    * silently. Exceeding the ceiling fails the epoch loudly BEFORE the
-    * commit point, with the fix in the message.
+  /** Default ceiling on rollup state rows (`maxRows` of [[applyEpoch]]).
+    * The store's contract is BOUNDED-cardinality state — the per-epoch
+    * rewrite is O(rows), so a key domain that grows with the feed would
+    * degrade every epoch silently. Exceeding the ceiling fails the epoch
+    * loudly BEFORE the commit point, with the fix in the message.
     */
   val DefaultMaxRows: Long = 10000000L
 
@@ -46,7 +47,8 @@ object RollupStore {
 
   /** Apply one epoch: skip if `epochId` is already in the ledger,
     * otherwise compute the next state from the previous one (None before
-    * the first epoch) and commit it. Returns true if applied.
+    * the first epoch) and commit it, failing instead if that state holds
+    * more than `maxRows` rows. Returns true if applied.
     *
     * The applied-epoch ledger lives in the version file itself, so one
     * put-if-absent commits state and ledger together — the same
@@ -56,11 +58,13 @@ object RollupStore {
     * crash before the commit leaves only an orphan state dir; the retry
     * writes a fresh one.
     */
-  def applyEpoch(spark: SparkSession, rollupDir: String, epochId: Long)
+  def applyEpoch(spark: SparkSession, rollupDir: String, epochId: Long,
+                 maxRows: Long = DefaultMaxRows)
                 (next: Option[DataFrame] => DataFrame): Boolean = {
     val cur = latest(rollupDir)
-    val seen = cur.toList.flatMap(_._2.epochs)
+    val seen = cur.fold(EpochLedger())(c => EpochLedger(c._2.floor, c._2.epochs))
     if (seen.contains(epochId)) return false
+    val applied = seen + epochId
     val v = cur.fold(0L)(_._1 + 1L)
     Commit.attempt(rollupDir, v) {
       val rel = s"v$v-${Commit.token()}"
@@ -71,17 +75,15 @@ object RollupStore {
       // count is metadata-only, and a failure here leaves only an orphan
       // state dir (same as a crash pre-commit) — the store never commits
       // a state it would grind on every subsequent epoch.
-      val maxRows = spark.conf.getOption("spark.graft.rollup.maxRows")
-        .map(_.toLong).getOrElse(DefaultMaxRows)
       val stateRows = spark.read.parquet(out).count()
       if (stateRows > maxRows)
         throw new IllegalStateException(
           s"rollup state at $rollupDir grew to $stateRows rows (> $maxRows): " +
             "RollupStore rewrites the WHOLE state each epoch and is for " +
             "bounded key domains only — move this key domain to a LakeTable " +
-            "MERGE, or raise spark.graft.rollup.maxRows if the domain is " +
+            "MERGE, or raise the maxRows argument if the domain is " +
             "genuinely bounded")
-      Serialization.write(Version(rel, (seen :+ epochId).sorted))
+      Serialization.write(Version(rel, applied.floor, applied.above))
     }
     Commit.expireWithData(rollupDir, KeepVersions, Paths.get(rollupDir), "")(
       Serialization.read[Version](_).path)

@@ -47,14 +47,9 @@ case class EpochTotals(
 /** Immutable snapshot manifest. `lineage` maps bucket → max applied seq
   * (per-partition lineage offsets, north_rule).
   *
-  * Exactly-once ledger, BOUNDED (a manifest rewritten every epoch must
-  * not grow with epoch count — the metadata-chain failure mode of a
-  * 10^5-epoch table): `epochFloor` means "every epochId ≤ floor is
-  * committed" and `committedEpochs` holds only committed ids ABOVE the
-  * floor. The floor only advances over a CONTIGUOUS committed prefix
-  * (streaming epochIds are 0,1,2,… so the list stays empty in steady
-  * state); sparse manual ids simply stay in the list. Epoch ids must be
-  * ≥ 0. Use [[Snapshot.isCommitted]], never `committedEpochs.contains`.
+  * Exactly-once ledger, BOUNDED: `epochFloor` and `committedEpochs` are
+  * the [[EpochLedger]]'s floor and the committed ids above it. Use
+  * [[Snapshot.isCommitted]], never `committedEpochs.contains`.
   *
   * `epochStats` is likewise a bounded window of the most recent
   * [[LakeTable.EpochStatsWindow]] epochs; `totals` carries the lifetime
@@ -74,8 +69,9 @@ case class Snapshot(
     epochFloor: Long = -1L,
     totals: EpochTotals = EpochTotals()) {
 
-  def isCommitted(epochId: Long): Boolean =
-    epochId <= epochFloor || committedEpochs.contains(epochId)
+  def ledger: EpochLedger = EpochLedger(epochFloor, committedEpochs)
+
+  def isCommitted(epochId: Long): Boolean = ledger.contains(epochId)
 
   /** Ledger + stats update for one newly-committed epoch (bounded in
     * both dimensions); the caller composes file/lineage changes on top.
@@ -86,19 +82,13 @@ case class Snapshot(
     * skips the check must fail loudly, not corrupt lifetime totals).
     */
   def withEpoch(epochId: Long, stat: EpochStat): Snapshot = {
-    require(epochId >= 0, s"epoch ids must be >= 0, got $epochId")
+    val next = ledger + epochId
     require(!isCommitted(epochId),
       s"epoch $epochId is already committed - redelivered epochs must " +
         "be dropped by the caller (Snapshot.isCommitted), not re-added")
-    var floor = epochFloor
-    var rest = (committedEpochs :+ epochId).filter(_ > floor).distinct.sorted
-    while (rest.nonEmpty && rest.head == floor + 1) {
-      floor = rest.head
-      rest = rest.tail
-    }
     copy(
-      committedEpochs = rest,
-      epochFloor = floor,
+      committedEpochs = next.above,
+      epochFloor = next.floor,
       epochStats = (epochStats :+ stat).takeRight(LakeTable.EpochStatsWindow),
       totals = totals.add(stat))
   }

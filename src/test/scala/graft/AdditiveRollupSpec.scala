@@ -95,29 +95,44 @@ class AdditiveRollupSpec extends SparkSpec {
   test("bounded-state guard: an epoch that blows the key-domain ceiling fails loudly") {
     val dir = tmpDir("ar-guard")
     val combine = Seq("n" -> AdditiveRollup.add)
-    spark.conf.set("spark.graft.rollup.maxRows", "100")
-    try {
-      // 50 keys: under the ceiling, commits
-      assert(AdditiveRollup.upsert(spark, dir,
-        spark.range(50).select($"id".as("k"), lit(1L).as("n")),
-        Seq("k"), 0L, combine))
-      // 200 more keys: state would exceed the ceiling — must throw, not
-      // silently commit a state every later epoch grinds over
-      val e = intercept[IllegalStateException] {
-        AdditiveRollup.upsert(spark, dir,
-          spark.range(1000, 1200).select($"id".as("k"), lit(1L).as("n")),
-          Seq("k"), 1L, combine)
-      }
-      assert(e.getMessage.contains("LakeTable"))
-      // the failed epoch did NOT commit: state is epoch 0's, and the
-      // epoch can be retried after the operator fixes the domain
-      assert(AdditiveRollup.read(spark, dir).count() === 50L)
-      spark.conf.set("spark.graft.rollup.maxRows", "1000000")
-      assert(AdditiveRollup.upsert(spark, dir,
+    // 50 keys: under the ceiling, commits
+    assert(AdditiveRollup.upsert(spark, dir,
+      spark.range(50).select($"id".as("k"), lit(1L).as("n")),
+      Seq("k"), 0L, combine, maxRows = 100L))
+    // 200 more keys: state would exceed the ceiling — must throw, not
+    // silently commit a state every later epoch grinds over
+    val e = intercept[IllegalStateException] {
+      AdditiveRollup.upsert(spark, dir,
         spark.range(1000, 1200).select($"id".as("k"), lit(1L).as("n")),
-        Seq("k"), 1L, combine))
-      assert(AdditiveRollup.read(spark, dir).count() === 250L)
-    } finally spark.conf.unset("spark.graft.rollup.maxRows")
+        Seq("k"), 1L, combine, maxRows = 100L)
+    }
+    assert(e.getMessage.contains("LakeTable") && e.getMessage.contains("maxRows"))
+    // the failed epoch did NOT commit: state is epoch 0's, and the
+    // epoch can be retried after the operator fixes the domain
+    assert(AdditiveRollup.read(spark, dir).count() === 50L)
+    assert(AdditiveRollup.upsert(spark, dir,
+      spark.range(1000, 1200).select($"id".as("k"), lit(1L).as("n")),
+      Seq("k"), 1L, combine, maxRows = 1000000L))
+    assert(AdditiveRollup.read(spark, dir).count() === 250L)
+  }
+
+  test("applied-epoch ledger stays bounded: contiguous epochs fold into the floor") {
+    // the version file is rewritten every epoch, so its ledger must not
+    // list every epoch ever applied
+    val dir = tmpDir("ar-ledger")
+    val combine = Seq("n" -> AdditiveRollup.add)
+    val delta = Seq((1L, 1L)).toDF("k", "n")
+    (0L until 40L).foreach(e =>
+      assert(AdditiveRollup.upsert(spark, dir, delta, Seq("k"), e, combine)))
+    import org.json4s._
+    implicit val fmts: Formats = DefaultFormats
+    val v = org.json4s.jackson.JsonMethods.parse(
+      graft.table.Commit.read(dir, graft.table.Commit.latest(dir).get))
+    assert((v \ "floor").extract[Long] === 39L)
+    assert((v \ "epochs").extract[List[Long]].isEmpty)
+    // a redelivered epoch below the floor is still a no-op
+    assert(!AdditiveRollup.upsert(spark, dir, delta, Seq("k"), 5L, combine))
+    assert(AdditiveRollup.read(spark, dir).collect().map(_.getLong(1)).toSeq === Seq(40L))
   }
 
   test("domain stats via the ingest sink across restarts == from-scratch aggregate") {

@@ -41,30 +41,11 @@ class IngestSpec extends SparkSpec {
     assert(bad === 0L)
   }
 
-  test("fallback merge path (winner keys above broadcast ceiling) == broadcast path") {
-    val feedDir = tmpDir("feed-fb")
-    FeedGen.writeSegments(spark, cfg, feedDir)
-    val feed = FeedGen.readFeed(spark, feedDir)
-    val t1 = tmpDir("table-bc"); val t2 = tmpDir("table-fb")
-    LakeTable.create(t1, numBuckets = 16); LakeTable.create(t2, numBuckets = 16)
-    MergeInto.merge(spark, t1, feed.filter($"seq" < 4000), 0L)
-    MergeInto.merge(spark, t1, feed.filter($"seq" >= 4000), 1L)
-    // broadcastKeyLimit = 0 forces the shuffled-hash-join fallback
-    MergeInto.merge(spark, t2, feed.filter($"seq" < 4000), 0L, broadcastKeyLimit = 0L)
-    MergeInto.merge(spark, t2, feed.filter($"seq" >= 4000), 1L, broadcastKeyLimit = 0L)
-    assert(sortedState(LakeTable.readLive(spark, t1)) ===
-      sortedState(LakeTable.readLive(spark, t2)))
-  }
-
-  test("adaptive fallback salt: width tracks the heavy hitter; hot-key merge correct") {
-    assert(MergeInto.saltFactorFor(1L) === 16)
-    assert(MergeInto.saltFactorFor(2000000L) === 16)
-    assert(MergeInto.saltFactorFor(40000000L) === 20)
-    assert(MergeInto.saltFactorFor(10000000000L) === 1024)
-    // one url carries almost the whole batch (crawl-hot domain) and the
-    // broadcast ceiling is forced off — the salted fallback join must
-    // still resolve the exact LWW winner
-    val dir = tmpDir("salt-hot")
+  test("hot url: one url carries the whole batch; exact winner seq and text") {
+    // one url carries the whole batch (crawl-hot domain): its thousands
+    // of losers pass phase B only as filter false positives, and the
+    // exact LWW winner must still be the one stored
+    val dir = tmpDir("hot-url")
     LakeTable.create(dir, numBuckets = 4)
     val cols = CdcSchema.latest.fieldNames
     def hot(lo: Long, hi: Long) = spark.range(lo, hi).toDF("i").select(
@@ -78,8 +59,8 @@ class IngestSpec extends SparkSpec {
     // the largest seq ≡ 6 (mod 7) — ties break on seq
     val b1 = hot(0L, 2500L).select(cols.map(col).toIndexedSeq: _*)
     val b2 = hot(2500L, 5000L).select(cols.map(col).toIndexedSeq: _*)
-    MergeInto.merge(spark, dir, b1, 0L, broadcastKeyLimit = 0L)
-    MergeInto.merge(spark, dir, b2, 1L, broadcastKeyLimit = 0L)
+    MergeInto.merge(spark, dir, b1, 0L)
+    MergeInto.merge(spark, dir, b2, 1L)
     val rows = LakeTable.readLive(spark, dir).collect()
     val expSeq = (0L until 5000L).filter(i => i % 7 == 6L).max
     assert(rows.length === 1 && rows(0).getAs[Long]("seq") === expSeq)
@@ -144,6 +125,24 @@ class IngestSpec extends SparkSpec {
     MergeInto.merge(spark, tableDir, b3, 2L)
     val rows = LakeTable.readLive(spark, tableDir).collect()
     assert(rows.length === 1 && rows(0).getAs[String]("text") === "v3-new")
+  }
+
+  test("an undated-only url has no winner: not counted as an upsert") {
+    // lww_seq ignores null-warc_ts events, so url u2 has no winner and
+    // the table never writes it — the epoch's stats must not count it
+    val tableDir = tmpDir("table-undated")
+    LakeTable.create(tableDir, numBuckets = 4)
+    val cols = CdcSchema.latest.fieldNames
+    def ev(seq: Long, url: String, ts: Option[Long]) =
+      (seq, "U", url, ts.map(new java.sql.Timestamp(_)).orNull,
+        null: Array[Byte], s"t$seq", "en", null.asInstanceOf[java.lang.Double])
+    val b = Seq(ev(1, "https://x.example.com/u1", Some(1000L)),
+      ev(2, "https://x.example.com/u2", None),
+      ev(3, "https://x.example.com/u2", None)).toDF(cols: _*)
+    val r = MergeInto.merge(spark, tableDir, b, 0L)
+    assert(r.events === 3L && r.upserts === 1L && r.deletes === 0L)
+    assert(LakeTable.load(tableDir).totals.upserts === 1L)
+    assert(LakeTable.readLive(spark, tableDir).count() === 1L)
   }
 
   test("schema evolution: v1 batch (no extra_score) merges into v2 table") {

@@ -92,16 +92,11 @@ class LwwPropertySpec extends SparkSpec {
     })
   }
 
-  /** `broadcastKeyLimit = 0` forces the salted shuffled-hash key join,
-    * so the fallback path is state-checked, not only shape-checked.
-    */
-  for ((suffix, keyLimit) <- Seq("" -> MergeInto.BroadcastKeyLimit,
-                                 " (salted key join)" -> 0L))
-  test(s"random CoW/MoR mode per epoch + cross-epoch duplication: same state$suffix") {
+  test("random CoW/MoR mode per epoch + cross-epoch duplication: same state") {
     // the few-keys generator already forces same-(warc_ts, seq) dup
     // redeliveries across epoch boundaries; the mode die adds every
     // write-path interleaving (base∪delta generations) on top
-    check(s"mode-mix$suffix")(Prop.forAll(
+    check("mode-mix")(Prop.forAll(
       Gen.listOfN(40, genEv), Gen.choose(2, 4),
       Gen.listOfN(5, Gen.choose(0, 2)), Gen.choose(0, 4)) {
       (evs0, nEpochs, modeDie, dupFrom) =>
@@ -119,8 +114,7 @@ class LwwPropertySpec extends SparkSpec {
             case 1 => MergeInto.MergeOnRead
             case _ => MergeInto.Auto
           }
-          MergeInto.merge(spark, dir, toDf(chunk), e.toLong, mode,
-            broadcastKeyLimit = keyLimit)
+          MergeInto.merge(spark, dir, toDf(chunk), e.toLong, mode)
         }
         val live = LakeTable.readLive(spark, dir)
           .select($"url", $"seq").collect()
@@ -155,7 +149,8 @@ class LwwPropertySpec extends SparkSpec {
 
   test("writeBuckets' collapse: a null warc_ts never wins; undated-only urls are dropped") {
     // the write-level half of the case above: uncollapsed rows straight
-    // into the collapse, no key join in front of it
+    // into the collapse — the limiting case of the merge's winner filter,
+    // one that passes every row
     val dir = tmpDir("prop-nullts-write") + "/t"
     LakeTable.create(dir, numBuckets = 4)
     val rows = Seq(("u1", Some(1000L), 1L), ("u1", None, 9L), ("u2", None, 5L))

@@ -15,14 +15,14 @@ import graft.table.{FileEntry, LakeTable, Maintenance}
 /** Plan-shape guard for the MERGE path itself (PlanShapeSpec covers the
   * 57 queries, not the epoch): the LWW winner selection must stay the
   * primitive-buffer lww_seq HashAggregate, and no SortAggregate may
-  * appear in an epoch's executed plans outside the documented
-  * winner-sized max_by residual (PLANS.md "Ingest merge" shape). This is
-  * the measured-10× Spark-4 trap — max(struct)/max_by buffers planize as
-  * SortAggregate, sorting the whole batch per partition — wired to fail
-  * CI at sf-tiny if it ever returns to the hot path. It also pins the
-  * payload traffic: the bucket write's repartition is the one exchange
-  * that carries html/text (the salted fallback adds its key-join
-  * exchange), and each touched target file is scanned once. The merged
+  * appear in an epoch's executed plans (PLANS.md "Ingest merge" shape).
+  * This is the measured-10× Spark-4 trap — max(struct)/max_by buffers
+  * planize as SortAggregate, sorting the whole batch per partition —
+  * wired to fail CI at sf-tiny if it ever returns to the hot path. It
+  * also pins the payload traffic: phase B is a map-side winner filter,
+  * so an epoch plans no join, the bucket write's repartition is the one
+  * exchange that carries html/text, and each touched target file is
+  * scanned once. The merged
   * read is pinned the same way: its LWW collapse is the write's window,
   * one exchange and no join-back; and so is compaction, the same bucket
   * rewrite with no batch, which never reads a clean bucket.
@@ -108,17 +108,11 @@ class MergePlanShapeSpec extends SparkSpec {
           if e.output.exists(a => isPayload(a.name, a.dataType)) => e
     }
 
-  /** One payload exchange per epoch — the bucket write's repartition — plus
-    * the salted key join's exchange when the fallback path runs.
-    */
-  private def assertPayloadExchanges(plans: Seq[SparkPlan], label: String,
-                                     saltedJoin: Boolean): Unit = {
+  /** One payload exchange per epoch: the bucket write's repartition. */
+  private def assertPayloadExchanges(plans: Seq[SparkPlan], label: String): Unit = {
     val ex = payloadExchanges(plans)
-    val (write, other) = ex.partition(_.shuffleOrigin == REPARTITION_BY_NUM)
-    assert(write.size === 1,
-      s"$label: expected exactly one bucket-write payload exchange, got $ex")
-    assert(other.size === (if (saltedJoin) 1 else 0),
-      s"$label: unexpected payload exchanges: $other")
+    assert(ex.size === 1 && ex.head.shuffleOrigin == REPARTITION_BY_NUM,
+      s"$label: expected exactly one payload exchange, the bucket write's; got $ex")
   }
 
   /** Each of `files` is read by exactly `times` distinct scans. */
@@ -144,11 +138,12 @@ class MergePlanShapeSpec extends SparkSpec {
       s"$label: lww_seq not planned as HashAggregate")
     assert(!lwwLines.exists(_.contains("SortAggregate")),
       s"$label: lww_seq degraded to SortAggregate — the measured-10× trap:\n$all")
-    // 2. any SortAggregate in the epoch is the documented winner-sized
-    //    max_by residual (runs over winner rows only, after the key join)
-    val sortAggLines = all.linesIterator.filter(_.contains("SortAggregate")).toSeq
-    sortAggLines.foreach(l => assert(l.contains("max_by"),
-      s"$label: undocumented SortAggregate in the merge path: $l"))
+    // 2. no SortAggregate anywhere in the epoch
+    assert(!all.contains("SortAggregate"),
+      s"$label: SortAggregate in the merge path:\n$all")
+    // 3. phase B is the map-side winner filter: no join of any kind
+    val joins = epochNodes(plans).collect { case j: BaseJoinExec => j }
+    assert(joins.isEmpty, s"$label: unexpected joins in the epoch: $joins")
   }
 
   test("column pruning survives the merged read: narrow projections never scan the payload") {
@@ -211,7 +206,7 @@ class MergePlanShapeSpec extends SparkSpec {
     assertTargetScans(plans, clean, 0, "compact/clean")
   }
 
-  test("CoW epoch (broadcast path): lww_seq HashAggregate, SortAggregate only in the winner residual") {
+  test("CoW epoch: lww_seq HashAggregate, no join, one payload exchange") {
     val dir = tmpDir("mps-cow") + "/t"
     LakeTable.create(dir, numBuckets = 8)
     MergeInto.merge(spark, dir, batch(4000, 300), 0L) // seed the target
@@ -219,25 +214,9 @@ class MergePlanShapeSpec extends SparkSpec {
     val plans = capturedPlans {
       MergeInto.merge(spark, dir, batch(4000, 300), 1L, MergeInto.CopyOnWrite)
     }
-    assertMergeShape(plans, "CoW/broadcast")
-    assertPayloadExchanges(plans, "CoW/broadcast", saltedJoin = false)
-    assertTargetScans(plans, target, 1, "CoW/broadcast")
-  }
-
-  test("CoW epoch (salted fallback above the broadcast ceiling): same shape") {
-    val dir = tmpDir("mps-fb") + "/t"
-    LakeTable.create(dir, numBuckets = 8)
-    MergeInto.merge(spark, dir, batch(4000, 300), 0L)
-    val target = LakeTable.load(dir).files
-    val plans = capturedPlans {
-      // broadcastKeyLimit=0 forces the salted ShuffledHashJoin path in
-      // both phases — the 10^10-event backfill shape
-      MergeInto.merge(spark, dir, batch(4000, 300), 1L, MergeInto.CopyOnWrite,
-        broadcastKeyLimit = 0L)
-    }
-    assertMergeShape(plans, "CoW/fallback")
-    assertPayloadExchanges(plans, "CoW/fallback", saltedJoin = true)
-    assertTargetScans(plans, target, 1, "CoW/fallback")
+    assertMergeShape(plans, "CoW")
+    assertPayloadExchanges(plans, "CoW")
+    assertTargetScans(plans, target, 1, "CoW")
   }
 
   test("MoR epoch: winner selection stays the lww_seq HashAggregate") {
@@ -249,7 +228,7 @@ class MergePlanShapeSpec extends SparkSpec {
       MergeInto.merge(spark, dir, batch(500, 300), 1L, MergeInto.MergeOnRead)
     }
     assertMergeShape(plans, "MoR")
-    assertPayloadExchanges(plans, "MoR", saltedJoin = false)
+    assertPayloadExchanges(plans, "MoR")
     // merge-on-read never opens the target
     assertTargetScans(plans, target, 0, "MoR")
   }

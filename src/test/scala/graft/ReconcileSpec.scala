@@ -48,4 +48,21 @@ class ReconcileSpec extends SparkSpec {
       df.select($"url", $"seq").collect().map(_.toString).sorted
     assert(key(LakeTable.readLive(spark, tableDir)) === key(oracle))
   }
+
+  test("an undated-only url in the WAL is no disagreement: no winner, no row") {
+    val feedDir = tmpDir("rec-undated-feed")
+    val tableDir = tmpDir("rec-undated-table")
+    LakeTable.create(tableDir, numBuckets = 4)
+    def ev(seq: Long, url: String, ts: Option[Long]) =
+      (seq, "U", url, ts.map(new java.sql.Timestamp(_)).orNull,
+        null: Array[Byte], s"t$seq", "en", null.asInstanceOf[java.lang.Double])
+    FeedGen.appendSegment(spark, feedDir, Seq(
+      ev(1, "https://x.example.com/dated", Some(1000L)),
+      ev(2, "https://x.example.com/undated", None),
+      ev(3, "https://x.example.com/undated", None))
+      .toDF(graft.model.CdcSchema.latest.fieldNames: _*), "u")
+    MergeInto.merge(spark, tableDir, FeedGen.readFeed(spark, feedDir), 0L)
+    assert(Reconcile.missingEvents(spark, feedDir, tableDir).isEmpty)
+    assert(Reconcile.diffState(spark, feedDir, tableDir).isEmpty)
+  }
 }

@@ -58,11 +58,14 @@ class StatefulStreamingSpec extends SparkSpec {
     MetricsRollup.runAvailableNow(spark, s"$base/feed", s"$base/rollup",
       s"$base/ckpt", lateness = "1 hour", maxFilesPerTrigger = Some(1))
     // the applied-epoch ledger rides in the latest version file
-    // (committed atomically with the state by one put-if-absent)
+    // (committed atomically with the state by one put-if-absent): the
+    // ids up to its floor, plus those listed above it
     val meta = java.nio.file.Paths.get(s"$base/rollup/meta")
     val curV = java.nio.file.Files.readString(meta.resolve("CURRENT")).trim
-    val epochs = (org.json4s.jackson.JsonMethods.parse(java.nio.file.Files
-      .readString(meta.resolve(s"$curV.json"))) \ "epochs").children.size
+    val ledger = org.json4s.jackson.JsonMethods.parse(java.nio.file.Files
+      .readString(meta.resolve(s"$curV.json")))
+    implicit val fmts: org.json4s.Formats = org.json4s.DefaultFormats
+    val epochs = (ledger \ "floor").extract[Long] + 1 + (ledger \ "epochs").children.size
     info(s"epochs committed: $epochs")
     val got = MetricsRollup.read(spark, s"$base/rollup")
       .select($"hour_start".cast("long") - base0 / 1000L, $"events")
