@@ -50,14 +50,14 @@ object AdditiveRollup {
     * Returns true if applied.
     */
   def upsert(spark: SparkSession, dir: String, delta: DataFrame,
-             keyCols: Seq[String], epochId: Long,
+             keyNames: Seq[String], epochId: Long,
              combine: Seq[(String, Combine)],
              maxRows: Long = RollupStore.DefaultMaxRows): Boolean =
     RollupStore.applyEpoch(spark, dir, epochId, maxRows) {
       case None => delta
       case Some(old) =>
-        val joinCond = keyCols.map(k => old(k) <=> delta(k)).reduce(_ && _)
-        val keys = keyCols.map(k => coalesce(delta(k), old(k)).as(k))
+        val joinCond = keyNames.map(k => old(k) <=> delta(k)).reduce(_ && _)
+        val keys = keyNames.map(k => coalesce(delta(k), old(k)).as(k))
         val stats = combine.map { case (c, f) => f(old(c), delta(c)).as(c) }
         old.join(delta, joinCond, "full_outer")
           .select((keys ++ stats).toIndexedSeq: _*)

@@ -14,7 +14,9 @@ import org.apache.spark.sql.functions._
   *
   * State row: (node, label, _sig_epoch) where label = the node's
   * component-min id over ALL pairs seen so far — exactly dd07's
-  * canonical labels. Read = latest-per-node (the manifest layer's LWW).
+  * canonical labels. `node` leads the row, so the store keys the
+  * state by it: read = the store's live read (latest-per-node), and
+  * upkeep = [[DedupIndex.autoMaintain]] on the dir, as for every index.
   *
   * The fold is label-graph contraction. Invariant: entering epoch E,
   * every clustered node's stored label is its component-min over the
@@ -60,13 +62,10 @@ import org.apache.spark.sql.functions._
 object ClusterIndex {
 
   /** Current (latest-per-node) labels of the entries strictly older
-    * than `before` (all committed entries when None). Every entry is
-    * written through [[DedupIndex.appendFrameWithMirrors]] with the node
-    * key, so supersession resolves with broadcast anti-joins against the
-    * tiny resigned/ lists: the state side is ONE narrow (node, label)
-    * scan crossing ZERO exchanges — no latest-per-node groupBy +
-    * join-back over the O(corpus) label table on every fold and read
-    * (the round-5 verdict's one `weak`).
+    * than `before` (all committed entries when None) — the store's live
+    * read ([[DedupIndex.live]]): the state side is ONE narrow (node,
+    * label) scan crossing ZERO exchanges — no latest-per-node groupBy +
+    * join-back over the O(corpus) label table on every fold and read.
     */
   private[graft] def liveLabels(spark: SparkSession, dir: String,
                                 before: Option[Long]): DataFrame = {
@@ -75,12 +74,7 @@ object ClusterIndex {
       case None => DedupIndex.loadManifest(dir).entries
     }
     require(entries.nonEmpty, s"cluster index at $dir has no committed epochs")
-    DedupIndex.dropSuperseded(
-        spark.read.parquet(entries.map(e => s"$dir/${e.path}"): _*),
-        spark.emptyDataFrame.select(lit(0L).as("node")).limit(0),
-        DedupIndex.resignedLists(spark, dir, entries),
-        keyCol = "node")
-      .select(col("node"), col("label"))
+    DedupIndex.live(spark, dir, entries).select(col("node"), col("label"))
   }
 
   /** Current labels: (node, label), latest-per-node. */
@@ -163,22 +157,12 @@ object ClusterIndex {
             .select(col("node"), col("_new").as("label"))
           newRows.unionByName(relabeled)
       }
-      // mirrors + Bloom sidecar on every entry (keyed on node): a
-      // relabeled node's older rows are dropped by broadcast anti-join
-      // at read time instead of a whole-table groupBy; delta rows are
-      // node-unique by construction (newRows ∩ relabeled = ∅, one row
-      // per node in each), so the sidecar skips its dedup pass
+      // mirrors + Bloom sidecar on every entry (keyed on node, the
+      // delta's first column): a relabeled node's older rows are dropped
+      // by broadcast anti-join at read time instead of a whole-table
+      // groupBy
       DedupIndex.appendFrameWithMirrors(spark, dir, epochId,
-        delta.withColumn("_sig_epoch", lit(epochId)),
-        keyCol = "node", keysAreDistinct = true)
+        delta.withColumn("_sig_epoch", lit(epochId)))
     } finally hot.foreach(_.unpersist(blocking = false))
   }
-
-  /** [[DedupIndex.autoMaintain]] with the cluster key — bounds manifest
-    * entries and state dirs on a sink-maintained cluster index.
-    */
-  def autoMaintain(spark: SparkSession, dir: String, maxEntries: Int = 16,
-                   vacuumGraceMs: Long = 3600000L): (Boolean, Int) =
-    DedupIndex.autoMaintain(spark, dir, maxEntries, vacuumGraceMs,
-      keyCol = "node")
 }

@@ -3,6 +3,7 @@ package graft.operators
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import graft.analytics.DedupQueries
 import graft.table.Commit
 
@@ -22,7 +23,10 @@ import graft.table.Commit
   * dedup family.
   *
   * Layout under `indexDir` — the same snapshot-commit discipline as
-  * LakeTable, because at ingest cadence the index IS a table:
+  * LakeTable, because at ingest cadence the index IS a table. Every
+  * modality on this layer stores frames whose first column is the long
+  * key (doc_id here, vec_id or node elsewhere); the store reads the key
+  * from there, so no operation takes it as an argument:
   *   meta/vN.json + meta/CURRENT   — manifest of committed entries,
   *     version N created put-if-absent ([[graft.table.Commit]]); a
   *     crashed or losing append leaves only orphan dirs of its own
@@ -102,44 +106,33 @@ object DedupIndex {
     Paths.get(dir, rel.replaceFirst("^sigs/", s"$root/"))
 
   /** bloom/epoch=N | bloom/compact-A-B — one serialized Bloom filter
-    * FILE per entry over the entry's key set (fpp 1%, sized by exact
-    * distinct count): the append-side overlap prefilter. Computing an
-    * epoch's resigned/ list needs "which prior entries share a key with
-    * this epoch" — without the sidecar that is a key-column scan of the
-    * WHOLE prior index per append (narrow but corpus-bounded, the
+    * FILE per entry over the entry's key set (fpp 1%, sized by an
+    * approximate distinct count of the key column — one narrow
+    * aggregate, no key exchange): the append-side overlap prefilter.
+    * Computing an epoch's resigned/ list needs "which prior entries
+    * share a key with this epoch" — without the sidecar that is a
+    * key-column scan of the WHOLE prior index per append (narrow but corpus-bounded, the
     * residual slope §6b measures); with it, one epoch-bounded job
     * probes the K entry blooms and prunes the scan to overlapping
     * entries — usually NONE on a fresh-doc feed, so the scan (and the
     * mirror write) disappear entirely. False positives only cost an
     * unnecessary entry scan; false negatives cannot happen; a missing
     * sidecar reads as "might overlap" (conservative full inclusion).
-    *
-    * `keysAreDistinct`: the frame has at most one row per key (every
-    * modality except the shingle store) — skips the dedup pass, so the
-    * sidecar costs one metadata-count plus one narrow aggregation job.
-    * Duplicate inserts would not corrupt the filter either way; the
-    * flag only avoids paying a shuffle to size it exactly.
+    * `rows` is the entry's frame; its first column is the key.
     */
-  private[operators] def writeBloomSidecar(dir: String, rel: String,
-                                           keys: DataFrame,
-                                           keyCol: String,
-                                           keysAreDistinct: Boolean = false)
-      : Unit = {
-    val ids0 = keys.select(col(keyCol))
-    val ids = if (keysAreDistinct) ids0 else ids0.distinct().persist()
-    try {
-      val n = ids.count()
-      // an empty entry (tombstone-only epochs aside, a legal shape) gets
-      // an empty filter — mightContain is always false, so the entry is
-      // always pruned; Spark's aggregate NPEs on zero rows
-      val bf =
-        if (n == 0L)
-          org.apache.spark.util.sketch.BloomFilter.create(64L, 0.01)
-        else ids.stat.bloomFilter(keyCol, n, 0.01)
-      Files.createDirectories(Paths.get(dir, "bloom"))
-      scala.util.Using.resource(Files.newOutputStream(side(dir, rel, "bloom"),
-        StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE))(bf.writeTo)
-    } finally if (!keysAreDistinct) ids.unpersist()
+  private def writeBloomSidecar(dir: String, rel: String,
+                                rows: DataFrame): Unit = {
+    val key = rows.columns.head
+    val n = rows.select(approx_count_distinct(col(key))).head().getLong(0)
+    // an empty entry (tombstone-only epochs aside, a legal shape) gets
+    // an empty filter — mightContain is always false, so the entry is
+    // always pruned; Spark's aggregate NPEs on zero rows
+    val bf =
+      if (n == 0L) org.apache.spark.util.sketch.BloomFilter.create(64L, 0.01)
+      else rows.stat.bloomFilter(key, n, 0.01)
+    Files.createDirectories(Paths.get(dir, "bloom"))
+    scala.util.Using.resource(Files.newOutputStream(side(dir, rel, "bloom"),
+      StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE))(bf.writeTo)
   }
 
   private def loadBloomSidecar(dir: String, entry: IndexEntry)
@@ -151,24 +144,21 @@ object DedupIndex {
   }
 
   /** The subset of `entries` whose key sets MIGHT intersect `ids`
-    * (long-typed `keyCol` column), per their Bloom sidecars — one
+    * (one long key column), per their Bloom sidecars — one
     * epoch-bounded job computing an OR-mask of per-entry hits. Entries
     * without a sidecar (or beyond the 62-entry mask width, which
     * [[autoMaintain]]'s bound keeps unreachable) are conservatively
     * included; the result can only over-approximate, never miss.
     */
-  private[operators] def overlappingEntries(spark: SparkSession,
-                                            dir: String,
-                                            entries: List[IndexEntry],
-                                            ids: DataFrame,
-                                            keyCol: String)
-      : List[IndexEntry] = {
+  private def overlappingEntries(spark: SparkSession, dir: String,
+                                 entries: List[IndexEntry],
+                                 ids: DataFrame): List[IndexEntry] = {
     if (entries.isEmpty) return Nil
     val blooms = entries.map(loadBloomSidecar(dir, _))
     if (entries.size > 62 || blooms.forall(_.isEmpty)) return entries
     val bc = spark.sparkContext.broadcast(blooms)
     import spark.implicits._
-    val masks = ids.select(col(keyCol).cast("long")).as[Long]
+    val masks = ids.select(col(ids.columns.head).cast("long")).as[Long]
       .mapPartitions { it =>
         val bs = bc.value
         var m = 0L
@@ -214,12 +204,11 @@ object DedupIndex {
       .withColumn("sb", sbCol)
 
   /** Whether an entry carries the buckets/ side table: minhash
-    * signature frames (doc-keyed, mh_* columns) do; the other
-    * modalities on this layer (simhash/embedding/shingle/cluster/metrics
-    * state) do not.
+    * signature frames (mh_* columns) do; the other modalities on this
+    * layer (simhash/embedding/shingle/cluster/metrics state) do not.
     */
-  private def carriesBuckets(sigs: DataFrame, keyCol: String): Boolean =
-    keyCol == "doc_id" && sigs.columns.contains("mh_0")
+  private def carriesBuckets(sigs: DataFrame): Boolean =
+    sigs.columns.contains("mh_0")
 
   /** The sb dirs an entry's bucket side table lives under (leaf paths,
     * existence-checked: a small epoch may populate only some of the
@@ -281,14 +270,15 @@ object DedupIndex {
         live.unionByName(tomb)
     }
     appendFrameWithMirrors(spark, dir, epochId,
-      sigs.withColumn("_sig_epoch", lit(epochId)), keysAreDistinct = true)
+      sigs.withColumn("_sig_epoch", lit(epochId)))
   }
 
   /** Storage-layer append shared by every modality on this layer:
-    * commit `df` (already carrying `_sig_epoch`) as `epochId` under the
-    * manifest protocol, plus the entry's side artifacts, all written to
-    * this attempt's own paths and derived from the WRITTEN parquet (the
-    * source is computed once):
+    * commit `df` (its long key first — doc_id, vec_id or node — and
+    * carrying `_sig_epoch`) as `epochId` under the manifest protocol,
+    * plus the entry's side artifacts, all written to this attempt's own
+    * paths and derived from the WRITTEN parquet (the source is computed
+    * once):
     *  - buckets/ (minhash frames only, [[carriesBuckets]]): band rows
     *    partitioned by directory bucket — the fold's pruned+broadcast
     *    candidate join reads only matching sb dirs. Published even when
@@ -306,9 +296,12 @@ object DedupIndex {
     * Idempotent per epoch, crash-safe like [[appendEpoch]].
     */
   private[operators] def appendFrameWithMirrors(
-      spark: SparkSession, dir: String, epochId: Long, df: DataFrame,
-      keyCol: String = "doc_id",
-      keysAreDistinct: Boolean = false): Boolean = {
+      spark: SparkSession, dir: String, epochId: Long,
+      df: DataFrame): Boolean = {
+    require(df.schema.headOption.exists(_.dataType == LongType),
+      s"index frame for $dir must lead with its long key column, got " +
+        df.schema.simpleString)
+    val key = df.columns.head
     val m = loadManifest(dir)
     if (m.isCommitted(epochId)) return false
     val rel = s"sigs/epoch=$epochId-${Commit.token()}"
@@ -318,19 +311,19 @@ object DedupIndex {
     // append's wall is the slowest of them, not their sum; the probe
     // reads only PRIOR entries' sidecars
     graft.Parallel.all[Unit](Seq(
-      () => if (carriesBuckets(back, keyCol))
+      () => if (carriesBuckets(back))
         bucketRows(back).write.partitionBy("sb")
           .parquet(side(dir, rel, "buckets").toString),
-      () => writeBloomSidecar(dir, rel, back, keyCol, keysAreDistinct),
+      () => writeBloomSidecar(dir, rel, back),
       () => {
         val overlap = overlappingEntries(spark, dir, m.entries,
-          back.select(col(keyCol)), keyCol)
+          back.select(col(key)))
         if (overlap.nonEmpty) {
           val mirror = side(dir, rel, "resigned")
           spark.read.parquet(overlap.map(e => s"$dir/${e.path}"): _*)
-            .select(col(keyCol))
-            .join(broadcast(back.select(col(keyCol)).distinct()),
-              Seq(keyCol), "left_semi")
+            .select(col(key))
+            .join(broadcast(back.select(col(key)).distinct()),
+              Seq(key), "left_semi")
             .distinct()
             .withColumn("last", lit(epochId))
             .write.parquet(mirror.toString)
@@ -393,12 +386,10 @@ object DedupIndex {
     * instead, because a full rewrite per threshold crossing is
     * O(corpus) maintenance at stream lifetime scale.
     */
-  def compact(spark: SparkSession, dir: String,
-              keyCol: String = "doc_id"): Boolean = {
+  def compact(spark: SparkSession, dir: String): Boolean = {
     val sorted = loadManifest(dir).entries.sortBy(_.maxEpoch)
     if (sorted.size <= 2) return false // < 2 entries strictly below newest
-    compactRange(spark, dir, sorted.head.minEpoch,
-      sorted.init.last.maxEpoch, keyCol)
+    compactRange(spark, dir, sorted.head.minEpoch, sorted.init.last.maxEpoch)
   }
 
   /** TIERED merge: fold the contiguous committed entries covering
@@ -424,8 +415,8 @@ object DedupIndex {
     * When lo IS the global min, both full-prefix simplifications apply
     * (tombstones dropped, no list written).
     */
-  def compactRange(spark: SparkSession, dir: String, lo: Long, hi: Long,
-                   keyCol: String = "doc_id"): Boolean = {
+  def compactRange(spark: SparkSession, dir: String, lo: Long,
+                   hi: Long): Boolean = {
     val m = loadManifest(dir)
     val sorted = m.entries.sortBy(_.minEpoch)
     require(sorted.nonEmpty, s"compactRange on an empty index at $dir")
@@ -449,20 +440,20 @@ object DedupIndex {
     // row in [lo, hi] survives (rows keep `_sig_epoch`, so global LWW
     // still resolves against entries outside the range)
     val folded = latestSigs(
-      spark.read.parquet(run.map(e => s"$dir/${e.path}"): _*), keyCol)
-    val payload = folded.columns.filterNot(c => c == keyCol || c == "_sig_epoch")
+      spark.read.parquet(run.map(e => s"$dir/${e.path}"): _*))
+    val key = folded.columns.head
     val kept =
       if (atPrefix) // no older entry can resurrect a tombstoned doc
-        folded.filter(!payload.map(col(_).isNull).reduce(_ && _))
+        folded.filter(!tombstone(folded))
       else folded
     kept.write.parquet(dst.toString)
     // minhash indexes also fold the buckets/ side table (tombstone rows
     // produce no bucket rows)
-    if (carriesBuckets(folded, keyCol))
+    if (carriesBuckets(folded))
       bucketRows(spark.read.parquet(dst.toString)).write.partitionBy("sb")
         .parquet(side(dir, rel, "buckets").toString)
     // merged bloom sidecar, recomputed over the folded output
-    writeBloomSidecar(dir, rel, spark.read.parquet(dst.toString), keyCol)
+    writeBloomSidecar(dir, rel, spark.read.parquet(dst.toString))
     // mid-range merge: carry the combined resigned/ list forward
     if (!atPrefix) {
       val lists = run
@@ -470,7 +461,7 @@ object DedupIndex {
         .filter(Files.exists(_)).map(_.toString)
       if (lists.nonEmpty)
         spark.read.parquet(lists: _*)
-          .groupBy(col(keyCol)).agg(max(col("last")).as("last"))
+          .groupBy(col(key)).agg(max(col("last")).as("last"))
           .write.parquet(side(dir, rel, "resigned").toString)
     }
     val merged = (sorted.filterNot(run.contains) :+
@@ -506,7 +497,6 @@ object DedupIndex {
   def autoMaintain(spark: SparkSession, dir: String, maxEntries: Int = 16,
                    vacuumGraceMs: Long = 3600000L,
                    keepManifests: Int = 64,
-                   keyCol: String = "doc_id",
                    mergeFactor: Int = 4): (Boolean, Int) = {
     require(mergeFactor >= 2, s"mergeFactor must be >= 2, got $mergeFactor")
     // loop: a sink that maintains per epoch does at most one merge per
@@ -527,7 +517,7 @@ object DedupIndex {
         if (runs.nonEmpty) {
           val run = runs.minBy(_.map(bytes).sum)
           progress = compactRange(spark, dir, run.head.minEpoch,
-            run.last.maxEpoch, keyCol)
+            run.last.maxEpoch)
           compacted ||= progress
         }
       }
@@ -567,15 +557,23 @@ object DedupIndex {
       .count { p => graft.FsUtil.deleteTree(p); true }
   }
 
-  /** Latest row per key — the index's LWW over `_sig_epoch`, applied
-    * physically to a [[compactRange]] run. One narrow HashAggregate +
-    * equi-join.
+  /** Latest row per key (the first column) — the index's LWW over
+    * `_sig_epoch`, applied physically to a [[compactRange]] run. One
+    * narrow HashAggregate + equi-join; the key stays first.
     */
-  private def latestSigs(sigs: DataFrame, keyCol: String): DataFrame = {
-    val latest = sigs.groupBy(col(keyCol))
+  private def latestSigs(sigs: DataFrame): DataFrame = {
+    val key = sigs.columns.head
+    val latest = sigs.groupBy(col(key))
       .agg(max(col("_sig_epoch")).as("_sig_epoch"))
-    sigs.join(latest, Seq(keyCol, "_sig_epoch"))
+    sigs.join(latest, Seq(key, "_sig_epoch"))
   }
+
+  /** A tombstone row: every payload column (all but the key and
+    * `_sig_epoch`) is null — what a delete commits in every modality.
+    */
+  private def tombstone(rows: DataFrame): org.apache.spark.sql.Column =
+    rows.columns.tail.filterNot(_ == "_sig_epoch")
+      .map(col(_).isNull).reduce(_ && _)
 
   /** Entries strictly older than `epochId`, coverage-checked the same
     * way [[readSigs]] checks: every committed epoch < epochId must
@@ -603,7 +601,7 @@ object DedupIndex {
     * none (supersession baked into storage — the mirror simply does
     * not exist and is skipped).
     */
-  private[operators] def resignedLists(spark: SparkSession, dir: String,
+  private def resignedLists(spark: SparkSession, dir: String,
                             entries: Seq[IndexEntry]): Option[DataFrame] = {
     val paths = entries
       .map(e => side(dir, e.path, "resigned"))
@@ -611,23 +609,38 @@ object DedupIndex {
     if (paths.isEmpty) None else Some(spark.read.parquet(paths: _*))
   }
 
-  /** Drop rows of `df` (carrying `_sig_epoch`) superseded by a later
-    * re-sign/tombstone: (a) docs touched by the folding epoch itself
-    * (`newDocs` — includes tombstones), (b) docs a prior singleton
-    * epoch re-signed after this row's `_sig_epoch`. Both filters are
+  /** Drop rows of `df` (key first, carrying `_sig_epoch`) superseded
+    * by a later re-sign/tombstone: (a) keys in `exclude` (the folding
+    * epoch's own keys — includes tombstones), (b) keys a resigned/ list
+    * marks re-signed after this row's `_sig_epoch`. Both filters are
     * BROADCAST anti-joins — no shuffle of the index side, where a
-    * latest-per-doc groupBy would pay one index-sized shuffle per fold.
+    * latest-per-key groupBy would pay one index-sized shuffle per fold.
     */
-  private[operators] def dropSuperseded(df: DataFrame, newDocs: DataFrame,
-                             resigned: Option[DataFrame],
-                             keyCol: String = "doc_id"): DataFrame = {
-    val a = df.join(broadcast(newDocs), Seq(keyCol), "left_anti")
-    resigned match {
-      case None => a
-      case Some(r) => a.as("b").join(broadcast(r).as("r"),
-          col(s"b.$keyCol") === col(s"r.$keyCol") &&
-            col("r.last") > col("b._sig_epoch"), "left_anti")
-    }
+  private def dropSuperseded(df: DataFrame, exclude: Option[DataFrame],
+                             resigned: Option[DataFrame]): DataFrame = {
+    val key = df.columns.head
+    val a = exclude.fold(df)(x => df.join(broadcast(x), Seq(key), "left_anti"))
+    resigned.fold(a)(r => a.as("b").join(broadcast(r).as("r"),
+      col(s"b.$key") === col(s"r.$key") &&
+        col("r.last") > col("b._sig_epoch"), "left_anti"))
+  }
+
+  /** The live rows of `entries` — the one read every maintained index
+    * resolves its state through: the entries' rows minus keys in
+    * `exclude` (a fold's own epoch), minus rows the entries' resigned/
+    * lists supersede ([[dropSuperseded]]), minus tombstones. An entry's
+    * own list marks keys ITS epoch re-signed from older entries; its
+    * rows carry that epoch as `_sig_epoch`, so `last > _sig_epoch` never
+    * drops them — every entry's list is safe to pass. The index side is
+    * one narrow scan crossing ZERO exchanges.
+    */
+  private[operators] def live(spark: SparkSession, dir: String,
+                              entries: Seq[IndexEntry],
+                              exclude: Option[DataFrame] = None): DataFrame = {
+    val rows = dropSuperseded(
+      spark.read.parquet(entries.map(e => s"$dir/${e.path}"): _*),
+      exclude, resignedLists(spark, dir, entries))
+    rows.filter(!tombstone(rows))
   }
 
   /** Near-dup candidate pairs of epoch `epochId` against itself AND the
@@ -675,15 +688,12 @@ object DedupIndex {
     // prior LIVE sigs (for the est join-back): minus superseded rows,
     // docs this epoch re-signed or deleted, and tombstones — broadcast
     // filters, no groupBy over the index
-    val resigned = resignedLists(spark, dir, priors)
     val priorLive =
       if (priors.isEmpty) None
-      else Some(dropSuperseded(
-        spark.read.parquet(priors.map(e => s"$dir/${e.path}"): _*)
-          .filter(col("mh_0").isNotNull), newDocs, resigned))
-    val cand0 = priorLive match {
-      case None => within
-      case Some(pl) =>
+      else Some(live(spark, dir, priors, Some(newDocs)))
+    val cand0 =
+      if (priors.isEmpty) within
+      else {
         // pruned index bucket scan: only the sb dirs this epoch's bands
         // hash into, resolved from directory listings (no Spark job),
         // pinned as leaf paths
@@ -701,19 +711,21 @@ object DedupIndex {
             s"${unbucketed.map(_.path).mkString(", ")} - rebuild it")
         val sbs = entrySbs(dir, eEntry)
         val paths = priors.flatMap(e => bucketLeafDirs(dir, e, sbs))
-        val oldB =
-          if (paths.isEmpty) bucketRows(pl.limit(0)).drop("sb")
-          else dropSuperseded(spark.read.parquet(paths: _*), newDocs, resigned)
-        // defense in depth: the prior side excludes this epoch's docs,
-        // so equal ids cannot meet — keep the guard anyway. Epoch side
-        // broadcast: one epoch's band rows vs an index-sized probe.
-        val cross = broadcast(newB).as("x").join(oldB.as("y"),
-            col("x.band") === col("y.band") && col("x.bkt") === col("y.bkt") &&
-              col("x.doc_id") =!= col("y.doc_id"))
-          .select(least(col("x.doc_id"), col("y.doc_id")).as("doc_a"),
-            greatest(col("x.doc_id"), col("y.doc_id")).as("doc_b"))
-        within.unionByName(cross)
-    }
+        if (paths.isEmpty) within
+        else {
+          val oldB = dropSuperseded(spark.read.parquet(paths: _*),
+            Some(newDocs), resignedLists(spark, dir, priors))
+          // defense in depth: the prior side excludes this epoch's docs,
+          // so equal ids cannot meet — keep the guard anyway. Epoch side
+          // broadcast: one epoch's band rows vs an index-sized probe.
+          val cross = broadcast(newB).as("x").join(oldB.as("y"),
+              col("x.band") === col("y.band") && col("x.bkt") === col("y.bkt") &&
+                col("x.doc_id") =!= col("y.doc_id"))
+            .select(least(col("x.doc_id"), col("y.doc_id")).as("doc_a"),
+              greatest(col("x.doc_id"), col("y.doc_id")).as("doc_b"))
+          within.unionByName(cross)
+        }
+      }
     val cand = cand0.distinct()
     // doc-unique signature side (new ∪ live prior) — a duplicate
     // doc_id here would fan the est join out to duplicate pair rows

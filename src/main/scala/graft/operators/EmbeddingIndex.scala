@@ -11,8 +11,8 @@ import graft.analytics.{DedupQueries, Hashing}
   * (DedupQueries.embeddingNearDupPairs), at epoch-sized cost. Storage
   * and exactly-once/compaction/vacuum semantics are the SHARED
   * manifest layer in DedupIndex (appendFrameWithMirrors/readSigs/
-  * compact/autoMaintain with keyCol = vec_id) — one commit protocol, two
-  * signature modalities. A vector row (vec_id, 64 floats, ~270 B) IS
+  * compact/autoMaintain, keyed on the frame's first column, vec_id) —
+  * one commit protocol, two signature modalities. A vector row (vec_id, 64 floats, ~270 B) IS
   * its own signature: candidates and the exact-cosine verify both come
   * from the stored row, so the index never re-reads the source table.
   *
@@ -31,8 +31,7 @@ object EmbeddingIndex {
                   vecs: DataFrame): Boolean =
     DedupIndex.appendFrameWithMirrors(spark, dir, epochId,
       vecs.select(col("vec_id"), col("embedding"))
-        .withColumn("_sig_epoch", lit(epochId)),
-      keyCol = "vec_id", keysAreDistinct = true)
+        .withColumn("_sig_epoch", lit(epochId)))
 
   private def bucketed(s: SparkSession, vecs: DataFrame): DataFrame = {
     val tblCols = (0 until DedupQueries.NearDupTables).map { t =>
@@ -63,11 +62,8 @@ object EmbeddingIndex {
     val all =
       if (priors.isEmpty) within
       else {
-        val priorLive = DedupIndex.dropSuperseded(
-          spark.read.parquet(priors.map(e => s"$dir/${e.path}"): _*),
-          newV.select(col("vec_id")),
-          DedupIndex.resignedLists(spark, dir, priors),
-          keyCol = "vec_id")
+        val priorLive = DedupIndex.live(spark, dir, priors,
+          Some(newV.select(col("vec_id"))))
         val oldB = bucketed(spark, priorLive)
         val cross = newB.as("x").join(oldB.as("y"),
             col("x.tbl") === col("y.tbl") && col("x.bkt") === col("y.bkt") &&

@@ -178,9 +178,10 @@ object MergeInto {
 
       // Phase B: candidate rows — the batch rows whose xxhash64(url, seq)
       // the winner filter might contain. Spark's Bloom-filter aggregate
-      // builds it over the cached keys: the partial filters merge on the
-      // executors and the driver receives the one result, sized for the
-      // winner count at 1 % false positives. Spark clamps it at its
+      // builds it over the cached keys, sized for the winner count at 1 %
+      // false positives. Every partial buffer gets that full size, so the
+      // keys are coalesced to one partition first: one partial filter,
+      // one filter-sized shuffle block, not one per keyAgg partition. Spark clamps it at its
       // runtime-filter bounds (spark.sql.optimizer.runtime.bloomFilter.
       // maxNumItems / maxNumBits: 4 M winners, 8 MiB by default); past
       // them only the false-positive rate grows. The test is map-side: no
@@ -188,7 +189,7 @@ object MergeInto {
       // has no false negatives, so a false positive is a loser whose
       // winner also passes and outranks it in writeBuckets' LWW collapse,
       // which likewise keeps one of a winner's redelivered exact copies.
-      val filter = keyAgg.where(col("_w_seq").isNotNull)
+      val filter = keyAgg.where(col("_w_seq").isNotNull).coalesce(1)
         .stat.bloomFilter(xxhash64(col("url"), col("_w_seq")), math.max(nKeys, 1L), 0.01)
       val bc = spark.sparkContext.broadcast(filter)
       winnerFilter = Some(bc)

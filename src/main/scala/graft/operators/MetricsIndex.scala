@@ -16,8 +16,8 @@ import graft.analytics.DocMetrics
   * [[DedupIndex]]).
   *
   * Storage is the SHARED manifest layer in [[DedupIndex]]
-  * (appendFrameWithMirrors / readSigs / compact / autoMaintain with
-  * keyCol = doc_id): snapshot-committed epoch dirs, exactly-once under
+  * (appendFrameWithMirrors / readSigs / compact / autoMaintain, keyed
+  * on the frame's first column, doc_id): snapshot-committed epoch dirs, exactly-once under
   * redelivery, latest-per-doc supersession for updated urls, all-null
   * tombstones for deletes (compaction drops them physically). One
   * commit protocol, now four maintained modalities (minhash / simhash /
@@ -38,8 +38,7 @@ object MetricsIndex {
 
   /** Metric payload columns (name → spark sql type). ws_tokens is
     * non-null for every live row (text is non-null by the sink
-    * contract), which is what distinguishes a live row from an all-null
-    * tombstone.
+    * contract), so no live row is all-null like a tombstone.
     */
   val metricSchema: Seq[(String, String)] = Seq(
     "ws_tokens" -> "long",
@@ -106,17 +105,6 @@ object MetricsIndex {
     if (m.entries.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], liveSchema)
-    DedupIndex.dropSuperseded(
-        spark.read.parquet(m.entries.map(e => s"$dir/${e.path}"): _*),
-        spark.emptyDataFrame.select(lit(0L).as("doc_id")).limit(0),
-        DedupIndex.resignedLists(spark, dir, m.entries))
-      .filter(col("ws_tokens").isNotNull).drop("_sig_epoch")
+    DedupIndex.live(spark, dir, m.entries).drop("_sig_epoch")
   }
-
-  /** Threshold-driven compaction/vacuum — delegates to the shared
-    * layer's [[DedupIndex.autoMaintain]] (doc_id key, no buckets side).
-    */
-  def autoMaintain(spark: SparkSession, dir: String,
-                   maxEntries: Int = 16): (Boolean, Int) =
-    DedupIndex.autoMaintain(spark, dir, maxEntries)
 }

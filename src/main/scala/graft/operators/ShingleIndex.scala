@@ -81,12 +81,11 @@ object ShingleIndex {
   }
 
   /** Live (not superseded, not tombstoned) rows of the entries strictly
-    * older than `epochId` (all committed entries when `epochId` is
-    * None). Supersession is resolved with broadcast anti-joins against
-    * the epoch's docs and the tiny resigned/ lists — the index side (the
-    * largest artifact this engine persists) crosses ZERO exchanges,
-    * where a latest-per-doc groupBy would exchange the whole shingle
-    * store on every fold.
+    * older than `before` (all committed entries when None), minus
+    * `excludeDocs` — the store's live read ([[DedupIndex.live]]): the
+    * index side (the largest artifact this engine persists) crosses
+    * ZERO exchanges, where a latest-per-doc groupBy would exchange the
+    * whole shingle store on every fold.
     */
   private def liveRows(spark: SparkSession, dir: String,
                        before: Option[Long],
@@ -95,18 +94,8 @@ object ShingleIndex {
       case Some(e) => DedupIndex.priorEntries(dir, e)
       case None => DedupIndex.loadManifest(dir).entries
     }
-    if (entries.isEmpty) return None
-    val base = DedupIndex.dropSuperseded(
-      spark.read.parquet(entries.map(e => s"$dir/${e.path}"): _*),
-      excludeDocs.getOrElse(
-        spark.emptyDataFrame.select(lit(0L).as("doc_id")).limit(0)),
-      // an entry's own mirror marks docs ITS epoch re-signed from
-      // even-older entries; rows of the entry itself carry that epoch
-      // as _sig_epoch, so `last > _sig_epoch` never drops them — safe to
-      // pass every entry's list, needed when `before` is None (latest
-      // overall)
-      DedupIndex.resignedLists(spark, dir, entries))
-    Some(base.filter(col("shingle").isNotNull)
+    if (entries.isEmpty) None
+    else Some(DedupIndex.live(spark, dir, entries, excludeDocs)
       .select(col("doc_id"), col("shingle"), col("n_sh")))
   }
 
@@ -204,19 +193,16 @@ object ShingleIndex {
   def contamination(spark: SparkSession, dir: String, epochId: Long,
                     evalIds: DataFrame): DataFrame = {
     val ids = evalIds.select(col("doc_id"))
-    // round-5 advice: drop epoch rows superseded by LATER re-signs —
-    // without this, a train doc re-signed after `epochId` reported
-    // both its stale and new sets in the union over epochs, diverging
-    // from batch dd10. Broadcast anti-join against the later entries'
-    // tiny resigned/ lists.
+    // the epoch's rows that are still live: a train doc re-signed after
+    // `epochId` reports only its latest set in the union over epochs,
+    // as in batch dd10. The live read over the epoch's entry and every
+    // later one drops rows the later resigned/ lists supersede; the
+    // `_sig_epoch` filter prunes the later entries' rows at the scan.
     val m = DedupIndex.loadManifest(dir)
-    val laterResigns = DedupIndex.resignedLists(spark, dir,
-      m.entries.filter(_.maxEpoch > epochId))
-    val epoch = DedupIndex.dropSuperseded(
-        DedupIndex.readSigs(spark, dir, Seq(epochId))
-          .filter(col("shingle").isNotNull),
-        spark.emptyDataFrame.select(lit(0L).as("doc_id")).limit(0),
-        laterResigns)
+    require(m.isCommitted(epochId), s"epoch $epochId is not committed at $dir")
+    val epoch = DedupIndex.live(spark, dir,
+        m.entries.filter(_.maxEpoch >= epochId))
+      .filter(col("_sig_epoch") === epochId)
       .select(col("doc_id"), col("shingle"))
       .join(broadcast(ids), Seq("doc_id"), "left_anti")
     val eval_ = liveRows(spark, dir, before = None, excludeDocs = None)

@@ -24,8 +24,7 @@ object SimHashIndex {
   def appendEpoch(spark: SparkSession, dir: String, epochId: Long,
                   docs: DataFrame): Boolean =
     DedupIndex.appendFrameWithMirrors(spark, dir, epochId,
-      DedupQueries.simhash(docs).withColumn("_sig_epoch", lit(epochId)),
-      keysAreDistinct = true)
+      DedupQueries.simhash(docs).withColumn("_sig_epoch", lit(epochId)))
 
   private def bucketed(sigs: DataFrame): DataFrame = {
     val bandCols = (0 until 4).map(b =>
@@ -55,10 +54,8 @@ object SimHashIndex {
     val all =
       if (priors.isEmpty) within
       else {
-        val priorLive = DedupIndex.dropSuperseded(
-          spark.read.parquet(priors.map(e => s"$dir/${e.path}"): _*),
-          newS.select(col("doc_id")),
-          DedupIndex.resignedLists(spark, dir, priors))
+        val priorLive = DedupIndex.live(spark, dir, priors,
+          Some(newS.select(col("doc_id"))))
         val cross = newB.as("x").join(bucketed(priorLive).as("y"),
             col("x.band") === col("y.band") && col("x.bkt") === col("y.bkt") &&
               col("x.doc_id") =!= col("y.doc_id"))

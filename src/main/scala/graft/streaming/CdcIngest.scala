@@ -135,7 +135,7 @@ object CdcIngest {
                 cl, epochId, graft.operators.DedupIndex.epochPairs(
                   batch.sparkSession, ix, epochId)
                   .select(col("doc_a"), col("doc_b")))
-              graft.operators.ClusterIndex.autoMaintain(batch.sparkSession, cl)
+              graft.operators.DedupIndex.autoMaintain(batch.sparkSession, cl)
             }
             // bound the index's own metadata as epochs accumulate —
             // same posture as the table's autoMaintain
@@ -145,7 +145,7 @@ object CdcIngest {
             val (docs, tombs) = docsAndTombs(live)
             graft.operators.MetricsIndex.appendEpoch(
               batch.sparkSession, mx, epochId, docs, Some(tombs))
-            graft.operators.MetricsIndex.autoMaintain(batch.sparkSession, mx)
+            graft.operators.DedupIndex.autoMaintain(batch.sparkSession, mx)
           }
         }
         ()

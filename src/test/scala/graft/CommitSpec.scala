@@ -56,6 +56,10 @@ class CommitSpec extends SparkSpec {
     }
   }
 
+  /** Centroid sets as stats versions (one vector each, sums unused). */
+  private def stats(cents: Seq[(Long, Array[Double])]) =
+    cents.map { case (cid, cv) => IvfCentroids.ListStat(cid, cv, 1L, Array(0L, 0L)) }
+
   private def meta(dir: String): Path = Paths.get(dir, "meta")
   private def rewindHint(dir: String, v: Long): Unit =
     Files.writeString(meta(dir).resolve("CURRENT"), s"v$v")
@@ -190,13 +194,13 @@ class CommitSpec extends SparkSpec {
     }
   }
 
-  test("IvfCentroids.persist: 3 writers x 2 retrains, every set committed exactly once") {
+  test("IvfCentroids.persistStats: 3 writers x 2 retrains, every set committed once") {
     val dir = tmpDir("race-ivf")
     def cents(t: Int, i: Int) = Seq((0L, Array(t.toDouble, i.toDouble)),
       (1L, Array(-t.toDouble, -i.toDouble)))
     val committed = new ConcurrentLinkedQueue[(Long, (Int, Int))]()
     val losses = race((0 until 3).map(t => (0 until 2).map(i => () => {
-      committed.add(IvfCentroids.persist(spark, dir, cents(t, i)) -> (t, i)); ()
+      committed.add(IvfCentroids.persistStats(spark, dir, stats(cents(t, i))) -> (t, i)); ()
     })))
     val byVersion = committed.asScala.toMap
     assert(byVersion.keySet === (1L to 6L).toSet) // one winner per version
@@ -278,12 +282,12 @@ class CommitSpec extends SparkSpec {
 
   test("lost hint: IvfCentroids keeps its newest set and commits at N+1") {
     val dir = tmpDir("hint-ivf")
-    def set(x: Double) = Seq((0L, Array(x, x)))
-    IvfCentroids.persist(spark, dir, set(1.0))
-    IvfCentroids.persist(spark, dir, set(2.0))
+    def set(x: Double) = stats(Seq((0L, Array(x, x))))
+    IvfCentroids.persistStats(spark, dir, set(1.0))
+    IvfCentroids.persistStats(spark, dir, set(2.0))
     rewindHint(dir, 1L)
     assert(IvfCentroids.load(spark, dir).head._2.toSeq === Seq(2.0, 2.0))
-    assert(IvfCentroids.persist(spark, dir, set(3.0)) === 3L)
+    assert(IvfCentroids.persistStats(spark, dir, set(3.0)) === 3L)
     dropHint(dir)
     assert(IvfCentroids.load(spark, dir).head._2.toSeq === Seq(3.0, 3.0))
   }

@@ -54,6 +54,28 @@ class IncrementalClusterSpec extends SparkSpec {
     assert(p2 === Set((2L, 3L)))
   }
 
+  test("shingle store sidecar: no key exchange, no persist, every doc_id in the filter") {
+    // the sidecar is sized from an approximate distinct count of the key
+    // column, so the shingle rows (many per doc) are never exchanged by
+    // doc_id nor cached to be counted exactly
+    val dir = tmpDir("dd14-bloom")
+    val vocab = (0 until 60).map(i => s"w$i")
+    val ids = 1L to 120L
+    val epoch = ids.map(d => (d, vocab.map(w => s"$w-${d % 5}").mkString(" ") +
+      s" doc$d")).toDF("doc_id", "text")
+    val plans = capturedPlans { ShingleIndex.appendEpoch(spark, dir, 0L, epoch) }
+    val all = plans.map(_.toString).mkString("\n===\n")
+    assert(plans.nonEmpty, "no executed plans captured")
+    assert(!all.contains("hashpartitioning(doc_id"),
+      s"the append must not exchange by doc_id:\n$all")
+    assert(!all.contains("InMemoryTableScan"), s"the append must not persist:\n$all")
+    val entry = DedupIndex.loadManifest(dir).entries.head.path
+    val bloom = java.nio.file.Paths.get(dir, entry.replaceFirst("^sigs/", "bloom/"))
+    val bf = scala.util.Using.resource(java.nio.file.Files.newInputStream(bloom))(
+      org.apache.spark.util.sketch.BloomFilter.readFrom)
+    assert(ids.forall(bf.mightContainLong), "the sidecar must hold every doc_id")
+  }
+
   test("cluster index: incremental fold equals from-scratch dd07 labels") {
     val shDir = tmpDir("dd13-sh")
     val clDir = tmpDir("dd13-cl")
@@ -124,7 +146,7 @@ class IncrementalClusterSpec extends SparkSpec {
     ClusterIndex.foldEpoch(spark, dir, 0L, Seq((1L, 2L)).toDF("a", "b"))
     ClusterIndex.foldEpoch(spark, dir, 1L, Seq((5L, 6L)).toDF("a", "b"))
     ClusterIndex.foldEpoch(spark, dir, 2L, Seq((3L, 4L)).toDF("a", "b"))
-    assert(DedupIndex.compact(spark, dir, keyCol = "node"))
+    assert(DedupIndex.compact(spark, dir))
     // 4 = the two folded sig dirs + their two Bloom sidecar FILES
     // (round-6: cluster entries ride appendFrameWithMirrors, so each
     // carries a node-keyed sidecar the compaction supersedes)

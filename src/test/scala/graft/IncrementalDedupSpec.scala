@@ -129,6 +129,27 @@ class IncrementalDedupSpec extends SparkSpec {
       "cosine must come from the latest vector")
   }
 
+  test("embedding index: autoMaintain needs no key argument and keeps the pairs") {
+    import graft.operators.EmbeddingIndex
+    val dir = tmpDir("dd11-auto")
+    val vecs = graft.analytics.Tables.embeddings(spark, sf)
+    (0 to 3).foreach { e =>
+      EmbeddingIndex.appendEpoch(spark, dir, e.toLong,
+        vecs.filter(pmod(col("vec_id"), lit(4)) === e))
+    }
+    def ps = EmbeddingIndex.epochPairs(spark, dir, 3L, 0.3).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val before = ps
+    assert(before.nonEmpty)
+    // the key (vec_id) comes from the stored frames
+    val (compacted, _) = DedupIndex.autoMaintain(spark, dir, maxEntries = 2,
+      vacuumGraceMs = 0L)
+    assert(compacted)
+    assert(DedupIndex.loadManifest(dir).entries.size <= 2)
+    assert(ps === before)
+    graft.analytics.SessionCaches.release(spark)
+  }
+
   test("autoMaintain bounds the entry count over many appended epochs") {
     import org.apache.spark.sql.functions._
     val dir = tmpDir("dd08-auto")

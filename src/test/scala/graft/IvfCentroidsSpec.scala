@@ -20,7 +20,7 @@ class IvfCentroidsSpec extends SparkSpec {
 
   test("epoch-assign against persisted centroids equals batch assignment") {
     val dir = tmpDir("ivf-cents")
-    IvfCentroids.train(spark, dir, sf, kCentroids = 8, iters = 2)
+    IvfCentroids.trainWithStats(spark, dir, embVecs, kCentroids = 8, iters = 2)
     // three arriving epochs, assigned WITHOUT retraining
     val eps = (0 to 2).map(e =>
       IvfCentroids.assignEpoch(spark, dir, embVecs.filter(pmod(col("vec_id"), lit(3)) === e)))
@@ -35,18 +35,18 @@ class IvfCentroidsSpec extends SparkSpec {
 
   test("retrain swaps atomically; expire bounds version history") {
     val dir = tmpDir("ivf-retrain")
-    val c1 = IvfCentroids.train(spark, dir, sf, 8, 1)
+    val c1 = IvfCentroids.trainWithStats(spark, dir, embVecs, 8, 1)
     val loaded1 = IvfCentroids.load(spark, dir)
-    assert(loaded1.map(_._1) === c1.map(_._1))
+    assert(loaded1.map(_._1) === c1.map(_.cid))
     // retrain with more refinement: CURRENT moves to the new set
-    val c2 = IvfCentroids.train(spark, dir, sf, 8, 2)
+    val c2 = IvfCentroids.trainWithStats(spark, dir, embVecs, 8, 2)
     val loaded2 = IvfCentroids.load(spark, dir)
-    assert(loaded2.zip(c2).forall { case ((i1, v1), (i2, v2)) =>
-      i1 == i2 && v1.sameElements(v2) })
+    assert(loaded2.zip(c2).forall { case ((i1, v1), s) =>
+      i1 == s.cid && v1.sameElements(s.cv) })
     assert(loaded2.zip(loaded1).exists { case ((_, v1), (_, v2)) =>
       !v1.sameElements(v2) }, "extra Lloyd iteration must move centroids")
     // a third version, then expire to the newest 1: older files go
-    IvfCentroids.train(spark, dir, sf, 8, 0)
+    IvfCentroids.trainWithStats(spark, dir, embVecs, 8, 1)
     assert(IvfCentroids.expire(dir, keepLast = 1) === 2)
     assert(IvfCentroids.load(spark, dir).nonEmpty)
     graft.analytics.SessionCaches.release(spark)
@@ -88,18 +88,9 @@ class IvfCentroidsSpec extends SparkSpec {
     graft.analytics.SessionCaches.release(spark)
   }
 
-  test("loadStats refuses a stats-free centroid version") {
-    val dir = tmpDir("ivf-nostats")
-    IvfCentroids.train(spark, dir, sf, 8, 1)
-    val e = intercept[Exception] { IvfCentroids.loadStats(spark, dir) }
-    assert(e.getMessage.contains("trainWithStats"),
-      s"must fail loud with guidance, got: ${e.getMessage}")
-    graft.analytics.SessionCaches.release(spark)
-  }
-
   test("assignEpoch is a pure projection: no keyed shuffle, no join") {
     val dir = tmpDir("ivf-plan")
-    IvfCentroids.train(spark, dir, sf, 8, 1)
+    IvfCentroids.trainWithStats(spark, dir, embVecs, 8, 1)
     val plan = IvfCentroids.assignEpoch(spark, dir, embVecs)
       .queryExecution.executedPlan.toString
     // the assign itself adds no exchange; the input frame may carry the

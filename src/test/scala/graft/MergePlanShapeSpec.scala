@@ -1,14 +1,15 @@
 package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
-import org.apache.spark.sql.util.QueryExecutionListener
 import graft.operators.MergeInto
 import graft.table.{FileEntry, LakeTable, Maintenance}
 
@@ -29,34 +30,6 @@ import graft.table.{FileEntry, LakeTable, Maintenance}
   */
 class MergePlanShapeSpec extends SparkSpec {
   import spark.implicits._
-
-  private def capturedPlans(work: => Unit): Seq[SparkPlan] = {
-    val plans = new ConcurrentLinkedQueue[SparkPlan]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-                             durationNs: Long): Unit =
-        plans.add(qe.executedPlan)
-      override def onFailure(funcName: String, qe: QueryExecution,
-                             exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      work
-      // the listener bus is async: wait until the captured set quiesces
-      // (no growth for 1 s) — a fixed post-first-event sleep can miss the
-      // write-job plans on a loaded host
-      val deadline = System.nanoTime() + 30000000000L
-      var last = -1
-      var stableSince = System.nanoTime()
-      while (System.nanoTime() < deadline &&
-             (plans.isEmpty || System.nanoTime() - stableSince < 1000000000L)) {
-        Thread.sleep(50)
-        if (plans.size != last) { last = plans.size; stableSince = System.nanoTime() }
-      }
-    } finally spark.listenerManager.unregister(listener)
-    import scala.jdk.CollectionConverters._
-    plans.asScala.toSeq
-  }
 
   private def batch(n: Int, urls: Int) =
     spark.range(n).select(
@@ -217,6 +190,55 @@ class MergePlanShapeSpec extends SparkSpec {
     assertMergeShape(plans, "CoW")
     assertPayloadExchanges(plans, "CoW")
     assertTargetScans(plans, target, 1, "CoW")
+  }
+
+  test("winner filter: one partial Bloom aggregate task over a many-partition key aggregate") {
+    // every partial buffer of Spark's Bloom-filter aggregate has the full
+    // filter size, so the filter's shuffle carries one full-size filter
+    // per task of its partial stage: that stage must be one task however
+    // many partitions the cached key aggregate has
+    val dir = tmpDir("mps-bloom") + "/t"
+    LakeTable.create(dir, numBuckets = 8)
+    // stages are told apart by their SQL execution: the filter's is the
+    // one whose plan holds the Bloom-filter aggregate
+    val bloomExecs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val stageExec = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val stages = new ConcurrentLinkedQueue[(Int, String, Int)]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart
+            if s.physicalPlanDescription.contains("bloom_filter_agg") =>
+          bloomExecs.add(s.executionId.toString); ()
+        case _ => ()
+      }
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .foreach(id => j.stageIds.foreach(stageExec.put(_, id)))
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        stages.add((e.stageInfo.stageId, e.stageInfo.name, e.stageInfo.numTasks))
+    }
+    // AQE would coalesce the small key aggregate to one partition
+    val coalesceConf = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(coalesceConf, "false")
+    spark.sparkContext.addSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    def filterStages = stages.asScala.toSeq
+      .filter(s => Option(stageExec.get(s._1)).exists(bloomExecs.contains))
+    try {
+      MergeInto.merge(spark, dir, batch(4000, 300), 0L)
+      val deadline = System.nanoTime() + 30000000000L
+      while (filterStages.size < 2 && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.conf.unset(coalesceConf)
+    }
+    val all = stages.asScala.toSeq
+    // the stats collect reads the cached key aggregate: ≥ 2 partitions
+    assert(all.exists { case (_, n, t) => n.startsWith("collect at MergeInto") && t >= 2 },
+      s"the key aggregate must span several partitions: $all")
+    assert(filterStages.nonEmpty, s"no Bloom filter stages seen: $all")
+    assert(filterStages.forall(_._3 == 1),
+      s"the winner filter's stages must run one task each: $filterStages")
   }
 
   test("MoR epoch: winner selection stays the lww_seq HashAggregate") {

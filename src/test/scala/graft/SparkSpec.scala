@@ -1,6 +1,9 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM; sbt forks once). */
@@ -25,4 +28,33 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** The executed plans of every query `work` runs. */
+  protected def capturedPlans(work: => Unit): Seq[SparkPlan] = {
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      work
+      // the listener bus is async: wait until the captured set quiesces
+      // (no growth for 1 s) — a fixed post-first-event sleep can miss the
+      // write-job plans on a loaded host
+      val deadline = System.nanoTime() + 30000000000L
+      var last = -1
+      var stableSince = System.nanoTime()
+      while (System.nanoTime() < deadline &&
+             (plans.isEmpty || System.nanoTime() - stableSince < 1000000000L)) {
+        Thread.sleep(50)
+        if (plans.size != last) { last = plans.size; stableSince = System.nanoTime() }
+      }
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    plans.asScala.toSeq
+  }
 }
