@@ -17,8 +17,8 @@ import graft.analytics.DocMetrics
   *
   * Storage is the SHARED manifest layer in [[DedupIndex]]
   * (appendFrameWithMirrors / readSigs / compact / autoMaintain, keyed
-  * on the frame's first column, doc_id): snapshot-committed epoch dirs, exactly-once under
-  * redelivery, latest-per-doc supersession for updated urls, all-null
+  * on the frame's first column, doc_id): snapshot-committed epoch
+  * dirs, exactly-once under redelivery, latest-per-doc supersession for updated urls, all-null
   * tombstones for deletes (compaction drops them physically). One
   * commit protocol, now four maintained modalities (minhash / simhash /
   * embedding signatures, and these scalar metrics).
