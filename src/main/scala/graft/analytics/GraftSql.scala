@@ -1,6 +1,7 @@
 package graft.analytics
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 import graft.table.LakeTable
 
 /** The `spark.sql(...)` surface: temp views over the testdata star
@@ -50,11 +51,6 @@ object GraftSql {
   def releaseQueryScope(spark: SparkSession): Unit =
     SessionCaches.releaseAnonymous(spark)
 
-  /** Alias of [[release]] (kept for callers that adopted the round-4
-    * name).
-    */
-  def releaseAll(spark: SparkSession): Unit = SessionCaches.release(spark)
-
   /** Register every testdata table under its own name. */
   def registerTestdata(spark: SparkSession, sfDir: String): Unit = {
     registerFunctions(spark)
@@ -65,17 +61,18 @@ object GraftSql {
   /** Register a lake table's views: `<name>_live` (latest state),
     * `<name>_raw` (merged rows incl. tombstones), `<name>_epochs` (the
     * per-epoch ingest metrics ledger — the reference's queryable
-    * etl_runs). Views capture the CURRENT snapshot at registration time
-    * (snapshot isolation — re-run to see later commits).
+    * etl_runs). All three views come from ONE snapshot, the current one
+    * at registration time (snapshot isolation — re-run to see later
+    * commits).
     */
   def registerLake(spark: SparkSession, tableDir: String,
                    name: String = "lake"): Unit = {
     registerFunctions(spark)
-    LakeTable.readLive(spark, tableDir).createOrReplaceTempView(s"${name}_live")
     val snap = LakeTable.load(tableDir)
-    LakeTable.readMerged(spark, tableDir, snap)
-      .createOrReplaceTempView(s"${name}_raw")
-    LakeTable.epochStats(spark, tableDir)
-      .createOrReplaceTempView(s"${name}_epochs")
+    val raw = LakeTable.readMerged(spark, tableDir, snap)
+    raw.createOrReplaceTempView(s"${name}_raw")
+    raw.filter(!col("tombstone")).drop("tombstone")
+      .createOrReplaceTempView(s"${name}_live")
+    spark.createDataFrame(snap.epochStats).createOrReplaceTempView(s"${name}_epochs")
   }
 }

@@ -34,10 +34,11 @@ import graft.table.{EpochStat, LakeTable, Snapshot}
   *      carries the payload, about one row per url, and its row_number
   *      window is the exact LWW collapse.
   * An 8 k-event copy-on-write tail epoch (perfbench `ingest_bulk
-  * --trace 1`, local[4]) runs 10 Spark jobs and 20 stages: AQE splits
-  * step 1 into 4 jobs, the filter aggregate into 2, the write into 3
-  * (payload shuffle, cache build, file write) and the stats aggregate 1 —
-  * it reads the bucket-partitioned cache with no exchange.
+  * --trace 1`, local[4]) runs 9 Spark jobs and 16 stages: AQE splits
+  * step 1 into 4 jobs, the filter aggregate is 1, the write 2 (payload
+  * shuffle, file write) and the per-file stats aggregate over the
+  * written files' narrow columns 2 (its exchange on the file path, a
+  * few rows per file, and the collect).
   * Old live/tombstone accounting comes from manifest file stats — no
   * rescan of the target. Only the url-hash buckets the batch touches are
   * read and rewritten, each touched file scanned once: a batch touching

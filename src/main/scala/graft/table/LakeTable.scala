@@ -167,42 +167,41 @@ object LakeTable {
     else spark.read.schema(CdcSchema.tableSchema)
       .parquet(files.map(f => s"$dir/${f.path}"): _*)
 
-  /** The physical write that produced a file: its
-    * `data/s{N}-{token}[-delta]` dir (one copy-on-write rewrite or one
-    * merge-on-read epoch), ordered by its snapshot id N.
+  /** A delta file's path, `…/data/s{N}-{token}-delta/bucket={b}/part-…`,
+    * with its write's snapshot id N as group 1.
     */
-  private def writeDirOf(f: FileEntry): String = f.path.split('/')(1)
-  private def writeOrd(g: String): Long = g.drop(1).takeWhile(_.isDigit).toLong
+  private val DeltaPath = "/s([0-9]+)-[^/]+-delta/bucket=[^/]+/[^/]+$"
 
-  /** Read `files` with a `_gen` column that makes `(url, seq, _gen)`
-    * UNIQUE — the disambiguator for byte-identical duplicate rows.
+  /** Read `files` in one scan with a `_gen` column that makes
+    * `(url, seq, _gen)` UNIQUE — the disambiguator for byte-identical
+    * duplicate rows.
     *
     * Why duplicates exist at all: the feed is at-least-once, so the same
     * event (same url, same seq, identical payload) can be redelivered in
     * a later epoch and be that epoch's per-url LWW winner again — landing
     * a second physical copy in a different write (a delta overlay, or a
     * batch winner colliding with the stored row on the copy-on-write
-    * path). A collapse or join-back keyed on (url, seq) alone cannot tell
-    * the copies apart. (url, seq) is unique *within* one write — every write is
+    * path). A collapse keyed on (url, seq) alone cannot tell the copies
+    * apart. (url, seq) is unique *within* one write — every write is
     * per-url deduped — so tagging rows by write restores a unique key.
     *
-    * Generations: all base files share gen 0 (each bucket has exactly one
-    * base file and urls never span buckets, so base rows are jointly
-    * per-url unique); each delta write gets its own gen in snapshot
-    * order. [[lwwCollapse]] ranks `_gen` after seq, so for the
-    * byte-identical copies of one event (equal warc_ts, equal seq) the
-    * newest write deterministically wins. Returns (rows, genCount).
+    * Generations come from each row's file path (`_metadata.file_path`):
+    * a delta file's gen is the snapshot id N of its `s{N}-…-delta` dir,
+    * a base file's is 0. Base rows are jointly per-url unique (one base
+    * file per bucket, urls never span buckets), and every delta of a
+    * bucket is newer than its base, which a copy-on-write rewrite or a
+    * compaction folds them into. [[lwwCollapse]] ranks `_gen` after seq,
+    * so for the byte-identical copies of one event the newest write
+    * deterministically wins.
     */
   private[graft] def readTagged(spark: SparkSession, dir: String,
-                                files: Seq[FileEntry]): (DataFrame, Int) = {
-    val (delta, base) = files.partition(_.kind == "delta")
-    val deltaGens = delta.map(writeDirOf).distinct.sortBy(writeOrd)
-    val baseDf = readFiles(spark, dir, base).withColumn("_gen", lit(0))
-    val df = deltaGens.zipWithIndex.foldLeft(baseDf) { case (acc, (g, i)) =>
-      acc.unionByName(readFiles(spark, dir, delta.filter(writeDirOf(_) == g))
-        .withColumn("_gen", lit(i + 1)))
-    }
-    (df, deltaGens.size + 1)
+                                files: Seq[FileEntry]): DataFrame = {
+    val path = col("_metadata.file_path")
+    // a regexp_extract miss is "", which an ANSI cast to long rejects
+    val gen = if (files.isEmpty) lit(0L)
+      else when(path.rlike(DeltaPath), regexp_extract(path, DeltaPath, 1).cast("long"))
+        .otherwise(lit(0L))
+    readFiles(spark, dir, files).withColumn("_gen", gen)
   }
 
   /** The engine's one last-writer-wins collapse: each url keeps its max
@@ -249,7 +248,7 @@ object LakeTable {
     if (dirtyBuckets.isEmpty) return readFiles(spark, dir, sel)
     val (dirty, clean) = sel.partition(f => dirtyBuckets.contains(f.bucket))
     readFiles(spark, dir, clean)
-      .unionByName(lwwCollapse(readTagged(spark, dir, dirty)._1).drop("_gen"))
+      .unionByName(lwwCollapse(readTagged(spark, dir, dirty)).drop("_gen"))
   }
 
   /** The user-facing latest-state view: live rows only (delta overlays
@@ -275,12 +274,8 @@ object LakeTable {
                       fromMs: Long, toMs: Long): DataFrame = {
     val snap = load(dir)
     val dirtyBuckets = snap.files.filter(_.kind == "delta").map(_.bucket).toSet
-    // manifest ts stats are second-truncated (cast long): stored min ≤
-    // true min always, but stored max can undershoot by up to 999 ms —
-    // widen the max bound so pruning stays conservative
     val keep = snap.files.filter(f =>
-      dirtyBuckets.contains(f.bucket) ||
-        (f.minTsMs <= toMs && f.maxTsMs + 999L >= fromMs))
+      dirtyBuckets.contains(f.bucket) || (f.minTsMs <= toMs && f.maxTsMs >= fromMs))
     readMerged(spark, dir, snap.copy(files = keep))
       .filter(!col("tombstone") &&
         unix_millis(col("warc_ts")) >= fromMs &&
@@ -305,8 +300,9 @@ object LakeTable {
     * of the buckets being rewritten, read as write generations
     * ([[readTagged]]) and bucketed in a `numBuckets` layout, plus `newest`
     * (tableSchema + `bucket`: a merge epoch's candidates; compaction and
-    * rebucketing pass none) as the newest generation, collapsed and
-    * written by [[writeBuckets]] — each file scanned once, one exchange.
+    * rebucketing pass none) as the newest generation, `snapId`, above
+    * every stored one, collapsed and written by [[writeBuckets]] — the
+    * files read in one scan, one exchange.
     */
   private[graft] def rewriteBuckets(spark: SparkSession, dir: String, snapId: Long,
                                     files: Seq[FileEntry], numBuckets: Int,
@@ -314,32 +310,32 @@ object LakeTable {
                                     newest: Option[DataFrame] = None,
                                     tombstoneHorizonMs: Long = Long.MinValue)
       : List[FileEntry] = {
-    val (stored, nGens) = readTagged(spark, dir, files)
-    val tagged = stored
+    val stored = readTagged(spark, dir, files)
       .withColumn("bucket", pmod(col("url_hash"), lit(numBuckets)).cast("int"))
-    val rows = newest.fold(tagged)(n => tagged.unionByName(n.withColumn("_gen", lit(nGens))))
+    val rows = newest.fold(stored)(n => stored.unionByName(n.withColumn("_gen", lit(snapId))))
     writeBuckets(spark, dir, snapId, rows, touched,
       tombstoneHorizonMs = tombstoneHorizonMs)
   }
 
   /** LWW-collapse `rows` and write the result as the touched buckets of
     * snapshot `snapId`, into a data dir of this attempt's own (a fresh
-    * [[Commit.token]], written once); returns manifest entries with
-    * per-bucket pruning + accounting stats. The engine's single
-    * "collapse and write" step: `rows` (tableSchema + a `bucket` column,
-    * optionally a `_gen` write generation) may hold several rows per url
-    * — the stored files of a bucket rewrite ([[rewriteBuckets]]) beside
-    * a batch's candidate rows, or redelivered copies of one event — and
-    * [[lwwCollapse]] keeps one. Tombstone winners whose warc_ts predates
-    * `tombstoneHorizonMs` are dropped AFTER the collapse: dropping an
-    * expired tombstone first would resurrect the older row it shadows.
+    * [[Commit.token]], written once); returns one manifest entry per
+    * written file. The engine's single "collapse and write" step: `rows`
+    * (tableSchema + a `bucket` column, optionally a `_gen` write
+    * generation) may hold several rows per url — the stored files of a
+    * bucket rewrite ([[rewriteBuckets]]) beside a batch's candidate rows,
+    * or redelivered copies of one event — and [[lwwCollapse]] keeps one.
+    * Tombstone winners whose warc_ts predates `tombstoneHorizonMs` are
+    * dropped AFTER the collapse: dropping an expired tombstone first
+    * would resurrect the older row it shadows.
     *
-    * Plan: ONE exchange, the repartition-by-bucket (one output file per
-    * bucket; at 100 TB each bucket is itself a directory of many files,
-    * the entry granularity stays per-file). It satisfies the collapse's
-    * window, which adds no exchange, and the window's sort is the
-    * (url_hash, url) file order. The collapsed result is persisted and
-    * feeds two jobs: the write and one per-bucket stats aggregate.
+    * Plan: ONE payload exchange, the repartition-by-bucket (one output
+    * file per bucket). It satisfies the collapse's window, which adds no
+    * exchange, and the window's sort is the (url_hash, url) file order.
+    * Each entry's stats (row and live counts, seq and millisecond
+    * warc_ts ranges) come from one aggregate over the written files'
+    * narrow columns, grouped by file: exact per file, with no cache of
+    * the collapsed payload.
     */
   private[graft] def writeBuckets(spark: SparkSession, dir: String, snapId: Long,
                                   rows: DataFrame, touched: Seq[Int],
@@ -347,37 +343,25 @@ object LakeTable {
                                   tombstoneHorizonMs: Long = Long.MinValue)
       : List[FileEntry] = {
     if (touched.isEmpty) return Nil
-    val rel = s"data/s$snapId-${Commit.token()}$suffix"
-    val out = s"$dir/$rel"
+    val out = s"$dir/data/s$snapId-${Commit.token()}$suffix"
     val winners = lwwCollapse(rows.repartition(touched.size, col("bucket")))
-    val collapsed = (if (tombstoneHorizonMs == Long.MinValue) winners
+    (if (tombstoneHorizonMs == Long.MinValue) winners
       else winners.filter(!col("tombstone") ||
-        col("warc_ts").cast("long") * 1000L >= tombstoneHorizonMs))
+        unix_millis(col("warc_ts")) >= tombstoneHorizonMs))
       .select((CdcSchema.tableSchema.fieldNames :+ "bucket").map(col).toIndexedSeq: _*)
-    collapsed.persist()
-    try {
-      collapsed.write.partitionBy("bucket").parquet(out)
-      // per-bucket stats: pruning ranges + live/tombstone accounting (the
-      // manifest carries them so later merges never rescan for them)
-      val stats = collapsed.groupBy(col("bucket")).agg(
-        count(lit(1)).as("rows"),
-        sum(when(col("tombstone"), 0L).otherwise(1L)).as("live"),
-        min(col("seq")).as("minSeq"), max(col("seq")).as("maxSeq"),
-        min(col("warc_ts")).cast("long").as("minTs"),
-        max(col("warc_ts")).cast("long").as("maxTs"))
-        .collect()
-        .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
-          r.getLong(4), r.getLong(5) * 1000L, r.getLong(6) * 1000L)).toMap
-      val base = Paths.get(out)
-      graft.FsUtil.walkDir(base)(_
-        .filter(p => p.getFileName.toString.endsWith(".parquet"))
-        .map { p =>
-          val relPath = Paths.get(dir).relativize(p).toString
-          val bucket = p.getParent.getFileName.toString.stripPrefix("bucket=").toInt
-          val (n, live, mnS, mxS, mnT, mxT) =
-            stats.getOrElse(bucket, (0L, 0L, 0L, 0L, 0L, 0L))
-          FileEntry(relPath, bucket, n, live, n - live, mnS, mxS, mnT, mxT, kind)
-        }.toList)
-    } finally collapsed.unpersist()
+      .write.partitionBy("bucket").parquet(out)
+    val root = Paths.get(dir).toAbsolutePath
+    spark.read.schema(CdcSchema.tableSchema).parquet(out)
+      .groupBy(col("_metadata.file_path")).agg(
+        count(lit(1)), sum(when(col("tombstone"), 0L).otherwise(1L)),
+        min(col("seq")), max(col("seq")),
+        min(unix_millis(col("warc_ts"))), max(unix_millis(col("warc_ts"))))
+      .collect().map { r =>
+        val file = Paths.get(new java.net.URI(r.getString(0)))
+        val bucket = file.getParent.getFileName.toString.stripPrefix("bucket=").toInt
+        val (n, live) = (r.getLong(1), r.getLong(2))
+        FileEntry(root.relativize(file).toString, bucket, n, live, n - live,
+          r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6), kind)
+      }.toList
   }
 }

@@ -105,6 +105,27 @@ class ChangelogSpec extends SparkSpec {
     assert(Changelog.changesSince(spark, dir, snaps.last).count() === 0L)
   }
 
+  test("file ts stats are the exact millisecond extremes of each file's rows") {
+    import graft.model.CdcSchema
+    val dir = tmpDir("ts-ms") + "/t"
+    LakeTable.create(dir, numBuckets = 4)
+    val cols = CdcSchema.latest.fieldNames
+    val evs = (0 until 16).map(i => (i.toLong, "U", s"https://ms$i/x",
+      new java.sql.Timestamp(1700000000000L + i * 1237L + 999L), null: Array[Byte],
+      s"t$i", "en", null.asInstanceOf[java.lang.Double]))
+    MergeInto.merge(spark, dir, evs.toDF(cols: _*), 0L, MergeInto.CopyOnWrite)
+    MergeInto.merge(spark, dir, evs.take(5).map(e => e.copy(_1 = e._1 + 100L,
+      _4 = new java.sql.Timestamp(e._4.getTime + 1L))).toDF(cols: _*), 1L,
+      MergeInto.MergeOnRead)
+    val files = LakeTable.load(dir).files
+    assert(files.exists(_.kind == "delta"))
+    files.foreach { f =>
+      val r = spark.read.parquet(s"$dir/${f.path}")
+        .agg(min(unix_millis($"warc_ts")), max(unix_millis($"warc_ts"))).head
+      assert((f.minTsMs, f.maxTsMs) === ((r.getLong(0), r.getLong(1))), s"${f.path}")
+    }
+  }
+
   test("time-range live read prunes files by manifest ts stats, result identical") {
     import graft.model.CdcSchema
     import graft.operators.MergeInto

@@ -67,6 +67,22 @@ class DupRedeliverySpec extends SparkSpec {
     MergeInto.merge(spark, dir, df(ev(5, "U", 5000L, "v5")), 1L, MergeInto.MergeOnRead)
     assert(LakeTable.load(dir).files.count(_.kind == "delta") === 2)
     assert(liveUrls(dir) === Map("https://dup.example.com/x" -> 1L))
+
+    // non-contiguous generations: a copy-on-write epoch on another bucket
+    // between the two delta epochs puts the copies at snapshots N and N+2
+    val gap = tmpDir("dup-dd-gap")
+    LakeTable.create(gap, numBuckets = 4)
+    val dupBucket = Seq("https://dup.example.com/x").toDF("url")
+      .select(LakeTable.bucketOf($"url", 4)).head.getInt(0)
+    val other = (0 until 64).map(i => s"https://other.example.com/$i").find(u =>
+      Seq(u).toDF("url").select(LakeTable.bucketOf($"url", 4)).head.getInt(0) != dupBucket).get
+    MergeInto.merge(spark, gap, df(ev(5, "U", 5000L, "v5")), 0L, MergeInto.MergeOnRead)
+    MergeInto.merge(spark, gap, df(ev(6, "U", 6000L, "v6", other)), 1L, MergeInto.CopyOnWrite)
+    MergeInto.merge(spark, gap, df(ev(5, "U", 5000L, "v5")), 2L, MergeInto.MergeOnRead)
+    val deltaSnaps = LakeTable.load(gap).files.filter(_.kind == "delta")
+      .map(_.path.split('/')(1).drop(1).takeWhile(_.isDigit).toLong).sorted
+    assert(deltaSnaps === List(1L, 3L))
+    assert(liveUrls(gap) === Map("https://dup.example.com/x" -> 1L, other -> 1L))
   }
 
   test("duplicate does not disturb LWW against a newer event") {

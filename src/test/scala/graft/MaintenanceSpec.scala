@@ -71,6 +71,30 @@ class MaintenanceSpec extends SparkSpec {
     assert(LakeTable.readLive(spark, dir).filter($"url" === "https://a/2").count() === 0L)
   }
 
+  test("tombstone expiry compares milliseconds: a tombstone 500 ms past the horizon survives") {
+    val dir = tmpDir("maint-ms") + "/t"
+    LakeTable.create(dir, numBuckets = 1)
+    def ev(seq: Long, op: String, url: String, ts: Long) =
+      (seq, op, url, new java.sql.Timestamp(ts), null: Array[Byte],
+        if (op == "D") null else s"t$seq", "en", null.asInstanceOf[java.lang.Double])
+    val cols = graft.model.CdcSchema.latest.fieldNames
+    // the horizon sits 200 ms past a whole second; the kept tombstone is
+    // 500 ms newer than it, inside the same second
+    val horizon = 5000200L
+    MergeInto.merge(spark, dir, Seq(
+      ev(1, "D", "https://a/old", 1000L),               // expired
+      ev(2, "D", "https://a/new", horizon + 500L)).toDF(cols: _*), 0L)
+    Maintenance.compact(spark, dir, tombstoneHorizonMs = horizon)
+    val snap = LakeTable.load(dir)
+    assert(snap.tombstones === 1L)
+    assert(LakeTable.readMerged(spark, dir, snap).filter($"tombstone")
+      .select($"url").as[String].collect() === Array("https://a/new"))
+    // and it still guards against a late update older than the delete
+    MergeInto.merge(spark, dir,
+      Seq(ev(0, "U", "https://a/new", horizon + 100L)).toDF(cols: _*), 1L)
+    assert(LakeTable.readLive(spark, dir).filter($"url" === "https://a/new").count() === 0L)
+  }
+
   test("autoMaintain: compacts only past the delta threshold; vacuums orphans") {
     val dir = tmpDir("maint-auto") + "/t"
     LakeTable.create(dir, numBuckets = 4)

@@ -123,8 +123,8 @@ class MergePlanShapeSpec extends SparkSpec {
   test("column pruning survives the merged read: narrow projections never scan the payload") {
     // a reader selecting (url, lang) off the live table must not scan
     // html/text — at web scale the payload is ~95% of the bytes, and the
-    // two-phase collapse (narrow key pass + join-back) exists precisely
-    // so projections reach the parquet scans
+    // merged read's collapse is a window over the scanned rows (no
+    // aggregate, no cache), so projections reach the parquet scans
     val dir = tmpDir("mps-prune") + "/t"
     LakeTable.create(dir, numBuckets = 8)
     MergeInto.merge(spark, dir, batch(2000, 200), 0L)
@@ -142,7 +142,9 @@ class MergePlanShapeSpec extends SparkSpec {
   test("merged read over delta files: one exchange, no join, each dirty file scanned once") {
     // readMerged resolves the delta-carrying buckets with the write's own
     // LWW window — one exchange over the dirty rows and no join-back, so
-    // no file is scanned twice; clean buckets stream through unshuffled
+    // no file is scanned twice; the dirty files (a base and two delta
+    // write generations) are one scan, each row's generation read from
+    // its file path; clean buckets stream through unshuffled
     val dir = tmpDir("mps-read") + "/t"
     LakeTable.create(dir, numBuckets = 8)
     MergeInto.merge(spark, dir, batch(2000, 200), 0L)
@@ -158,6 +160,11 @@ class MergePlanShapeSpec extends SparkSpec {
     val joins = nodes.collect { case j: BaseJoinExec => j }
     assert(joins.isEmpty, s"unexpected joins in the merged read: $joins")
     assertTargetScans(plans, snap.files, 1, "readMerged")
+    val dirty = snap.files.filter(f => dirtyBuckets(f.bucket)).map(_.path)
+    assert(dirty.size >= 3, s"expected a base and two delta generations: $dirty")
+    val dirtyScans = nodes.collect { case s: FileSourceScanExec
+      if s.relation.location.inputFiles.exists(p => dirty.exists(p.endsWith)) => s }
+    assert(dirtyScans.size === 1, s"the dirty files took ${dirtyScans.size} scans")
   }
 
   test("compaction: one payload exchange, dirty buckets' files scanned once, clean ones never") {
@@ -191,6 +198,27 @@ class MergePlanShapeSpec extends SparkSpec {
     assertMergeShape(plans, "CoW")
     assertPayloadExchanges(plans, "CoW")
     assertTargetScans(plans, target, 1, "CoW")
+  }
+
+  test("CoW and MoR epochs cache no payload: file stats come from the written files") {
+    // the bucket write's per-file stats are one narrow aggregate over the
+    // files it wrote, so no epoch plan reads a cached relation carrying
+    // html/text, and an epoch leaves nothing cached behind it
+    val dir = tmpDir("mps-nocache") + "/t"
+    LakeTable.create(dir, numBuckets = 8)
+    MergeInto.merge(spark, dir, batch(4000, 300), 0L)
+    // a cached Dataset the epoch leaves behind keeps its persisted RDD
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    Seq((MergeInto.CopyOnWrite, 1L), (MergeInto.MergeOnRead, 2L)).foreach { case (mode, e) =>
+      val cachedBefore = persisted
+      val plans = capturedPlans { MergeInto.merge(spark, dir, batch(500, 300), e, mode) }
+      val payloadCaches = epochNodes(plans).collect {
+        case m: InMemoryTableScanExec
+            if m.relation.output.exists(a => isPayload(a.name, a.dataType)) => m
+      }
+      assert(payloadCaches.isEmpty, s"$mode: cached payload scans $payloadCaches")
+      assert((persisted -- cachedBefore).isEmpty, s"$mode: the epoch left a cache behind")
+    }
   }
 
   test("winner filter: one partial Bloom aggregate task over a many-partition key aggregate") {
